@@ -267,7 +267,6 @@ def run_training_assembly(
     """
     from .queries_train import _MIX, _MIX_DEFAULT, tokens
     from .queries_text import curated_docs_v2
-    from .versioned import write_versioned
 
     res = AssemblyResult()
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -323,25 +322,17 @@ def run_training_assembly(
         ),
     )
 
-    # pre-commit row count observed on the commit's own write pass;
-    # the non-empty gate runs INSIDE the commit protocol (post-write,
-    # pre-publish), so a 0-row assembly never becomes the latest version
-    from pyspark.sql import Observation
-
-    obs = Observation("training_set_commit")
-    res.version = write_versioned(
-        packed.observe(obs, F.count(F.lit(1)).alias("n_rows")),
+    # row count observed on the commit's own write pass; the non-empty
+    # gate runs INSIDE the commit protocol (post-write, pre-publish), so
+    # a 0-row assembly never becomes the latest version
+    w = quality.write_with_observed_gates(
+        packed,
         f"{out_dir}/training_set",
+        layer="assembly.training_set",
         partition_by=["split"],
-        validate=lambda: quality.assert_row_count_nonzero(
-            int(obs.get["n_rows"]), "assembly.training_set"
-        ),
+        versioned=True,
     )
-    n_assembled = int(obs.get["n_rows"])
-
-    from .versioned import read_versioned
-
-    committed = read_versioned(spark, f"{out_dir}/training_set", res.version)
+    res.version, n_assembled, committed = w["version"], w["n_rows"], w["table"]
     res.split_counts = {
         r["split"]: r["n"]
         for r in committed.groupBy("split")

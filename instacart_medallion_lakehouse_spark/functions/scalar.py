@@ -57,11 +57,6 @@ def case_chain(pairs: list[tuple[Column, str]], default: str) -> Column:
     return expr.otherwise(default)
 
 
-def safe_div(num: Column, den: Column) -> Column:
-    """F6: division with nullif(0) divide-by-zero guard (03_gold_metrics.py:120)."""
-    return num.cast("double") / F.nullif(den, F.lit(0)).cast("double")
-
-
 def customer_segment(total_orders: Column) -> Column:
     """3-way segmentation case chain (reference dim_users segments,
     03_gold_metrics.py:138-146 transposed to testdata order volumes)."""

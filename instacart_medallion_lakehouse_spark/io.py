@@ -350,12 +350,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def register_temp_views(spark: SparkSession, tables: dict[str, DataFrame]) -> None:
-    """S6: expose DataFrames to Spark SQL (03_gold_metrics_serverless.py:57-64)."""
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-
-
 def _parquet_has_nanos_ts(path: str, col: str) -> bool:
     """Driver-side footer probe: does ``col`` carry the Parquet
     TIMESTAMP(NANOS) physical type (arrow ``timestamp[ns]``)? Accepts a
@@ -423,19 +417,11 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-# the star-schema table list, defined ONCE here: sql_api's view
-# registration imports it, so the DataFrame and SQL faces can't drift
-# when a testdata table is added
+# the star-schema table list: sql_api's view registration reads it, so
+# adding a testdata table here exposes it to the SQL face
 STAR_TABLES = (
     "region nation customer supplier part orders lineitem documents embeddings"
 ).split()
-
-
-def load_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every synthetic testdata table from a scale-factor directory."""
-    out = {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in STAR_TABLES}
-    out["events"] = read_events(spark, sf_dir)
-    return out
 
 
 def read_jsonl_quarantine(

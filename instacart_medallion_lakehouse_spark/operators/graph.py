@@ -162,6 +162,8 @@ def connected_components(
     edge-join's shuffle and the pointer-jump's sort-merge self-join;
     at full scale leave it False so the label table shuffles
     co-partitioned instead."""
+    if pointer_jumps < 1:
+        raise ValueError(f"pointer_jumps must be >= 1, got {pointer_jumps}")
     both = F.explode(
         F.array(
             F.struct(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
@@ -223,7 +225,7 @@ def connected_components(
             # extra jumps can never overshoot; the fixed point is
             # jumps-invariant (tests/test_graph_cc.py).
             cur = stepped.withColumnRenamed("_l", "label")
-            for _ in range(max(1, pointer_jumps)):
+            for _ in range(pointer_jumps):
                 inner = cur.select(
                     F.col("node").alias("_pn"), F.col("label").alias("_pl")
                 )

@@ -18,24 +18,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def star_enrich(
-    fact: DataFrame,
-    dims: list[tuple[DataFrame, str]],
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Chain inner equi-joins of ``fact`` against (dim, key) pairs.
-
-    Mirrors the reference's 5-way enrichment join (03_gold_metrics.py:53-58)
-    with the dims explicitly broadcast — the reference relies on the 10 MB
-    auto-broadcast threshold; being explicit survives stale statistics.
-    """
-    out = fact
-    for dim, key in dims:
-        d = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, on=key, how="inner")
-    return out
-
-
 def enriched_lineitem(
     lineitem: DataFrame,
     orders: DataFrame,

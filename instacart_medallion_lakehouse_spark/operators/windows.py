@@ -3,7 +3,7 @@
 Reference parity (SURVEY.md §2.5):
 - W2 sequence rank — notebooks/03_gold_metrics.py:298-306 (purchase rank
   per (user, product) by order_number)
-- W3 lag with default — 03_gold_metrics.py:303
+- W3 lag — 03_gold_metrics.py:303 (sessionize's inter-arrival gap)
 - W4 count-over-partition — utils/quality.py:74-76
 
 Scale note: every ``Window.partitionBy`` is a full-row shuffle on the
@@ -32,19 +32,6 @@ def sequence_rank(
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     return df.withColumn(rank_col, F.row_number().over(w))
-
-
-def lag_with_default(
-    df: DataFrame,
-    col: str,
-    partition_by: list[str],
-    order_by: list[Column | str],
-    default: object = 0,
-    out_col: str | None = None,
-) -> DataFrame:
-    """W3: ``lag(col, 1, default)`` over the same window shape as W2."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(out_col or f"prev_{col}", F.lag(col, 1, default).over(w))
 
 
 def global_row_number(

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import quality
-from .io import read_table, write_table
 from .operators.cleanse import dedup_keep_first
 from .plans import marts
 
@@ -120,25 +119,18 @@ def run_bronze(
                 "_bronze_version": F.lit(BRONZE_VERSION),
             }
         )
-        # gate count OBSERVED on the write pass itself — no post-write
-        # re-scan job per table (quality.write_with_observed_gates is
-        # the general form; here only the non-empty gate applies)
-        from pyspark.sql import Observation
-
-        obs = Observation(f"bronze_{name}")
-        write_table(
-            df.observe(obs, F.count(F.lit(1)).alias("n_rows")),
-            f"{out_dir}/bronze/{name}",
+        # the non-empty gate is observed on the write pass itself — no
+        # post-write re-scan job per table. The read-back goes through
+        # the format-aware reader: under Delta an overwrite only
+        # logically removes the previous files, so a plain parquet read
+        # of the directory would return old+new rows on every re-run
+        w = quality.write_with_observed_gates(
+            df, f"{out_dir}/bronze/{name}", layer=f"bronze.{name}"
         )
-        n = int(obs.get["n_rows"])
-        quality.assert_row_count_nonzero(n, f"bronze.{name}")
+        n = w["n_rows"]
         quality.log_layer_stats("bronze", name, n)
         result.bronze_counts[name] = n
-        # read back through the format-aware reader: under Delta an
-        # overwrite only logically removes the previous files, so a
-        # plain parquet read of the directory would return old+new rows
-        # on every re-run
-        out[name] = read_table(spark, f"{out_dir}/bronze/{name}")
+        out[name] = w["table"]
     return out
 
 
@@ -182,35 +174,19 @@ def run_silver(
                 df, keys=keys, order_by=[F.col("_ingested_at"), content_hash]
             )
         cleaned = df.drop("_ingested_at", "_source_file", "_bronze_version")
-        from pyspark.sql import Observation
-
-        obs = Observation(f"silver_{name}")
-        # null-rate gates ride the same write-pass observation as the
-        # row count — zero extra scans per gated column
-        null_cols = _NULL_GATE_COLS.get(name, [])
-        metrics = [F.count(F.lit(1)).alias("n_rows")] + [
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
-            for c in null_cols
-        ]
-        write_table(
-            cleaned.observe(obs, *metrics),
+        # null-rate gates ride the write-pass observation with the row
+        # count — zero extra scans per gated column
+        w = quality.write_with_observed_gates(
+            cleaned,
             f"{out_dir}/silver/{name}",
+            null_rate_columns={
+                c: thresholds.null_rate_default
+                for c in _NULL_GATE_COLS.get(name, [])
+            },
+            require_nonzero=False,
+            layer=f"silver.{name}",
         )
-        silver_df = read_table(spark, f"{out_dir}/silver/{name}")
-        got = dict(obs.get)  # observed on the write pass, no re-scan
-        n = int(got["n_rows"])
-        for c in null_cols:
-            # compare the RAW rate — rounding first would let e.g.
-            # 0.0010004 sneak under a 0.001 threshold; the 6-dp form is
-            # for the message only (quality.check_null_rate keeps the
-            # reference's rounded-compare semantics, utils/quality.py:48;
-            # this pipeline gate is ours to make exact)
-            rate = (got[f"nulls_{c}"] or 0) / n if n else 0.0
-            if rate > thresholds.null_rate_default:
-                raise quality.DataQualityError(
-                    f"[silver] null rate {rate:.6f} on '{name}.{c}' exceeds "
-                    f"threshold {thresholds.null_rate_default}"
-                )
+        n, silver_df = w["n_rows"], w["table"]
         if keys is not None:
             quality.check_duplicate_rate(
                 silver_df, keys, thresholds.duplicate_rate, "silver"
@@ -269,34 +245,21 @@ def run_gold(
     }
     out: dict[str, DataFrame] = {}
     for name, (df, part_by) in gold.items():
-        from pyspark.sql import Observation
-
-        obs = Observation(f"gold_{name}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-        if versioned_gold:
-            from .versioned import read_versioned, write_versioned
-
-            # the non-empty gate runs INSIDE the commit protocol (after
-            # the data write, before the manifest publish): a 0-row mart
-            # leaves an unpublished orphan and raises — it never becomes
-            # the latest readable version
-            write_versioned(
-                df,
-                f"{out_dir}/gold/{name}",
-                partition_by=part_by,
-                validate=lambda obs=obs, name=name: quality.assert_row_count_nonzero(
-                    int(obs.get["n_rows"]), f"gold.{name}"
-                ),
-            )
-            written = read_versioned(spark, f"{out_dir}/gold/{name}")
-        else:
-            write_table(df, f"{out_dir}/gold/{name}", partition_by=part_by)
-            written = read_table(spark, f"{out_dir}/gold/{name}")
-        n = int(obs.get["n_rows"])  # observed on the write pass, no re-scan
-        quality.assert_row_count_nonzero(n, f"gold.{name}")
+        # versioned: the non-empty gate runs INSIDE the commit protocol
+        # (after the data write, before the manifest publish), so a 0-row
+        # mart leaves an unpublished orphan and raises — it never becomes
+        # the latest readable version
+        w = quality.write_with_observed_gates(
+            df,
+            f"{out_dir}/gold/{name}",
+            layer=f"gold.{name}",
+            partition_by=part_by,
+            versioned=versioned_gold,
+        )
+        n = w["n_rows"]
         quality.log_layer_stats("gold", name, n)
         result.gold_counts[name] = n
-        out[name] = written
+        out[name] = w["table"]
     li.unpersist()
     orders.unpersist()
     return out

@@ -24,7 +24,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .io import read_table, write_table
 from .logging_util import get_logger
+from .versioned import read_versioned, write_versioned
 
 logger = get_logger("quality")
 
@@ -214,52 +216,74 @@ def write_with_observed_gates(
     null_rate_columns: dict[str, float] | None = None,
     require_nonzero: bool = True,
     layer: str = "",
-    mode: str = "overwrite",
+    partition_by: list[str] | None = None,
+    versioned: bool = False,
 ) -> dict:
-    """Write ``df`` to parquet with the quality gates evaluated as
-    OBSERVATIONS of the write job itself — `df.observe` attaches the
-    gate aggregates to the write's own pass over the data, so the
-    null-rate and non-empty checks cost ZERO extra scans/jobs.
+    """The one gated table write: every medallion layer and the
+    training-set commit go through here.
 
-    The separate-job gates above (check_null_rate etc., the reference's
-    utils/quality.py shape) re-scan the table once per gate; at 100 TB
-    that doubles (or worse) the ingest cost. This is the production
-    form: one pass writes AND measures, and the gates are enforced from
-    the observed metrics after the action completes. Failing a gate
-    raises AFTER the write (the data landed but is not promoted —
-    callers pair this with the versioned store so the manifest publish
-    is the gate-conditional commit point).
+    The gate aggregates (row count, one null count per gated column)
+    ride the write job itself as a ``df.observe`` observation, so the
+    non-empty and null-rate gates cost ZERO extra scans or jobs — the
+    separate-job gates above (the reference's utils/quality.py shape)
+    re-scan the table once per gate.
 
-    Returns the observed metrics dict:
-    ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>": float}``.
+    ``versioned=False`` writes through ``io.write_table`` (honouring
+    ``io.TABLE_FORMAT``) and enforces the gates after the action: a
+    failing gate raises with the data landed. ``versioned=True``
+    commits through ``versioned.write_versioned`` with the gates in its
+    ``validate`` hook — after the data write, before the manifest
+    publish — so a failing gate leaves an unpublished orphan and
+    readers keep the previous version.
+
+    Null rates are compared RAW (nulls / rows, 0 on an empty table):
+    rounding first would let e.g. 0.0010004 sneak under a 0.001
+    threshold; the 6-dp form is for the message only.
+
+    Returns ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>":
+    float, "table": DataFrame}`` plus ``"version"`` when versioned;
+    ``table`` reads back what was written (the committed version when
+    versioned, via the format-aware reader otherwise).
     """
     from pyspark.sql import Observation
 
     null_rate_columns = null_rate_columns or {}
     obs = Observation(f"gates_{layer or 'table'}")
-    metrics_exprs = [F.count(F.lit(1)).alias("n_rows")]
-    for col in null_rate_columns:
-        metrics_exprs.append(
-            F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias(
-                f"nulls_{col}"
-            )
-        )
-    observed = df.observe(obs, *metrics_exprs)
-    observed.write.mode(mode).parquet(path)
+    observed = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        *[
+            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
+            for c in null_rate_columns
+        ],
+    )
+    out: dict = {}
 
-    got = dict(obs.get)
-    n_rows = got.get("n_rows", 0)
-    out: dict = {"n_rows": n_rows}
-    if require_nonzero and n_rows == 0:
-        raise DataQualityError(f"[{layer}] observed write produced 0 rows")
-    for col, threshold in null_rate_columns.items():
-        nulls = got.get(f"nulls_{col}") or 0
-        rate = round(nulls / n_rows, 6) if n_rows else 0.0
-        out[f"nulls_{col}"] = nulls
-        out[f"null_rate_{col}"] = rate
-        if rate > threshold:
-            raise DataQualityError(
-                f"[{layer}] observed null rate {rate:.6f} on '{col}' "
-                f"exceeds threshold {threshold}"
-            )
+    def enforce() -> None:
+        got = obs.get
+        n = int(got["n_rows"])
+        out["n_rows"] = n
+        if require_nonzero:
+            assert_row_count_nonzero(n, layer)
+        for col, threshold in null_rate_columns.items():
+            nulls = int(got[f"nulls_{col}"] or 0)
+            rate = nulls / n if n else 0.0
+            out[f"nulls_{col}"] = nulls
+            out[f"null_rate_{col}"] = rate
+            if rate > threshold:
+                raise DataQualityError(
+                    f"[{layer}] null rate {rate:.6f} on '{col}' "
+                    f"exceeds threshold {threshold}"
+                )
+
+    spark = df.sparkSession
+    if versioned:
+        out["version"] = write_versioned(
+            observed, path, partition_by=partition_by, validate=enforce
+        )
+        out["table"] = read_versioned(spark, path, out["version"])
+    else:
+        write_table(observed, path, partition_by=partition_by)
+        enforce()
+        out["table"] = read_table(spark, path)
     return out

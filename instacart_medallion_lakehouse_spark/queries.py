@@ -222,26 +222,6 @@ def oracle_sql() -> dict[str, str]:
     return _windowed(dict(_ORACLE))
 
 
-# Optional cross-query table cache (S9 — the reference pins hot Silver
-# tables across its five gold jobs the same way, 03_gold_metrics.py:42-44).
-# Off by default so single-query callers pay no memory. For long-lived
-# multi-query sessions only: bench.py deliberately does NOT enable it —
-# its per-query clearCache() isolation would unpersist these tables and
-# leave stale un-cached entries in the dict (covered by test_queries
-# cache round-trip).
-_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CACHE_ENABLED = False
-
-
-def enable_table_cache(enabled: bool = True) -> None:
-    global _CACHE_ENABLED
-    _CACHE_ENABLED = enabled
-    if not enabled:
-        for df in _TABLE_CACHE.values():
-            df.unpersist()
-        _TABLE_CACHE.clear()
-
-
 # ---------------------------------------------------------------------------
 # Persisted derived-table store ("signature layer").
 #
@@ -286,13 +266,34 @@ def clear_shared_store() -> None:
         for tbl in list(_BUCKETED_TABLES):
             try:
                 spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                _BUCKETED_TABLES.discard(tbl)
+                del _BUCKETED_TABLES[tbl]
             except Exception:  # noqa: BLE001 — best-effort cleanup
                 pass
 
 
-# catalog tables created by shared_bucketed_table this session
-_BUCKETED_TABLES: set[str] = set()
+# catalog tables created by shared_bucketed_table this session, each
+# mapped to its absolute warehouse location
+_BUCKETED_TABLES: dict[str, str] = {}
+
+
+def _store_fingerprint(
+    sf_dir: str, sources: tuple[str, ...], token: str
+) -> str | None:
+    """Store key for a derived asset: ``sf_dir``, the builder ``token``
+    and each source file's mtime+size, hashed. ``None`` when a source
+    file is missing (nothing to key on)."""
+    import hashlib
+
+    fp = hashlib.md5()
+    fp.update(sf_dir.encode())
+    fp.update(f"|{token}|".encode())
+    for s in sources:
+        try:
+            st = os.stat(os.path.join(sf_dir, s))
+        except FileNotFoundError:
+            return None
+        fp.update(f"{s}:{st.st_mtime_ns}:{st.st_size}".encode())
+    return fp.hexdigest()[:16]
 
 
 def shared_table(
@@ -316,26 +317,18 @@ def shared_table(
     otherwise keep serving the stale pre-change table across sessions.
     Bump the caller's token whenever the builder's semantics change.
     """
-    import hashlib
     import shutil
 
     root = _shared_dir()
     if root is None:
         return builder()
-    fp = hashlib.md5()
-    fp.update(sf_dir.encode())
-    fp.update(f"|{token}|".encode())
-    try:
-        for s in sources:
-            p = os.path.join(sf_dir, s)
-            st = os.stat(p)
-            fp.update(f"{s}:{st.st_mtime_ns}:{st.st_size}".encode())
-    except FileNotFoundError:
+    fp = _store_fingerprint(sf_dir, sources, token)
+    if fp is None:
         # no fingerprintable source (synthetic/in-memory input, e.g. a
         # test stubbing the table reader): persistence is only an
         # optimization — build fresh rather than cache unkeyed
         return builder()
-    path = os.path.join(root, f"{name}-{fp.hexdigest()[:16]}")
+    path = os.path.join(root, f"{name}-{fp}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         tmp = f"{path}.tmp-{os.getpid()}"
         builder().write.mode("overwrite").parquet(tmp)
@@ -385,34 +378,30 @@ def shared_bucketed_table(
     at bench scale — a cluster sizes it once per corpus (write-time
     contract, see write_bucketed).
     """
-    import hashlib
     import shutil
 
     from .io import write_bucketed
 
     if _shared_dir() is None:  # store disabled: same gate as shared_table
         return None
-    fp = hashlib.md5()
-    fp.update(sf_dir.encode())
-    fp.update(f"|{token}|".encode())
-    try:
-        for s in sources:
-            p = os.path.join(sf_dir, s)
-            st = os.stat(p)
-            fp.update(f"{s}:{st.st_mtime_ns}:{st.st_size}".encode())
-    except FileNotFoundError:
-        # synthetic/in-memory input (tests): no fingerprintable source
+    fp = _store_fingerprint(sf_dir, sources, token)
+    if fp is None:  # synthetic/in-memory input (tests): not fingerprintable
         return None
-    tbl = f"{name}_{fp.hexdigest()[:16]}"
+    tbl = f"{name}_{fp}"
+    location = os.path.abspath(
+        os.path.join(
+            spark.conf.get(
+                "spark.sql.warehouse.dir", "spark-warehouse"
+            ).removeprefix("file:"),
+            tbl,
+        )
+    )
     if not spark.catalog.tableExists(tbl):
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+        shutil.rmtree(location, ignore_errors=True)
         write_bucketed(
             builder(), tbl, bucket_by, num_buckets, sort_by=sort_by
         )
-    _BUCKETED_TABLES.add(tbl)
+    _BUCKETED_TABLES[tbl] = location
     return spark.table(tbl)
 
 
@@ -431,28 +420,28 @@ def store_backed(df: DataFrame) -> bool:
     shared dir, so this also recognizes scans of any catalog table
     this session registered through shared_bucketed_table — without
     it, bucketing the shingle store silently flipped curated_docs_v2
-    onto its re-tokenize fallback (measured +1.4s)."""
+    onto its re-tokenize fallback (measured +1.4s).
+
+    A file counts only when it lies under the store directory or under
+    a registered table's own warehouse location, compared at path
+    segment boundaries: a sibling ``<store>_old/`` does not count."""
+    from urllib.parse import unquote, urlparse
+
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — conservative: pin on any doubt
         return False
     d = _shared_dir()
-    if d and any(d in f for f in files):
-        return True
-    return any(f"/{t}/" in f for t in _BUCKETED_TABLES for f in files)
+    roots = [os.path.abspath(d)] if d else []
+    roots += _BUCKETED_TABLES.values()
+    return any(
+        path == r or path.startswith(r.rstrip("/") + "/")
+        for path in (unquote(urlparse(f).path) for f in files)
+        for r in roots
+    )
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if _CACHE_ENABLED:
-        key = (sf_dir, name)
-        if key not in _TABLE_CACHE:
-            df = (
-                read_events(spark, sf_dir)
-                if name == "events"
-                else spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            )
-            _TABLE_CACHE[key] = df.cache()
-        return _TABLE_CACHE[key]
     if name == "events":
         return read_events(spark, sf_dir)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -153,7 +153,7 @@ def write_versioned(
 
     ``validate`` (no-arg callable) runs after the data write completes
     but BEFORE the manifest publish — the gate-conditional commit point
-    quality.write_with_observed_gates documents. Because the write
+    quality.write_with_observed_gates puts its gates in. Because the write
     action has finished, any ``df.observe`` metrics are available inside
     the hook; if it raises, the manifest is never published, the staged
     data dir is an ordinary orphan (invisible to readers, reclaimed by

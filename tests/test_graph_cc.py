@@ -83,6 +83,11 @@ class TestConnectedComponents:
             broadcast_labels=True,
         )
         assert out == expected
+        # fewer than one jump is a caller error, not a silent clamp
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        for jumps in (0, -1):
+            with pytest.raises(ValueError, match="pointer_jumps"):
+                connected_components(df, pointer_jumps=jumps)
 
     def test_cap_raises_loudly(self, spark):
         # max_rounds=0 can never converge-check a chain: loud error,

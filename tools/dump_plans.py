@@ -54,8 +54,9 @@ def main() -> None:
             f.write(plan)
         q.release_pins()
         print(f"wrote {path} ({len(plan)} chars)")
-    spark.stop()
+    # before stop(): the bucketed-table drops need the live session
     q.clear_shared_store()
+    spark.stop()
 
 
 if __name__ == "__main__":
