@@ -711,12 +711,15 @@ def simhash_pairs(
     """
     assert max_hamming <= 3, "4-byte banding guarantees recall only for <= 3"
     # NOT pinned (r12): the two band self-join sides are byte-identical
-    # subtrees, so EnsureRequirements plans one Exchange on (idx, val)
-    # per side and ReuseExchange serves the second from the first — the
-    # signature pipeline executes ONCE either way. The old pin+count
-    # added a full blocking action (compute + cache write) on top of
-    # that shared exchange (the r4 cache-vs-ReuseExchange lesson:
-    # lm_perplexity A/B cached 1.9-2.6s vs uncached 1.1-1.4s).
+    # subtrees, and at runtime AQE's final plan serves the second side's
+    # shuffle of per-document partial sums (the Exchange on id_col
+    # inside simhash_table) as a ReusedExchange of the first. Tokenize,
+    # md5 dictionary and partial sums execute ONCE; each side re-runs
+    # only the final sum, pack and band explode on that shuffle output
+    # (tests/test_text_dedup.py checks this). The old pin+count added a
+    # full blocking action (compute + cache write) on top of that shared
+    # exchange (the r4 cache-vs-ReuseExchange lesson: lm_perplexity A/B
+    # cached 1.9-2.6s vs uncached 1.1-1.4s).
     sig = simhash_table(docs, id_col)
     bands = sig.select(
         F.col(id_col).alias("_id"),

@@ -2,10 +2,13 @@
 package functions by name. A rename or removal of one of them would
 silently drop its spans and counters, so install the instrumentation
 against the package here. It runs in a subprocess: the wrappers it
-installs must not leak into this test session."""
+installs must not leak into this test session. The wrappers also read
+arguments by position, and perfbench/run.py reads
+``session._JVM_OPTS`` by name; those are checked in-process."""
 
 from __future__ import annotations
 
+import inspect
 import os
 import subprocess
 import sys
@@ -48,3 +51,28 @@ def test_instrument_installs_against_package():
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert proc.stdout.startswith("installed")
+
+
+def _leading(fn, n: int) -> list[tuple[str, object]]:
+    params = list(inspect.signature(fn).parameters.values())[:n]
+    return [(p.name, p.kind) for p in params]
+
+
+POS_OR_KW = inspect.Parameter.POSITIONAL_OR_KEYWORD
+
+
+def test_wrapped_argument_positions():
+    from instacart_medallion_lakehouse_spark import io, session, versioned
+    from instacart_medallion_lakehouse_spark import queries as q
+
+    # io.write_table's byte counter reads ``path`` as args[1] or kwargs["path"]
+    assert _leading(io.write_table, 2)[1] == ("path", POS_OR_KW)
+    # the MERGE wrapper and the store wrapper pass these through positionally
+    assert _leading(versioned.upsert_versioned, 3) == [
+        (n, POS_OR_KW) for n in ("spark", "root", "updates")
+    ]
+    for fn in (q.shared_table, q.shared_bucketed_table):
+        assert _leading(fn, 4) == [
+            (n, POS_OR_KW) for n in ("spark", "sf_dir", "name", "builder")
+        ], fn.__name__
+    assert isinstance(session._JVM_OPTS, str)

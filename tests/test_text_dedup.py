@@ -131,6 +131,21 @@ class TestNearDup:
         # just assert the unrelated doc is not a 0-distance collision
         assert pairs.get((0, 4), 99) != 0
 
+    def test_simhash_band_sides_share_one_signature_shuffle(self, docs):
+        # simhash_pairs is not pinned because both band sides reuse one
+        # exchange. Check it at runtime, on AQE's final plan.
+        out = dedup.simhash_pairs(docs, max_hamming=3)
+        assert (0, 1) in {(r["id_a"], r["id_b"]) for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final
+        reused = [ln for ln in final.splitlines() if "ReusedExchange" in ln]
+        # the per-document partial sums' shuffle is computed once ...
+        assert len(reused) == 1 and "hashpartitioning(doc_id" in reused[0], reused
+        # ... so the text is tokenized once for the token stream and once
+        # for the md5 dictionary, not again for the second side
+        assert final.count("explode(split(") == 2
+
     def test_simhash_is_order_invariant(self, spark):
         df = spark.createDataFrame(
             [(0, "alpha beta gamma delta"), (1, "delta gamma beta alpha")],
