@@ -305,8 +305,9 @@ def shingle_containment_pairs(
 
     ``shingles``: a precomputed (id, _sh) table (e.g. the persisted
     shingle-layer asset) — skips the explode entirely and is consumed
-    AS-IS (the caller owns its materialization: a store-backed parquet
-    scan needs no pin; see queries_text._shingles_ready).
+    AS-IS (the caller owns its materialization: queries.shared_table
+    returns either a stored scan, which needs no pin, or a pinned,
+    materialized build).
     """
     if shingles is not None:
         ex = shingles
@@ -836,12 +837,13 @@ def hamming_band_pairs(
 
     ``bands``/``bands_b`` (r11): a PREBUILT band table (the
     ``_hash_band_table`` schema ``(_id, _sh, idx, val)``) replaces the
-    corresponding ``sig`` side — the bucketed-band-store path
-    (queries.shared_bucketed_table): a store bucketed+sorted on
-    ``(idx, val)`` makes this join exchange-AND-sort-free on that
-    side, so the only remaining shuffle is the output-sized distinct.
-    No pin either: the store is a compact columnar scan, cheaper to
-    re-read than to write into executor cache.
+    corresponding ``sig`` side — the band-store path
+    (queries.shared_table with ``bucket_by=["idx", "val"]``): a store
+    bucketed+sorted on ``(idx, val)`` makes this join
+    exchange-AND-sort-free on that side, so the only remaining shuffle
+    is the output-sized distinct. It is consumed as returned: a stored
+    scan is cheaper to re-read than to write into executor cache, and
+    the store's fallback build comes pinned already.
     """
     assert n_bands > max_hamming, "pigeonhole recall needs bands > hamming"
     if bands is not None:

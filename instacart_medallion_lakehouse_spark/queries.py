@@ -225,17 +225,30 @@ def oracle_sql() -> dict[str, str]:
 # ---------------------------------------------------------------------------
 # Persisted derived-table store ("signature layer").
 #
-# Expensive derived layers — MinHash band tables today; any signature /
-# sketch / index layer tomorrow — are consumed by several queries
-# (minhash_lsh_dedup, lsh_bucket_profile, dedup_clusters). At 100 TB you
-# do not recompute a corpus signature pass per query: you persist it ONCE
-# as a table asset and every consumer scans the (tiny) derived table.
-# This store is that asset, scoped to a scratch dir: builder output is
-# written to parquet keyed by (source files' identity, layer name) and
-# re-read on every later request — across queries AND across sessions.
-# Invalidation is by source fingerprint (path+mtime+size), so a testdata
-# regeneration rebuilds automatically. Set SPARK_GRAFT_SHARED_DIR='' to
-# disable (every call then builds fresh, prior behavior).
+# Expensive derived layers (shingle index, MinHash signatures and bands,
+# run index, media fingerprints, scoring passes) are consumed by several
+# queries. At 100 TB you do not recompute a corpus signature pass per
+# query: you persist it ONCE as a table asset and every consumer scans
+# it. ``shared_table`` is the one entry point, with one contract: it
+# always returns a DataFrame a consumer may read from several join sides
+# without deciding anything.
+#
+# - Store on and sources fingerprintable: a STORED SCAN. With
+#   ``bucket_by=None`` that is a parquet asset in the store directory;
+#   with a key list it is a hash-bucketed catalog table, so joins and
+#   aggregates on those keys skip their exchange. Stored scans are never
+#   pinned: re-reading a compact columnar asset beats writing it into
+#   executor cache first.
+# - Otherwise (store disabled by SPARK_GRAFT_SHARED_DIR='', or sources
+#   that cannot be fingerprinted, e.g. synthetic test inputs): the fresh
+#   build, pinned and materialized with one count(), so its
+#   explode/aggregate chain runs once whatever the consumer does with
+#   it. The pin is released on the next registry call (pins.py).
+#
+# Assets are keyed by (source files' identity, layer name, builder
+# token) and re-read on every later request, across queries AND
+# sessions. Invalidation is by source fingerprint (path+mtime+size), so
+# a testdata regeneration rebuilds automatically.
 # ---------------------------------------------------------------------------
 
 
@@ -251,11 +264,10 @@ def _shared_dir() -> str | None:
 def clear_shared_store() -> None:
     """Drop every persisted derived table (bench calls this between
     passes so each pass pays the build exactly once — honest timing).
-    Also drops the BUCKETED catalog tables created this session
-    (shared_bucketed_table registers them in _BUCKETED_TABLES): the
-    catalog outlives the store directory, and a surviving band table
-    would make pass 2's build entries skip the band build — min()
-    over passes would then hide that cost entirely."""
+    Also drops the BUCKETED catalog tables created this session (listed
+    in _BUCKETED_TABLES): the catalog outlives the store directory, and
+    a surviving band table would make pass 2's build entries skip the
+    band build — min() over passes would then hide that cost entirely."""
     import shutil
 
     d = _shared_dir()
@@ -266,14 +278,19 @@ def clear_shared_store() -> None:
         for tbl in list(_BUCKETED_TABLES):
             try:
                 spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                del _BUCKETED_TABLES[tbl]
+                _BUCKETED_TABLES.discard(tbl)
             except Exception:  # noqa: BLE001 — best-effort cleanup
                 pass
 
 
-# catalog tables created by shared_bucketed_table this session, each
-# mapped to its absolute warehouse location
-_BUCKETED_TABLES: dict[str, str] = {}
+# bucketed catalog tables shared_table created this session
+_BUCKETED_TABLES: set[str] = set()
+
+# Buckets of a bucketed store asset: the tasks per join of its
+# consumers. 8 fits the sub-100k-row band and index tables at bench
+# scale; a cluster sizes it once per corpus (write-time contract, see
+# io.write_bucketed).
+_STORE_BUCKETS = 8
 
 
 def _store_fingerprint(
@@ -303,13 +320,31 @@ def shared_table(
     builder: Callable[[], DataFrame],
     sources: tuple[str, ...] = ("documents.parquet",),
     token: str = "v1",
+    bucket_by: list[str] | None = None,
 ) -> DataFrame:
-    """Return the derived table ``name`` for ``sf_dir``, building it with
-    ``builder()`` and persisting to scratch parquet on first request.
+    """Return the derived table ``name`` for ``sf_dir``: a stored scan
+    whenever the store can key it, else ``pin(builder())`` materialized
+    with one ``count()`` (the contract in the header above). Never
+    ``None``; every consumer may read the result from several join
+    sides.
 
+    ``bucket_by=None`` persists ``builder()`` to scratch parquet.
     Publication is atomic (write to a unique tmp dir, rename into
     place), so a concurrent builder loses the race cleanly and reads
     the winner's table.
+
+    ``bucket_by=[...]`` persists it as a HASH-BUCKETED catalog table
+    (``io.write_bucketed``, _STORE_BUCKETS buckets, sorted on the same
+    keys) served via ``spark.table``: every later self-join or
+    aggregate whose keys start with ``bucket_by`` then runs with NO
+    exchange on the stored side — the shuffle happened ONCE at write
+    time. Bucketed writes must go through ``saveAsTable``, so this asset
+    lives in the session catalog (a new session re-registers by
+    rebuilding; the files land under ``spark.sql.warehouse.dir``). The
+    fingerprint is baked into the TABLE NAME, so a stale table is never
+    served; a leftover same-name warehouse dir from a killed run is
+    deleted before the rebuild, because managed-table creation refuses
+    to reuse an existing location.
 
     ``token`` versions the BUILDER LOGIC in the cache key: the store
     outlives the process, so a code change to anything the builder
@@ -319,126 +354,44 @@ def shared_table(
     """
     import shutil
 
-    root = _shared_dir()
-    if root is None:
-        return builder()
-    fp = _store_fingerprint(sf_dir, sources, token)
-    if fp is None:
-        # no fingerprintable source (synthetic/in-memory input, e.g. a
-        # test stubbing the table reader): persistence is only an
-        # optimization — build fresh rather than cache unkeyed
-        return builder()
-    path = os.path.join(root, f"{name}-{fp}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp-{os.getpid()}"
-        builder().write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost the publish race — winner's table is live
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
-
-
-def shared_bucketed_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    builder: Callable[[], DataFrame],
-    bucket_by: list[str],
-    num_buckets: int = 8,
-    sort_by: list[str] | None = None,
-    sources: tuple[str, ...] = ("documents.parquet",),
-    token: str = "v1",
-) -> DataFrame:
-    """Bucketed sibling of ``shared_table``: persist ``builder()`` as a
-    HASH-BUCKETED catalog table (``io.write_bucketed``) keyed by the
-    same source-mtime+token fingerprint, and serve it via
-    ``spark.table``. Returns ``None`` when the store is disabled or the
-    sources aren't fingerprintable — callers fall back to their
-    unbucketed in-plan build (with its pins), keeping fallback
-    semantics byte-identical to the pre-store path. Every later self-join or aggregate whose keys
-    start with ``bucket_by`` then runs with NO exchange on the stored
-    side — the shuffle happened ONCE at write time. This is the 100 TB
-    shape for the dedup band stores (VERDICT r10 #6): band tables are
-    corpus-sized, and an unbucketed store re-shuffles both sides of
-    the candidate join on EVERY consumer run.
-
-    Bucketed writes must go through ``saveAsTable``, so unlike the
-    parquet store this asset lives in the session catalog (in-memory
-    here — a new session re-registers by rebuilding; the files land
-    under ``spark.sql.warehouse.dir``). The fingerprint is baked into
-    the TABLE NAME, so a testdata regeneration or builder-logic change
-    can never serve a stale table; a leftover same-name warehouse dir
-    from a killed run (catalog forgot it, files remain) is deleted
-    before the rebuild — managed-table creation refuses to reuse an
-    existing location.
-
-    ``num_buckets`` sizes join parallelism for the STORE's consumers
-    (tasks-per-join == buckets); 8 fits the sub-100k-row band tables
-    at bench scale — a cluster sizes it once per corpus (write-time
-    contract, see write_bucketed).
-    """
-    import shutil
-
     from .io import write_bucketed
+    from .pins import pin
 
-    if _shared_dir() is None:  # store disabled: same gate as shared_table
-        return None
-    fp = _store_fingerprint(sf_dir, sources, token)
-    if fp is None:  # synthetic/in-memory input (tests): not fingerprintable
-        return None
+    root = _shared_dir()
+    fp = None if root is None else _store_fingerprint(sf_dir, sources, token)
+    if fp is None:
+        built = pin(builder())
+        built.count()
+        return built
+    if bucket_by is None:
+        path = os.path.join(root, f"{name}-{fp}")
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            tmp = f"{path}.tmp-{os.getpid()}"
+            builder().write.mode("overwrite").parquet(tmp)
+            try:
+                os.rename(tmp, path)
+            except OSError:  # lost the publish race — winner's table is live
+                shutil.rmtree(tmp, ignore_errors=True)
+        return spark.read.parquet(path)
     tbl = f"{name}_{fp}"
-    location = os.path.abspath(
-        os.path.join(
-            spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            ).removeprefix("file:"),
-            tbl,
-        )
-    )
     if not spark.catalog.tableExists(tbl):
-        shutil.rmtree(location, ignore_errors=True)
-        write_bucketed(
-            builder(), tbl, bucket_by, num_buckets, sort_by=sort_by
+        warehouse = spark.conf.get(
+            "spark.sql.warehouse.dir", "spark-warehouse"
         )
-    _BUCKETED_TABLES[tbl] = location
+        shutil.rmtree(
+            os.path.join(warehouse.removeprefix("file:"), tbl),
+            ignore_errors=True,
+        )
+        write_bucketed(
+            builder(), tbl, bucket_by, _STORE_BUCKETS, sort_by=bucket_by
+        )
+    _BUCKETED_TABLES.add(tbl)
     return spark.table(tbl)
 
 
-def store_backed(df: DataFrame) -> bool:
-    """True when ``df`` scans the persisted derived-table store (i.e.
-    ``shared_table`` served it from parquet rather than falling back to
-    a fresh build). Consumers use this to decide whether multi-consumer
-    reuse needs an executor-cache pin: re-scanning a compact columnar
-    store asset two or three times is CHEAPER than writing it into the
-    block-manager cache first (the write is the full table, the scans
-    are column-pruned), but a fallback-built plan re-executes its whole
-    explode/aggregate chain per consumer and must be pinned. Metadata
-    only — ``inputFiles`` launches no job.
-
-    r12: BUCKETED store assets live in the session warehouse, not the
-    shared dir, so this also recognizes scans of any catalog table
-    this session registered through shared_bucketed_table — without
-    it, bucketing the shingle store silently flipped curated_docs_v2
-    onto its re-tokenize fallback (measured +1.4s).
-
-    A file counts only when it lies under the store directory or under
-    a registered table's own warehouse location, compared at path
-    segment boundaries: a sibling ``<store>_old/`` does not count."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — conservative: pin on any doubt
-        return False
-    d = _shared_dir()
-    roots = [os.path.abspath(d)] if d else []
-    roots += _BUCKETED_TABLES.values()
-    return any(
-        path == r or path.startswith(r.rstrip("/") + "/")
-        for path in (unquote(urlparse(f).path) for f in files)
-        for r in roots
-    )
+# Kept only because perfbench/instrument.py patches this name; ROADMAP
+# item 4 (the benchmark reads engine telemetry) removes it.
+shared_bucketed_table = shared_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

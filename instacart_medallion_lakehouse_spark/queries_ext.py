@@ -3761,8 +3761,8 @@ def _shared_fp_bands(
 ) -> DataFrame:
     """BUCKETED band store over a fingerprint signature (r11, VERDICT
     r10 #6): the ``(_id, _sh, idx, val)`` band explosion of a signature
-    table, persisted via ``queries.shared_bucketed_table`` bucketed AND
-    sorted on ``(idx, val)`` — the candidate join's keys. Every dedup
+    table, persisted via ``queries.shared_table`` bucketed AND sorted
+    on ``(idx, val)`` — the candidate join's keys. Every dedup
     consumer's band self-join (and the incremental probe's index side)
     then reads bucket-wise co-located files with NO exchange: at 100 TB
     the band table is corpus-sized x n_bands, and re-shuffling it on
@@ -3778,9 +3778,9 @@ def _shared_fp_bands(
     write+read+commit). The decode still runs exactly once, under the
     *_table build entry."""
     from .operators.dedup import _hash_band_table
-    from .queries import shared_bucketed_table
+    from .queries import shared_table
 
-    return shared_bucketed_table(
+    return shared_table(
         spark,
         sf_dir,
         name,
@@ -3792,10 +3792,8 @@ def _shared_fp_bands(
             "doc_id",
             extra_cols=extra_cols,
         ),
-        bucket_by=["idx", "val"],
-        num_buckets=8,
-        sort_by=["idx", "val"],
         token=token,
+        bucket_by=["idx", "val"],
     )
 
 
@@ -3945,19 +3943,13 @@ def image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import hamming_band_pairs
     from .operators.multimodal import DHASH_BAND_BITS, DHASH_BANDS
 
-    bands = _shared_dhash_bands(spark, sf_dir)
-    sig = (
-        None
-        if bands is not None
-        else _shared_dhash_sigs(spark, sf_dir).select("doc_id", "dhash")
-    )
     return hamming_band_pairs(
-        sig,
+        None,
         "dhash",
         n_bands=DHASH_BANDS,
         band_bits=DHASH_BAND_BITS,
         max_hamming=3,
-        bands=bands,
+        bands=_shared_dhash_bands(spark, sf_dir),
     )
 
 
@@ -4021,10 +4013,7 @@ def audio_fp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     committing a second parquet store and reading it back inside the
     same timed window (that extra write+read+commit was the r11
     regression on this entry). One decode, one store write."""
-    bands = _shared_audio_bands(spark, sf_dir)
-    if bands is None:  # store disabled: fresh decode, prior behavior
-        return _audio_fp_build(spark, sf_dir)
-    return bands.filter(F.col("idx") == 0).select(
+    return _shared_audio_bands(spark, sf_dir).filter(F.col("idx") == 0).select(
         F.col("_id").alias("doc_id"),
         "n_frames",
         F.col("_sh").alias("fingerprint"),
@@ -4070,21 +4059,13 @@ def audio_fp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import hamming_band_pairs
     from .operators.multimodal import AUDIO_FP_BAND_BITS, AUDIO_FP_BANDS
 
-    bands = _shared_audio_bands(spark, sf_dir)
-    sig = (
-        None
-        if bands is not None
-        else _audio_fp_build(spark, sf_dir).select(
-            "doc_id", F.col("fingerprint").alias("fp")
-        )
-    )
     return hamming_band_pairs(
-        sig,
+        None,
         "fp",
         n_bands=AUDIO_FP_BANDS,
         band_bits=AUDIO_FP_BAND_BITS,
         max_hamming=3,
-        bands=bands,
+        bands=_shared_audio_bands(spark, sf_dir),
     )
 
 
@@ -4138,10 +4119,7 @@ def video_fp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     build like audio_fp_table — the n_frames-carrying bucketed band
     store is the only commit; the signature face projects idx=0 out
     of it (one decode, one store write)."""
-    bands = _shared_video_bands(spark, sf_dir)
-    if bands is None:  # store disabled: fresh decode, prior behavior
-        return _video_fp_build(spark, sf_dir)
-    return bands.filter(F.col("idx") == 0).select(
+    return _shared_video_bands(spark, sf_dir).filter(F.col("idx") == 0).select(
         F.col("_id").alias("doc_id"),
         "n_frames",
         F.col("_sh").alias("fingerprint"),
@@ -4187,21 +4165,13 @@ def video_fp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import hamming_band_pairs
     from .operators.multimodal import VIDEO_FP_BAND_BITS, VIDEO_FP_BANDS
 
-    bands = _shared_video_bands(spark, sf_dir)
-    sig = (
-        None
-        if bands is not None
-        else _video_fp_build(spark, sf_dir).select(
-            "doc_id", F.col("fingerprint").alias("fp")
-        )
-    )
     return hamming_band_pairs(
-        sig,
+        None,
         "fp",
         n_bands=VIDEO_FP_BANDS,
         band_bits=VIDEO_FP_BAND_BITS,
         max_hamming=3,
-        bands=bands,
+        bands=_shared_video_bands(spark, sf_dir),
     )
 
 
@@ -4247,41 +4217,21 @@ def incremental_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     any match is a duplicate of the archive, its matches say of what."""
     from .operators.dedup import hamming_band_pairs
     from .operators.multimodal import DHASH_BAND_BITS, DHASH_BANDS
-    from .pins import pin as _pin
-    from .queries import store_backed
 
     sig = _shared_dhash_sigs(spark, sf_dir).select("doc_id", "dhash")
     gate = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < "cd"
-    bands = _shared_dhash_bands(spark, sf_dir)
-    if bands is not None:
-        # index side probes the BUCKETED band store (r11) — the batch
-        # side's inline band build broadcast-joins into its buckets;
-        # a filter preserves the store scan's bucket partitioning
-        gate_id = (
-            F.substring(F.md5(F.col("_id").cast("string")), 1, 2) < "cd"
-        )
-        pairs = hamming_band_pairs(
-            sig.filter(~gate),
-            "dhash",
-            n_bands=DHASH_BANDS,
-            band_bits=DHASH_BAND_BITS,
-            max_hamming=3,
-            bands_b=bands.filter(gate_id),
-        )
-    else:
-        # fallback build path (store disabled / synthetic input):
-        # decode ONCE so both gate sides read the cached table
-        if not store_backed(sig):
-            sig = _pin(sig)
-            sig.count()
-        pairs = hamming_band_pairs(
-            sig.filter(~gate),
-            "dhash",
-            n_bands=DHASH_BANDS,
-            band_bits=DHASH_BAND_BITS,
-            max_hamming=3,
-            sig_b=sig.filter(gate),
-        )
+    gate_id = F.substring(F.md5(F.col("_id").cast("string")), 1, 2) < "cd"
+    # index side probes the BUCKETED band store (r11) — the batch side's
+    # inline band build broadcast-joins into its buckets; a filter
+    # preserves the store scan's bucket partitioning
+    pairs = hamming_band_pairs(
+        sig.filter(~gate),
+        "dhash",
+        n_bands=DHASH_BANDS,
+        band_bits=DHASH_BAND_BITS,
+        max_hamming=3,
+        bands_b=_shared_dhash_bands(spark, sf_dir).filter(gate_id),
+    )
     return pairs.select(
         F.col("id_a").alias("batch_id"),
         F.col("id_b").alias("index_id"),

@@ -31,7 +31,7 @@ from .functions.text import (
 )
 from .operators import dedup, vectors
 from .pins import pin
-from .queries import _register, _t, shared_table, store_backed
+from .queries import _register, _t, shared_table
 
 # --- shared SQL fragments (moved to oracle_fragments.py; re-exported) ------
 
@@ -320,7 +320,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), n=3, threshold=0.5,
-        shingles=_shingles_ready(spark, sf_dir),
+        shingles=shared_shingles(spark, sf_dir),
     )
 
 
@@ -336,32 +336,6 @@ def _shingle_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.shingle_table(_t(spark, sf_dir, "documents"), 3, "doc_id")
 
 
-def shared_shingles_bucketed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame | None:
-    """The shingle inverted index as a ``_sh``-BUCKETED catalog store
-    (r12, VERDICT r11 #5): the hot path of every consumer keys on the
-    shingle — the pair-intersection self-join (ngram_jaccard_dedup,
-    containment_pairs), the document-frequency aggregate + anti-join
-    (ngram_jaccard_dedup_capped), the benchmark-overlap join
-    (contamination) — so a store bucketed+sorted on ``_sh`` serves
-    those joins and aggregates exchange-free. ``None`` when the store
-    is disabled or the sources aren't fingerprintable."""
-    from .queries import shared_bucketed_table
-
-    return shared_bucketed_table(
-        spark,
-        sf_dir,
-        "shingles_n3",
-        lambda: _shingle_build(spark, sf_dir),
-        bucket_by=["_sh"],
-        num_buckets=8,
-        sort_by=["_sh"],
-        # bump when tokens()/shingle_table change
-        token="tok-ws-3shingle-v1",
-    )
-
-
 def shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full-corpus DISTINCT (doc_id, 3-shingle) table as a persisted
     store asset — the inverted-index layer every text-dedup family
@@ -369,33 +343,25 @@ def shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark decontamination, cross-source matrices). One
     posexplode+window pass per corpus generation; consumers scan the
     stored table. At 100 TB this is the committed inverted index, a
-    standard stored artifact, not a subquery. r12: the asset is the
-    _sh-bucketed catalog store (shared_shingles_bucketed) so consumer
-    joins on the shingle skip their exchanges; with the store disabled
-    this degrades to the fresh in-plan build exactly as before."""
-    bucketed = shared_shingles_bucketed(spark, sf_dir)
-    if bucketed is not None:
-        return bucketed
-    return _shingle_build(spark, sf_dir)
+    standard stored artifact, not a subquery.
 
-
-def _shingles_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shingle table prepared for MULTI-CONSUMER reuse (the
-    exact-Jaccard verify reads it from two join sides plus the size
-    aggregate). Store-backed (bucketed catalog table): return the scan
-    as-is — three column-pruned scans of the compact store asset beat
-    one full write into executor cache (measured: the pin+count alone
-    cost ~1-3s per consumer query at sf0.1 under whole-registry memory
-    pressure, the r9 bench regression's biggest line item).
-    Fallback-built (synthetic test inputs, store disabled): pin +
-    materialize so the tokenize/posexplode/window/distinct chain runs
-    once, not thrice."""
-    ex = shared_shingles_bucketed(spark, sf_dir)
-    if ex is not None:
-        return ex
-    ex = pin(_shingle_build(spark, sf_dir))
-    ex.count()
-    return ex
+    Bucketed+sorted on ``_sh`` (r12, VERDICT r11 #5): the hot path of
+    every consumer keys on the shingle — the pair-intersection
+    self-join (ngram_jaccard_dedup, containment_pairs), the
+    document-frequency aggregate + anti-join
+    (ngram_jaccard_dedup_capped), the benchmark-overlap join
+    (contamination) — so those joins and aggregates run exchange-free
+    on the stored side. Consumers read it from several join sides as
+    returned (queries.shared_table's contract)."""
+    return shared_table(
+        spark,
+        sf_dir,
+        "shingles_n3",
+        lambda: _shingle_build(spark, sf_dir),
+        # bump when tokens()/shingle_table change
+        token="tok-ws-3shingle-v1",
+        bucket_by=["_sh"],
+    )
 
 
 def shared_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,37 +387,25 @@ def shared_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(_id, band, key) LSH band table (r=2), served from a BUCKETED
-    catalog store (r11, VERDICT r10 #6): bucketed AND sorted on
-    (band, key) — the candidate self-join's keys — via
-    queries.shared_bucketed_table, so every consumer's band join
-    (minhash_lsh_dedup, dedup_clusters, cluster_canonicals, the
-    incremental probe's index side) and the (band, key) aggregate of
-    lsh_bucket_profile run with NO exchange over the stored side. At
-    100 TB the band table is |docs| x 8 rows; re-shuffling it per
-    consumer run was the one recurring cost the derive-on-scan form
-    kept. Built from the stored signature asset with a scan-local md5
-    projection; falls back to exactly that in-plan projection when the
-    store is disabled (shared_bucketed_table returns None)."""
-    from .queries import shared_bucketed_table
-
-    bands = shared_bucketed_table(
+    """(_id, band, key) LSH band table (r=2), stored bucketed AND sorted
+    on (band, key) — the candidate self-join's keys (r11, VERDICT r10
+    #6) — so every consumer's band join (minhash_lsh_dedup,
+    dedup_clusters, cluster_canonicals, the incremental probe's index
+    side) and the (band, key) aggregate of lsh_bucket_profile run with
+    NO exchange over the stored side. At 100 TB the band table is
+    |docs| x 8 rows; re-shuffling it per consumer run was the one
+    recurring cost the derive-on-scan form kept. Built from the stored
+    signature asset with a scan-local md5 projection."""
+    return shared_table(
         spark,
         sf_dir,
         "minhash_bands_n3_h16r2",
         lambda: dedup.bands_from_signatures(
             shared_minhash_sigs(spark, sf_dir), num_hashes=16, band_rows=2
         ),
-        bucket_by=["band", "key"],
-        num_buckets=8,
-        sort_by=["band", "key"],
         # bump when tokens()/shingle_table/minhash hash-family change
         token="md5-seeded-16x-3shingle-v1-bands",
-    )
-    if bands is not None:
-        return bands
-    return dedup.bands_from_signatures(
-        shared_minhash_sigs(spark, sf_dir), num_hashes=16, band_rows=2
+        bucket_by=["band", "key"],
     )
 
 
@@ -504,12 +458,11 @@ def shared_contamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "contamination_flags",
         # chained store build: the flag set derives from the committed
-        # shingle layer (store-backed: consumed as-is; fallback:
-        # _shingles_ready pins the fresh build for the 3 consumers)
+        # shingle layer
         lambda: curation.contamination_flags(
             _t(spark, sf_dir, "documents"), bench_max_id=10,
             overlap_threshold=0.2,
-            shingles=_shingles_ready(spark, sf_dir),
+            shingles=shared_shingles(spark, sf_dir),
         ),
         # name the policy params: a different policy is a different asset
         token="bench10-overlap0.2-3shingle-v1",
@@ -540,34 +493,6 @@ def _positioned_runs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shared_positioned_runs_bucketed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame | None:
-    """The run index as an h-BUCKETED catalog store (r12, VERDICT r11
-    #5 — the same treatment the MinHash band store got in r11): every
-    span consumer keys on ``h`` — the pair self-joins
-    (long_run_overlap, span_dup_clusters), the dup-hash aggregate +
-    semi join (dup_span_coverage), and the canonical-owner window
-    (dedup_spans_text) — so a store bucketed on ``h`` serves them all
-    exchange-free (partition-local sorts remain: Spark 3+ does not
-    propagate bucket sort order into plans). ``None`` when the store
-    is disabled or the sources aren't fingerprintable; callers fall
-    back to the in-plan build + pin."""
-    from .queries import shared_bucketed_table
-
-    return shared_bucketed_table(
-        spark,
-        sf_dir,
-        "positioned_runs",
-        lambda: _positioned_runs_build(spark, sf_dir),
-        bucket_by=["h"],
-        num_buckets=8,
-        sort_by=["h"],
-        # bump when tokens() or the run length change
-        token=f"ws-tokens-n{_RUN_N}-v1",
-    )
-
-
 def shared_positioned_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, _pos, h): every 20-token contiguous run, md5'd, with its
     starting token position — the substring-dedup index (Lee et al.)
@@ -576,15 +501,23 @@ def shared_positioned_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, dup_span_coverage measures damage, dedup_spans_text removes
     spans) instead of each rebuilding and pinning its own run table —
     at 100 TB the run index is built once per corpus snapshot, exactly
-    like the MinHash signature layer above. r12: the asset is the
-    h-bucketed catalog store (shared_positioned_runs_bucketed), so
-    consumers' h-keyed joins/aggregates/windows skip their exchanges;
-    with the store disabled this degrades to the fresh in-plan build
-    exactly as before."""
-    bucketed = shared_positioned_runs_bucketed(spark, sf_dir)
-    if bucketed is not None:
-        return bucketed
-    return _positioned_runs_build(spark, sf_dir)
+    like the MinHash signature layer above.
+
+    Bucketed on ``h`` (r12, VERDICT r11 #5): every span consumer keys
+    on it — the pair self-joins (long_run_overlap, span_dup_clusters),
+    the dup-hash aggregate + semi join (dup_span_coverage), and the
+    canonical-owner window (dedup_spans_text) — so they all run
+    exchange-free on the stored side (partition-local sorts remain:
+    Spark 3+ does not propagate bucket sort order into plans)."""
+    return shared_table(
+        spark,
+        sf_dir,
+        "positioned_runs",
+        lambda: _positioned_runs_build(spark, sf_dir),
+        # bump when tokens() or the run length change
+        token=f"ws-tokens-n{_RUN_N}-v1",
+        bucket_by=["h"],
+    )
 
 
 def _sig_table_sql() -> str:
@@ -655,7 +588,7 @@ def ngram_jaccard_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     insurance. Semantics + recall argument in SCALE.md and
     operators/dedup.ngram_jaccard_pairs_capped."""
     return dedup.ngram_jaccard_pairs_capped(
-        _shingles_ready(spark, sf_dir),
+        shared_shingles(spark, sf_dir),
         threshold=0.5,
         max_df=_NGRAM_CAP_DF,
     )
@@ -794,7 +727,7 @@ def contamination_flags_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("minhash_lsh_dedup", _minhash_sql(num_hashes=16, band_rows=2))
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ex = _shingles_ready(spark, sf_dir)
+    ex = shared_shingles(spark, sf_dir)
     bands = shared_minhash_bands(spark, sf_dir)
     return dedup.minhash_lsh_pairs_from(ex, bands, threshold=0.5)
 
@@ -1688,7 +1621,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-(doc, bench) counts collapse map-side. Asymmetric by
     construction — unlike dedup there is no corpus self-join anywhere.
     """
-    ex = _shingles_ready(spark, sf_dir)
+    ex = shared_shingles(spark, sf_dir)
     bench = ex.filter(F.col("doc_id") < 10).select(
         F.col("doc_id").alias("bench_id"), F.col("_sh")
     )
@@ -1838,17 +1771,10 @@ def curated_docs_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store (a doc's shingle set is a pure function of its own text, so
     # the survivors' shingles are the whole-corpus shingle asset
     # semi-joined to the surviving ids) — no re-tokenization of the
-    # cleaned text anywhere in the v2 plan. Fallback (store disabled /
-    # synthetic inputs): build the survivor shingle table once, pinned,
-    # as before.
-    base = shared_shingles(spark, sf_dir)
-    if store_backed(base):
-        ex = base.join(exact.select("doc_id"), "doc_id", "semi")
-    else:
-        ex = pin(dedup.shingle_table(
-            exact.select("doc_id", "text"), 3, "doc_id"
-        ))
-        ex.count()  # verify consumes it from two join sides
+    # cleaned text anywhere in the v2 plan
+    ex = shared_shingles(spark, sf_dir).join(
+        exact.select("doc_id"), "doc_id", "semi"
+    )
     pairs = dedup.minhash_lsh_pairs_from(ex, bands, threshold=0.8)
     losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     # broadcast the loser-id set: it is the near-dup DETECTION OUTPUT
@@ -2036,19 +1962,10 @@ def long_run_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_span_coverage / dedup_spans_text). r12: the store is bucketed
     on h, so the distinct AND the self-join run exchange-free on the
     bucketed scan — no pin needed (two column-pruned bucket scans beat
-    a cache write); the pin+count survives only on the store-disabled
-    fallback, where the two differently-aliased self-join sides would
-    otherwise each re-run the posexplode build."""
-    runs_b = shared_positioned_runs_bucketed(spark, sf_dir)
-    if runs_b is not None:
-        runs = runs_b.select("doc_id", "h").distinct()
-    else:
-        runs = pin(
-            _positioned_runs_build(spark, sf_dir)
-            .select("doc_id", "h")
-            .distinct()
-        )
-        runs.count()  # materialize before the self-join (cache race)
+    a cache write)."""
+    runs = (
+        shared_positioned_runs(spark, sf_dir).select("doc_id", "h").distinct()
+    )
     a = runs.select(F.col("doc_id").alias("id_a"), "h")
     b = runs.select(F.col("doc_id").alias("id_b"), "h")
     return (
@@ -2125,18 +2042,11 @@ def span_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import label_propagation
 
     docs = _t(spark, sf_dir, "documents")
-    runs_b = shared_positioned_runs_bucketed(spark, sf_dir)
-    if runs_b is not None:
-        # h-bucketed store: distinct + self-join are exchange-free on
-        # the bucketed scan — no pin (see long_run_overlap, r12)
-        runs = runs_b.select("doc_id", "h").distinct()
-    else:
-        runs = pin(
-            _positioned_runs_build(spark, sf_dir)
-            .select("doc_id", "h")
-            .distinct()
-        )
-        runs.count()  # two differently-aliased self-join sides
+    # h-bucketed store: distinct + self-join are exchange-free on the
+    # bucketed scan — no pin (see long_run_overlap, r12)
+    runs = (
+        shared_positioned_runs(spark, sf_dir).select("doc_id", "h").distinct()
+    )
     a = runs.select(F.col("doc_id").alias("id_a"), "h")
     b = runs.select(F.col("doc_id").alias("id_b"), "h")
     pairs = (
@@ -2622,7 +2532,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs). est is an exact k/16 rational on both engines; the error is
     computed from the two ROUNDED columns so the subtraction sees
     identical doubles."""
-    ex = _shingles_ready(spark, sf_dir)
+    ex = shared_shingles(spark, sf_dir)
     sig = shared_minhash_sigs(spark, sf_dir)  # stored asset, cheap scan
     bands = dedup.bands_from_signatures(sig, 16, 2, "doc_id")
     cand = dedup.lsh_candidate_pairs(bands)
@@ -2717,13 +2627,8 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate = F.substring(F.md5(F.col("_id").cast("string")), 1, 2) < "cd"
     sig = shared_minhash_sigs(spark, sf_dir)
     bands = dedup.bands_from_signatures(sig, 16, 2)
-    if not store_backed(sig):
-        # fallback-built signatures: pin the band table so the 16-hash
-        # signature chain runs once, not once per join side
-        bands = pin(bands)
-        bands.count()
     cand = dedup.lsh_candidate_pairs(bands.filter(~gate), bands.filter(gate))
-    ex = _shingles_ready(spark, sf_dir)
+    ex = shared_shingles(spark, sf_dir)
     return (
         dedup._verify_jaccard(cand, ex, "doc_id", threshold=0.5)
         .select(
@@ -2764,7 +2669,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits the LSH candidate budget. avg_jaccard aggregates exact-integer
     micro-units so summation order cannot flip the rounding."""
     docs = _t(spark, sf_dir, "documents")
-    ex = _shingles_ready(spark, sf_dir)
+    ex = shared_shingles(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs_from(
         ex, shared_minhash_bands(spark, sf_dir), threshold=0.5
     )
@@ -3095,7 +3000,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return dedup.shingle_containment_pairs(
         docs, n=3, threshold=0.6, id_col="doc_id",
-        shingles=_shingles_ready(spark, sf_dir),
+        shingles=shared_shingles(spark, sf_dir),
     ).orderBy("contained_id", "container_id")
 
 

@@ -35,7 +35,6 @@ from .operators import dedup
 from .operators.graph import label_propagation
 from .queries import _register, _t
 from .oracle_fragments import _NGRAM_VERIFY_SQL, _TOKS_SQL, _minhash_ctes
-from .pins import pin
 
 # ---------------------------------------------------------------------------
 # Deterministic stratified sampling
@@ -388,14 +387,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus against a label table bounded by the paired-node count
     (ids only — text never shuffles). 3 rounds bound the diameter;
     convergence is asserted in tests."""
-    from .queries_text import _shingles_ready, shared_minhash_bands
+    from .queries_text import shared_minhash_bands, shared_shingles
 
     docs = _t(spark, sf_dir, "documents")
-    # _shingles_ready (r12): store-backed scans are consumed as-is —
-    # the verify's three column-pruned reads of the stored asset beat
-    # writing it into executor cache first; the pin+count survives
-    # only on the store-disabled fallback (see queries_text)
-    ex = _shingles_ready(spark, sf_dir)
+    # the verify reads the shingle store from three sides as returned:
+    # three column-pruned scans beat writing it into executor cache
+    ex = shared_shingles(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs_from(
         ex, shared_minhash_bands(spark, sf_dir), threshold=0.5
     ).select("id_a", "id_b")

@@ -418,10 +418,10 @@ class TestPartitionedBackfill:
 
 
 class TestSharedBucketedTable:
-    """queries.shared_bucketed_table (r11): the bucketed band-store
-    primitive under the dedup candidate joins — build-once semantics,
-    exchange-free self-join on the bucket keys, and the documented
-    fallbacks."""
+    """queries.shared_table with ``bucket_by`` (r11): the bucketed
+    band-store primitive under the dedup candidate joins — build-once
+    semantics, exchange-free self-join on the bucket keys — and the one
+    return contract when the store cannot key a request."""
 
     def _get(self, spark, sf_dir, builder, calls):
         from instacart_medallion_lakehouse_spark import queries as q
@@ -430,16 +430,14 @@ class TestSharedBucketedTable:
             calls.append(1)
             return builder()
 
-        return q.shared_bucketed_table(
+        return q.shared_table(
             spark,
             sf_dir,
             "t_bands",
             counted,
-            bucket_by=["idx", "val"],
-            num_buckets=4,
-            sort_by=["idx", "val"],
             sources=("documents.parquet",),
             token="t1",
+            bucket_by=["idx", "val"],
         )
 
     def test_build_once_and_self_join_has_no_exchange(
@@ -485,27 +483,46 @@ class TestSharedBucketedTable:
                 if t.name.startswith("t_bands_"):
                     spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
-    def test_fallback_returns_none(self, spark, sf_dir, tmp_path, monkeypatch):
+    def test_fallback_returns_pinned_build(self, spark, tmp_path, monkeypatch):
+        """A request the store cannot key (store disabled by '', or
+        sources that cannot be fingerprinted) returns the builder's rows,
+        pinned and materialized, with or without ``bucket_by``."""
         from instacart_medallion_lakehouse_spark import queries as q
+        from instacart_medallion_lakehouse_spark.pins import (
+            pinned_count,
+            release_pins,
+        )
 
-        builder = lambda: spark.range(1)  # noqa: E731
-        # store disabled ('' disables; unset means a default tmp store)
-        monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", "")
-        assert (
-            q.shared_bucketed_table(
-                spark, sf_dir, "t_x", builder, bucket_by=["id"]
-            )
-            is None
-        )
-        # unfingerprintable sources
-        monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path))
-        assert (
-            q.shared_bucketed_table(
-                spark,
-                str(tmp_path / "nope"),
-                "t_x",
-                builder,
-                bucket_by=["id"],
-            )
-            is None
-        )
+        src = tmp_path / "src"
+        src.mkdir()
+        (src / "documents.parquet").write_bytes(b"fingerprint me")
+        cases = [
+            ("", str(src)),  # store disabled ('' disables; unset = default)
+            (str(tmp_path / "store"), str(tmp_path / "nope")),  # no sources
+        ]
+        try:
+            for store, sources_dir in cases:
+                monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", store)
+                for bucket_by in (None, ["id"]):
+                    calls: list[int] = []
+
+                    def builder():
+                        calls.append(1)
+                        return spark.range(5)
+
+                    for n in (1, 2):
+                        before = pinned_count()
+                        got = q.shared_table(
+                            spark, sources_dir, "t_x", builder,
+                            bucket_by=bucket_by,
+                        )
+                        assert calls == [1] * n  # one build per request
+                        assert pinned_count() == before + 1
+                        assert got.is_cached
+                        assert sorted(r.id for r in got.collect()) == list(
+                            range(5)
+                        )
+            assert not any(t.startswith("t_x_") for t in q._BUCKETED_TABLES)
+            assert not (tmp_path / "store").exists()
+        finally:
+            release_pins()

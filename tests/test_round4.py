@@ -161,49 +161,3 @@ class TestHashShuffledExport:
         assert {(r.doc_id, r.pos, r.shard) for r in rows} == {
             (r.doc_id, r.pos, r.shard) for r in again
         }
-
-
-class TestStoreBacked:
-    """store_backed counts a scan only when its files sit under the store
-    directory or a registered bucketed table's own warehouse location."""
-
-    def _source(self, tmp_path):
-        src = tmp_path / "src"
-        src.mkdir()
-        (src / "documents.parquet").write_bytes(b"fingerprint me")
-        return str(src)
-
-    def test_sibling_of_store_dir_is_not_store_backed(
-        self, spark, tmp_path, monkeypatch
-    ):
-        store = tmp_path / "store"
-        monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(store))
-        served = q.shared_table(
-            spark, self._source(tmp_path), "t_backed", lambda: spark.range(3)
-        )
-        assert q.store_backed(served)
-        sibling = f"{store}_old/t_backed"
-        spark.range(3).write.parquet(sibling)
-        assert not q.store_backed(spark.read.parquet(sibling))
-
-    def test_table_name_outside_warehouse_is_not_store_backed(
-        self, spark, tmp_path, monkeypatch
-    ):
-        monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path / "store"))
-        try:
-            served = q.shared_bucketed_table(
-                spark,
-                self._source(tmp_path),
-                "t_bucketed",
-                lambda: spark.range(8),
-                bucket_by=["id"],
-                num_buckets=2,
-            )
-            assert q.store_backed(served)
-            (tbl,) = [t for t in q._BUCKETED_TABLES if t.startswith("t_bucketed_")]
-            # same directory name as the catalog table, different location
-            elsewhere = str(tmp_path / "copies" / tbl)
-            spark.range(3).write.parquet(elsewhere)
-            assert not q.store_backed(spark.read.parquet(elsewhere))
-        finally:
-            q.clear_shared_store()
