@@ -9,7 +9,8 @@ that makes the dedup/text operators a PIPELINE rather than a toolbox:
            clustered (MinHash-LSH) keeping one canonical doc per
            cluster, plus a per-stage attrition report
 
-Every stage is DataFrame-native and idempotent-overwrite, mirroring
+Every stage is DataFrame-native, and each persisted table commits as a
+new version through quality.write_with_observed_gates, mirroring
 pipeline.py's bronze→silver→gold contract. At 100 TB each stage is an
 embarrassingly-parallel scan plus the LSH candidate join; nothing here
 collects documents to the driver.
@@ -32,7 +33,6 @@ from .functions.text import (
     stopword_hits,
     tokens,
 )
-from .io import read_table, write_table
 from .operators.dedup import minhash_lsh_pairs
 from .pins import pin
 
@@ -201,10 +201,13 @@ def run_curation(
     res.n_raw = raw.count()
     quality.assert_row_count_nonzero(res.n_raw, "curation.raw")
 
-    scored = score_documents(raw)
-    write_table(scored, f"{out_dir}/silver/documents_scored")
-    scored = read_table(spark, f"{out_dir}/silver/documents_scored")
-    res.n_scored = scored.count()
+    w = quality.write_with_observed_gates(
+        score_documents(raw),
+        f"{out_dir}/silver/documents_scored",
+        require_nonzero=False,
+        layer="curation.scored",
+    )
+    res.n_scored, scored = w["n_rows"], w["table"]
     quality.reconcile_row_counts(res.n_raw, res.n_scored, 0.0, "documents_scored")
 
     passed = scored.filter(F.col("quality_score") >= min_quality)
@@ -213,11 +216,14 @@ def run_curation(
     exact = drop_exact_duplicates(passed)
     res.n_after_exact_dedup = exact.count()
 
-    curated = drop_near_duplicates(exact, threshold=near_dup_threshold)
-    write_table(curated, f"{out_dir}/gold/documents_curated")
-    curated = read_table(spark, f"{out_dir}/gold/documents_curated")
-    res.n_after_near_dedup = curated.count()
-    quality.assert_row_count_nonzero(res.n_after_near_dedup, "curation.curated")
+    # the non-empty gate runs before publish: an empty corpus never
+    # becomes the latest curated version
+    w = quality.write_with_observed_gates(
+        drop_near_duplicates(exact, threshold=near_dup_threshold),
+        f"{out_dir}/gold/documents_curated",
+        layer="curation.curated",
+    )
+    res.n_after_near_dedup = w["n_rows"]
 
     res.stage_counts = {
         "raw": res.n_raw,
@@ -277,77 +283,79 @@ def run_training_assembly(
     # attrition count and the corpus join (ids are tiny — the cacheable
     # asset at 100 TB; the text never materializes twice)
     curated_ids = curated_docs_v2(spark, sf_dir).select("doc_id").cache()
-    res.n_curated = curated_ids.count()
-    corpus = raw.join(curated_ids, "doc_id")
+    try:
+        res.n_curated = curated_ids.count()
+        corpus = raw.join(curated_ids, "doc_id")
 
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    split = (
-        F.when(bucket < "cd", "train")
-        .when(bucket < "e6", "val")
-        .otherwise("test")
-    )
-    mix_thr = F.coalesce(
-        *[F.when(F.col("lang") == s, F.lit(t)) for s, t in _MIX.items()],
-        F.lit(_MIX_DEFAULT),
-    )
-    # the mixture gate hashes INDEPENDENTLY of the split bucket: reusing
-    # ``bucket`` would condition the keep decision on bucket < 'cd'
-    # (train), inflating every _MIX keep rate by ~1/0.80 and making any
-    # threshold >= 'cd' indistinguishable from keep-all — the _MIX
-    # thresholds are calibrated over the FULL md5 space (queries_train)
-    mix_bucket = F.substring(
-        F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))), 1, 2
-    )
-    kept = (split != "train") | (mix_bucket <= mix_thr)
+        bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+        split = (
+            F.when(bucket < "cd", "train")
+            .when(bucket < "e6", "val")
+            .otherwise("test")
+        )
+        mix_thr = F.coalesce(
+            *[F.when(F.col("lang") == s, F.lit(t)) for s, t in _MIX.items()],
+            F.lit(_MIX_DEFAULT),
+        )
+        # the mixture gate hashes INDEPENDENTLY of the split bucket: reusing
+        # ``bucket`` would condition the keep decision on bucket < 'cd'
+        # (train), inflating every _MIX keep rate by ~1/0.80 and making any
+        # threshold >= 'cd' indistinguishable from keep-all — the _MIX
+        # thresholds are calibrated over the FULL md5 space (queries_train)
+        mix_bucket = F.substring(
+            F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))), 1, 2
+        )
+        kept = (split != "train") | (mix_bucket <= mix_thr)
 
-    assembled = corpus.select(
-        "doc_id",
-        "lang",
-        "source",
-        split.alias("split"),
-        F.size(tokens(F.col("text"))).alias("n_tok"),
-    ).filter(kept)
+        assembled = corpus.select(
+            "doc_id",
+            "lang",
+            "source",
+            split.alias("split"),
+            F.size(tokens(F.col("text"))).alias("n_tok"),
+        ).filter(kept)
 
-    w = (
-        Window.partitionBy("split", F.col("doc_id") % pack_shards)
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    packed = assembled.withColumn(
-        "pack_id",
-        F.floor(
-            (F.sum("n_tok").over(w) - F.col("n_tok"))
-            * F.lit(1.0)
-            / F.lit(pack_budget)
-        ),
-    )
+        w = (
+            Window.partitionBy("split", F.col("doc_id") % pack_shards)
+            .orderBy("doc_id")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        packed = assembled.withColumn(
+            "pack_id",
+            F.floor(
+                (F.sum("n_tok").over(w) - F.col("n_tok"))
+                * F.lit(1.0)
+                / F.lit(pack_budget)
+            ),
+        )
 
-    # row count observed on the commit's own write pass; the non-empty
-    # gate runs INSIDE the commit protocol (post-write, pre-publish), so
-    # a 0-row assembly never becomes the latest version
-    w = quality.write_with_observed_gates(
-        packed,
-        f"{out_dir}/training_set",
-        layer="assembly.training_set",
-        partition_by=["split"],
-        versioned=True,
-    )
-    res.version, n_assembled, committed = w["version"], w["n_rows"], w["table"]
-    res.split_counts = {
-        r["split"]: r["n"]
-        for r in committed.groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    res.n_train = res.split_counts.get("train", 0)
-    res.n_train_kept = res.n_train  # train rows in the snapshot passed the gate
-    res.n_packs = (
-        committed.filter(F.col("split") == "train")
-        .select("pack_id", (F.col("doc_id") % pack_shards).alias("shard"))
-        .distinct()
-        .count()
-    )
-    curated_ids.unpersist()
+        # row count observed on the commit's own write pass; the non-empty
+        # gate runs INSIDE the commit protocol (post-write, pre-publish), so
+        # a 0-row assembly never becomes the latest version
+        w = quality.write_with_observed_gates(
+            packed,
+            f"{out_dir}/training_set",
+            layer="assembly.training_set",
+            partition_by=["split"],
+        )
+        res.version, n_assembled, committed = w["version"], w["n_rows"], w["table"]
+        res.split_counts = {
+            r["split"]: r["n"]
+            for r in committed.groupBy("split")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        res.n_train = res.split_counts.get("train", 0)
+        res.n_train_kept = res.n_train  # train rows in the snapshot passed the gate
+        res.n_packs = (
+            committed.filter(F.col("split") == "train")
+            .select("pack_id", (F.col("doc_id") % pack_shards).alias("shard"))
+            .distinct()
+            .count()
+        )
+    finally:
+        # released on a gate failure too
+        curated_ids.unpersist()
     # reconcile what the commit pass WROTE against what the snapshot
     # actually SERVES — a partial/duplicated snapshot fails here
     quality.reconcile_row_counts(

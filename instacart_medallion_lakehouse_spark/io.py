@@ -1,4 +1,4 @@
-"""Table IO: schema-enforced CSV ingest, layer reads/writes, Delta fallback.
+"""Table IO: schema-enforced CSV ingest, plain-parquet reads/writes.
 
 Reference parity (SURVEY.md §2.1):
 - S1 schema-enforced CSV scan  — reference notebooks/01_bronze_ingest.py:81-86
@@ -6,12 +6,12 @@ Reference parity (SURVEY.md §2.1):
 - S3 idempotent overwrite sink — 01_bronze_ingest.py:96-102
 - S4 partitioned sink          — 03_gold_metrics.py:96
 
-The reference writes Delta on Databricks. This environment has no Delta
-runtime, so ``TABLE_FORMAT`` degrades to Parquet: the operator surface
-(overwrite semantics, partitionBy, schema-on-read) is identical; ACID
-commit/time-travel degrade gracefully. On a cluster with delta-spark
-installed, set SPARK_GRAFT_TABLE_FORMAT=delta and everything else is
-unchanged.
+The reference writes every layer as Delta on Databricks. Here the
+medallion layers commit through ``versioned.py`` instead (atomic
+publish and time travel on parquet, via
+``quality.write_with_observed_gates``); ``write_table`` and
+``read_table`` are the plain-parquet overwrite sink and scan, with the
+clustering, z-order and partitioning layouts.
 """
 
 from __future__ import annotations
@@ -21,20 +21,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-TABLE_FORMAT = os.environ.get(
-    "SPARK_GRAFT_TABLE_FORMAT", "delta" if _delta_available() else "parquet"
-)
 
 
 def read_csv_enforced(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -55,9 +41,7 @@ def read_csv_enforced(spark: SparkSession, path: str, schema: StructType) -> Dat
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """S2: load a layer table (Delta if available, else Parquet)."""
-    if TABLE_FORMAT == "delta":
-        return spark.read.format("delta").load(path)
+    """S2: load a parquet table."""
     return spark.read.parquet(path)
 
 
@@ -70,13 +54,15 @@ def write_table(
     zorder_by: tuple[str, str] | None = None,
     zorder_files: int | None = None,
 ) -> None:
-    """S3/S4: idempotent full-refresh write, optionally disk-partitioned.
+    """S3/S4: idempotent full-refresh parquet write, optionally
+    disk-partitioned.
 
-    ``overwriteSchema`` mirrors the reference's overwrite-style schema
-    evolution (02_silver_transform.py:94). Disk partitioning gives static
-    + dynamic partition pruning to every downstream reader — at 100 TB a
-    low-cardinality partition column (like the reference's ``eval_set``)
-    is the cheapest scan-elimination available.
+    An overwrite replaces the schema too, the reference's
+    overwrite-style schema evolution (02_silver_transform.py:94). Disk
+    partitioning gives static + dynamic partition pruning to every
+    downstream reader — at 100 TB a low-cardinality partition column
+    (like the reference's ``eval_set``) is the cheapest scan-elimination
+    available.
 
     ``cluster_by`` additionally range-partitions and sorts rows by the
     given columns before writing, so parquet row-group min/max stats
@@ -140,12 +126,10 @@ def write_table(
         )
     if cluster_by:
         df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
-    writer = df.write.format(TABLE_FORMAT).mode(mode)
-    if TABLE_FORMAT == "delta":
-        writer = writer.option("overwriteSchema", "true")
+    writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    writer.parquet(path)
 
 
 def zorder_key(a, b):

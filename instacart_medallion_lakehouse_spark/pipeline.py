@@ -7,7 +7,7 @@ library function (01_bronze_ingest.py / 02_silver_transform.py /
 Layer contract (reference parity, SURVEY.md §1.1/§3):
 - Bronze: raw scan + lineage metadata columns (_ingested_at,
   _source_file, _bronze_version — 01_bronze_ingest.py:89-93), non-zero
-  row gate, idempotent overwrite.
+  row gate.
 - Silver: deterministic PK dedup (the reference's nondeterministic
   monotonically_increasing_id tie-break FIXED per SURVEY.md §4.3.1),
   bronze-metadata drop, quality gates (null rate / duplicate rate /
@@ -16,9 +16,16 @@ Layer contract (reference parity, SURVEY.md §1.1/§3):
   disk-partitioned for downstream partition pruning
   (03_gold_metrics.py:96).
 
-Every write is mode=overwrite (+ overwriteSchema under Delta): the
-whole pipeline re-runs from any point with identical results —
-exactly the reference's re-runnability contract (01:95-102).
+Every table commits as the next version of a versioned table
+(versioned.py manifest protocol, through
+quality.write_with_observed_gates): the non-empty and null-rate gates
+run before the manifest publish, so a failing gate leaves the previous
+version readable, and readers never see a half-written table — the
+atomic overwrite the reference gets from Delta (01:95-102). Silver's
+duplicate, referential-integrity and reconcile gates read the committed
+version, so they still run after its publish. Re-runs give identical
+results and append history, reachable by time travel;
+``versioned.vacuum`` reclaims it.
 
 Scale notes: each layer is a separate job chain; silver dedup is the
 only full-fact shuffle (window on the PK); gold reuses one cached
@@ -120,10 +127,7 @@ def run_bronze(
             }
         )
         # the non-empty gate is observed on the write pass itself — no
-        # post-write re-scan job per table. The read-back goes through
-        # the format-aware reader: under Delta an overwrite only
-        # logically removes the previous files, so a plain parquet read
-        # of the directory would return old+new rows on every re-run
+        # post-write re-scan job per table
         w = quality.write_with_observed_gates(
             df, f"{out_dir}/bronze/{name}", layer=f"bronze.{name}"
         )
@@ -217,51 +221,42 @@ def run_gold(
     silver: dict[str, DataFrame],
     out_dir: str,
     result: PipelineResult,
-    versioned_gold: bool = False,
 ) -> dict[str, DataFrame]:
-    """Silver → gold: star marts, fact disk-partitioned, all overwrite.
-
-    ``versioned_gold=True`` commits each mart as a new snapshot version
-    (versioned.py manifest protocol) instead of overwriting in place:
-    re-runs append to history, readers of the previous version are
-    never disturbed mid-write, and any earlier run stays reachable by
-    time travel — the Delta semantics the reference gets from
-    Databricks (01_bronze_ingest.py:96-102), on plain parquet.
-    """
+    """Silver → gold: star marts, fact disk-partitioned, each committed
+    as a new version of its table."""
     li = silver["lineitem"].cache()
     orders = silver["orders"].cache()
-
-    gold: dict[str, tuple[DataFrame, list[str] | None]] = {
-        "fct_lineitem": (marts.fct_lineitem(li), ["l_returnflag"]),
-        "dim_customers": (marts.dim_customers(li, orders), None),
-        "dim_parts": (marts.dim_parts(li, orders, silver["part"]), None),
-        "mart_region_performance": (
-            marts.region_performance(
-                li, orders, silver["customer"], silver["nation"], silver["region"]
+    try:
+        gold: dict[str, tuple[DataFrame, list[str] | None]] = {
+            "fct_lineitem": (marts.fct_lineitem(li), ["l_returnflag"]),
+            "dim_customers": (marts.dim_customers(li, orders), None),
+            "dim_parts": (marts.dim_parts(li, orders, silver["part"]), None),
+            "mart_region_performance": (
+                marts.region_performance(
+                    li, orders, silver["customer"], silver["nation"], silver["region"]
+                ),
+                None,
             ),
-            None,
-        ),
-        "mart_return_velocity": (marts.return_velocity(li, orders), None),
-    }
-    out: dict[str, DataFrame] = {}
-    for name, (df, part_by) in gold.items():
-        # versioned: the non-empty gate runs INSIDE the commit protocol
-        # (after the data write, before the manifest publish), so a 0-row
-        # mart leaves an unpublished orphan and raises — it never becomes
-        # the latest readable version
-        w = quality.write_with_observed_gates(
-            df,
-            f"{out_dir}/gold/{name}",
-            layer=f"gold.{name}",
-            partition_by=part_by,
-            versioned=versioned_gold,
-        )
-        n = w["n_rows"]
-        quality.log_layer_stats("gold", name, n)
-        result.gold_counts[name] = n
-        out[name] = w["table"]
-    li.unpersist()
-    orders.unpersist()
+            "mart_return_velocity": (marts.return_velocity(li, orders), None),
+        }
+        out: dict[str, DataFrame] = {}
+        for name, (df, part_by) in gold.items():
+            # the non-empty gate runs before the manifest publish, so a
+            # 0-row mart raises and never becomes the latest version
+            w = quality.write_with_observed_gates(
+                df,
+                f"{out_dir}/gold/{name}",
+                layer=f"gold.{name}",
+                partition_by=part_by,
+            )
+            n = w["n_rows"]
+            quality.log_layer_stats("gold", name, n)
+            result.gold_counts[name] = n
+            out[name] = w["table"]
+    finally:
+        # a gate failure must not leave the silver frames cached
+        li.unpersist()
+        orders.unpersist()
     return out
 
 
@@ -270,14 +265,12 @@ def run_medallion(
     sf_dir: str,
     out_dir: str,
     config_path: str | None = None,
-    versioned_gold: bool = False,
+    versioned_gold: bool = True,  # ignored; a benchmark change removes it
 ) -> PipelineResult:
     """Full bronze→silver→gold run; raises DataQualityError on gate breach.
 
     ``config_path`` points at a pipeline_config.yml (reference
     configs/pipeline_config.yml shape); omitted → library defaults.
-    ``versioned_gold`` snapshots each gold mart through the versioned
-    commit protocol (see run_gold).
     """
     thresholds = (
         quality.GateThresholds.from_yaml(config_path)
@@ -287,5 +280,5 @@ def run_medallion(
     result = PipelineResult()
     bronze = run_bronze(spark, sf_dir, out_dir, result)
     silver = run_silver(spark, bronze, out_dir, result, thresholds=thresholds)
-    run_gold(spark, silver, out_dir, result, versioned_gold=versioned_gold)
+    run_gold(spark, silver, out_dir, result)
     return result

@@ -24,7 +24,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .io import read_table, write_table
 from .logging_util import get_logger
 from .versioned import read_versioned, write_versioned
 
@@ -217,10 +216,9 @@ def write_with_observed_gates(
     require_nonzero: bool = True,
     layer: str = "",
     partition_by: list[str] | None = None,
-    versioned: bool = False,
 ) -> dict:
-    """The one gated table write: every medallion layer and the
-    training-set commit go through here.
+    """The one gated table commit: every medallion layer, both curation
+    tables and the training set go through here.
 
     The gate aggregates (row count, one null count per gated column)
     ride the write job itself as a ``df.observe`` observation, so the
@@ -228,10 +226,8 @@ def write_with_observed_gates(
     separate-job gates above (the reference's utils/quality.py shape)
     re-scan the table once per gate.
 
-    ``versioned=False`` writes through ``io.write_table`` (honouring
-    ``io.TABLE_FORMAT``) and enforces the gates after the action: a
-    failing gate raises with the data landed. ``versioned=True``
-    commits through ``versioned.write_versioned`` with the gates in its
+    The table at ``path`` is a versioned table: the write commits
+    through ``versioned.write_versioned`` with the gates in its
     ``validate`` hook — after the data write, before the manifest
     publish — so a failing gate leaves an unpublished orphan and
     readers keep the previous version.
@@ -241,9 +237,9 @@ def write_with_observed_gates(
     threshold; the 6-dp form is for the message only.
 
     Returns ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>":
-    float, "table": DataFrame}`` plus ``"version"`` when versioned;
-    ``table`` reads back what was written (the committed version when
-    versioned, via the format-aware reader otherwise).
+    float, "version": int, "table": DataFrame}``; ``table`` reads back
+    the committed version with the schema its manifest records (no
+    inference job).
     """
     from pyspark.sql import Observation
 
@@ -276,14 +272,8 @@ def write_with_observed_gates(
                     f"exceeds threshold {threshold}"
                 )
 
-    spark = df.sparkSession
-    if versioned:
-        out["version"] = write_versioned(
-            observed, path, partition_by=partition_by, validate=enforce
-        )
-        out["table"] = read_versioned(spark, path, out["version"])
-    else:
-        write_table(observed, path, partition_by=partition_by)
-        enforce()
-        out["table"] = read_table(spark, path)
+    out["version"] = write_versioned(
+        observed, path, partition_by=partition_by, validate=enforce
+    )
+    out["table"] = read_versioned(df.sparkSession, path, out["version"])
     return out

@@ -30,8 +30,7 @@ spanned = [
     *[getattr(quality, g) for g in instrument.QUALITY_GATES],
     versioned.write_versioned, versioned.read_versioned,
     versioned.upsert_versioned, q.shared_table, q.shared_bucketed_table,
-    # the gated write reaches io and versioned through these aliases
-    quality.write_table, quality.read_table,
+    # the gated write reaches versioned through these aliases
     quality.write_versioned, quality.read_versioned,
 ]
 missing = [f.__name__ for f in spanned if not hasattr(f, "__wrapped__")]

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from instacart_medallion_lakehouse_spark import curation
+from instacart_medallion_lakehouse_spark.versioned import read_versioned
 
 
 @pytest.fixture(scope="module")
@@ -30,12 +31,12 @@ class TestCuration:
 
     def test_curated_meets_quality_floor(self, spark, result):
         out, _ = result
-        curated = spark.read.parquet(str(out / "gold" / "documents_curated"))
+        curated = read_versioned(spark, str(out / "gold" / "documents_curated"))
         assert curated.filter(F.col("quality_score") < 0.5).count() == 0
 
     def test_no_exact_duplicates_survive(self, spark, result):
         out, _ = result
-        curated = spark.read.parquet(str(out / "gold" / "documents_curated"))
+        curated = read_versioned(spark, str(out / "gold" / "documents_curated"))
         assert (
             curated.count()
             == curated.select("fingerprint").distinct().count()
@@ -47,7 +48,7 @@ class TestCuration:
             minhash_lsh_pairs,
         )
 
-        curated = spark.read.parquet(str(out / "gold" / "documents_curated"))
+        curated = read_versioned(spark, str(out / "gold" / "documents_curated"))
         assert minhash_lsh_pairs(curated, threshold=0.8).count() == 0
 
     def test_rerun_is_idempotent(self, spark, sf_dir, result):

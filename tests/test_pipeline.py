@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from instacart_medallion_lakehouse_spark import pipeline
+from instacart_medallion_lakehouse_spark import pipeline, versioned
 from instacart_medallion_lakehouse_spark.quality import DataQualityError
 
 
@@ -48,16 +48,17 @@ class TestMedallion:
         }
         assert all(n > 0 for n in res.gold_counts.values())
         # fact table is disk-partitioned for partition pruning
+        fct = out / "gold" / "fct_lineitem"
         parts = [
             p.name
-            for p in (out / "gold" / "fct_lineitem").iterdir()
+            for p in (fct / versioned.history(str(fct))[-1]["data"]).iterdir()
             if p.name.startswith("l_returnflag=")
         ]
         assert len(parts) >= 2
 
     def test_dim_grain(self, spark, sf_dir, result):
         out, _ = result
-        dim = spark.read.parquet(str(out / "gold" / "dim_customers"))
+        dim = versioned.read_versioned(spark, str(out / "gold" / "dim_customers"))
         custs = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
         # one row per customer that has orders; grain is unique
         assert dim.count() == dim.select("o_custkey").distinct().count()

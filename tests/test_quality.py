@@ -9,6 +9,7 @@ import pytest
 
 from instacart_medallion_lakehouse_spark import quality
 from instacart_medallion_lakehouse_spark.quality import DataQualityError
+from instacart_medallion_lakehouse_spark.versioned import list_versions, read_versioned
 
 
 class TestReconcileRowCounts:
@@ -102,7 +103,7 @@ class TestObservedGates:
         want_nulls = df.filter(F.col("o_custkey").isNull()).count()
         assert metrics["nulls_o_custkey"] == want_nulls
         # the write itself landed intact
-        assert spark.read.parquet(out).count() == metrics["n_rows"]
+        assert read_versioned(spark, out).count() == metrics["n_rows"]
 
     def test_threshold_breach_raises_after_write(self, spark, tmp_path):
         from instacart_medallion_lakehouse_spark import quality
@@ -117,9 +118,9 @@ class TestObservedGates:
             quality.write_with_observed_gates(
                 df, out, null_rate_columns={"v": 0.5}, layer="test"
             )
-        # data landed (gate fails AFTER the action; promotion is the
-        # caller's versioned-commit step)
-        assert spark.read.parquet(out).count() == 3
+        # the gate fails after the data write but before the manifest
+        # publish: nothing becomes readable
+        assert list_versions(out) == []
 
     def test_empty_write_rejected(self, spark, sf_dir, tmp_path):
         from instacart_medallion_lakehouse_spark import quality

@@ -54,9 +54,10 @@ class TestGateConditionalCommit:
         assert seen["n"] == region.count()
 
     def test_empty_gold_mart_not_promoted(self, spark, sf_dir, tmp_path):
-        # run_gold(versioned_gold=True) over a silver dict whose lineitem
-        # is empty: the 0-row fct mart must raise AND leave no readable
-        # version behind
+        # run_gold over a silver dict whose lineitem is empty: the 0-row
+        # fct mart must raise AND leave no readable version behind
+        from pyspark import StorageLevel
+
         res = pipeline.PipelineResult()
         silver = {
             name: spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -64,10 +65,11 @@ class TestGateConditionalCommit:
         }
         silver["lineitem"] = silver["lineitem"].limit(0)
         with pytest.raises(DataQualityError):
-            pipeline.run_gold(
-                spark, silver, str(tmp_path), res, versioned_gold=True
-            )
+            pipeline.run_gold(spark, silver, str(tmp_path), res)
         assert V.list_versions(str(tmp_path / "gold" / "fct_lineitem")) == []
+        # the frames run_gold cached are released on the failure path too
+        for name in ("lineitem", "orders"):
+            assert silver[name].storageLevel == StorageLevel.NONE, name
 
 
 class TestSilverGates:

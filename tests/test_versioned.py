@@ -104,8 +104,8 @@ class TestVersionedGoldPipeline:
         from instacart_medallion_lakehouse_spark import versioned as V2
 
         out = str(tmp_path / "lake")
-        r1 = run_medallion(spark, sf_dir, out, versioned_gold=True)
-        r2 = run_medallion(spark, sf_dir, out, versioned_gold=True)
+        r1 = run_medallion(spark, sf_dir, out)
+        r2 = run_medallion(spark, sf_dir, out)
         mart = f"{out}/gold/mart_region_performance"
         assert [e["version"] for e in V2.history(mart)] == [1, 2]
         v1 = V2.read_versioned(spark, mart, version=1)
