@@ -206,9 +206,9 @@ def run_curation(
         f"{out_dir}/silver/documents_scored",
         require_nonzero=False,
         layer="curation.scored",
+        reconcile=(res.n_raw, 0.0),
     )
     res.n_scored, scored = w["n_rows"], w["table"]
-    quality.reconcile_row_counts(res.n_raw, res.n_scored, 0.0, "documents_scored")
 
     passed = scored.filter(F.col("quality_score") >= min_quality)
     res.n_quality_pass = passed.count()

@@ -181,56 +181,3 @@ def ima_adpcm_decode(
         idx = max(0, min(88, idx + IMA_INDEX_TABLE[n & 7]))
         out.append(pred)
     return out
-
-
-def encode_mp3_stub(
-    bitrate_index: int,
-    rate_index: int,
-    n_frames: int,
-    id3_size: int = 0,
-) -> bytes:
-    """Fabricate a structurally-valid MPEG-1 Layer III stream: an
-    optional ID3v2 prefix and ``n_frames`` identical frames (correct
-    header + zero audio bytes to the exact frame length). Used by
-    tests; the Spark fixture (multimodal.with_mp3_media) builds the
-    same bytes JVM-side from doc_id arithmetic."""
-    kbps = _MP3_BITRATES[bitrate_index]
-    sr = _MP3_RATES[rate_index]
-    flen = 144_000 * kbps // sr
-    hdr = bytes(
-        [0xFF, 0xFB, (bitrate_index << 4) | (rate_index << 2), 0x00]
-    )
-    frame = hdr + bytes(flen - 4)
-    id3 = b""
-    if id3_size:
-        if id3_size >= 1 << 28:
-            raise ValueError("mp3: id3 size exceeds syncsafe range")
-        ss = bytes(
-            [(id3_size >> s) & 0x7F for s in (21, 14, 7, 0)]
-        )
-        id3 = b"ID3\x03\x00\x00" + ss + bytes(id3_size)
-    return id3 + frame * n_frames
-
-
-def encode_flac_stub(
-    sample_rate: int,
-    channels: int,
-    bits_per_sample: int,
-    total_samples: int,
-) -> bytes:
-    """Fabricate 'fLaC' + a last-block STREAMINFO with the given
-    fields (zero frame-size bounds and MD5 — metadata-only stub, no
-    audio frames)."""
-    packed = (
-        (sample_rate << 44)
-        | ((channels - 1) << 41)
-        | ((bits_per_sample - 1) << 36)
-        | (total_samples & ((1 << 36) - 1))
-    )
-    si = (
-        struct.pack(">HH", 4096, 4096)
-        + b"\x00" * 6  # min/max frame size unknown
-        + packed.to_bytes(8, "big")
-        + b"\x00" * 16  # md5 unset
-    )
-    return b"fLaC" + bytes([0x80]) + len(si).to_bytes(3, "big") + si

@@ -141,40 +141,3 @@ def iter_y4m_frames(payload: bytes, step: int = 1) -> Iterator[np.ndarray]:
             cr = np.repeat(np.repeat(cr, 2, axis=0), 2, axis=1)
         yield _ycbcr_to_rgb(y, cb, cr)
         pos = fnl + 1 + fb
-
-
-def encode_y4m(
-    frames: list[np.ndarray],
-    fps: tuple[int, int] = (25, 1),
-    colorspace: str = "444",
-) -> bytes:
-    """HxWx3 uint8 frames -> a Y4M stream (C444 exact through the
-    colorspace rounding, or C420jpeg with 2x2 box-averaged chroma)."""
-    if not frames:
-        raise ValueError("y4m: no frames")
-    h, w = frames[0].shape[:2]
-    if colorspace not in ("444", "420jpeg"):
-        raise ValueError("y4m: encode supports C444 / C420jpeg")
-    if colorspace == "420jpeg" and (w % 2 or h % 2):
-        raise ValueError("y4m: C420 requires even dimensions")
-    out = bytearray(
-        b"YUV4MPEG2 W%d H%d F%d:%d Ip A1:1 C%s\n"
-        % (w, h, fps[0], fps[1], colorspace.encode())
-    )
-    for f in frames:
-        f = np.asarray(f, dtype=np.float64)
-        if f.shape[:2] != (h, w):
-            raise ValueError("y4m: inconsistent frame dimensions")
-        r, g, b = f[:, :, 0], f[:, :, 1], f[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        if colorspace == "420jpeg":
-            cb = 0.25 * (cb[0::2, 0::2] + cb[1::2, 0::2]
-                         + cb[0::2, 1::2] + cb[1::2, 1::2])
-            cr = 0.25 * (cr[0::2, 0::2] + cr[1::2, 0::2]
-                         + cr[0::2, 1::2] + cr[1::2, 1::2])
-        out += b"FRAME\n"
-        for plane in (y, cb, cr):
-            out += np.clip(plane + 0.5, 0, 255).astype(np.uint8).tobytes()
-    return bytes(out)

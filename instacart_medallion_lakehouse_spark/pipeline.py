@@ -22,8 +22,14 @@ quality.write_with_observed_gates): the non-empty and null-rate gates
 run before the manifest publish, so a failing gate leaves the previous
 version readable, and readers never see a half-written table — the
 atomic overwrite the reference gets from Delta (01:95-102). Silver's
-duplicate, referential-integrity and reconcile gates read the committed
-version, so they still run after its publish. Re-runs give identical
+reconcile gate runs there too. Silver's seven duplicate-rate and four
+referential-integrity gates read the committed tables and run together
+as ONE Spark action (``quality.run_gates``) once all seven silver
+tables have committed: a breach raises with all seven new silver
+versions published (and before gold runs). Gate precedence is as
+before: when a pre-publish gate of table k trips, the duplicate
+gates of tables 1..k (k's on its unpublished frame) run first, in one
+action, and raise if any breaches. Re-runs give identical
 results and append history, reachable by time travel;
 ``versioned.vacuum`` reclaims it.
 
@@ -147,6 +153,25 @@ def run_silver(
 ) -> dict[str, DataFrame]:
     """Bronze → silver: deterministic dedup, drop lineage cols, gate, write."""
     out: dict[str, DataFrame] = {}
+    gates: list[quality.Gate] = []
+
+    def duplicate_gate(name: str, df: DataFrame) -> list[quality.Gate]:
+        keys = _SILVER_KEYS[name]
+        if keys is not None:
+            return [
+                quality.duplicate_rate_gate(df, keys, thresholds.duplicate_rate, "silver")
+            ]
+        if name in _LENIENT_DUP_KEYS:
+            return [
+                quality.duplicate_rate_gate(
+                    df,
+                    _LENIENT_DUP_KEYS[name],
+                    thresholds.duplicate_rate_lenient,
+                    "silver",
+                )
+            ]
+        return []
+
     for name, keys in _SILVER_KEYS.items():
         df = bronze[name]
         if keys is not None:
@@ -178,41 +203,41 @@ def run_silver(
                 df, keys=keys, order_by=[F.col("_ingested_at"), content_hash]
             )
         cleaned = df.drop("_ingested_at", "_source_file", "_bronze_version")
-        # null-rate gates ride the write-pass observation with the row
-        # count — zero extra scans per gated column
-        w = quality.write_with_observed_gates(
-            cleaned,
-            f"{out_dir}/silver/{name}",
-            null_rate_columns={
-                c: thresholds.null_rate_default
-                for c in _NULL_GATE_COLS.get(name, [])
-            },
-            require_nonzero=False,
-            layer=f"silver.{name}",
-        )
-        n, silver_df = w["n_rows"], w["table"]
-        if keys is not None:
-            quality.check_duplicate_rate(
-                silver_df, keys, thresholds.duplicate_rate, "silver"
+        # null-rate and reconcile gates ride the write-pass observation
+        # with the row count and run before publish — zero extra scans
+        try:
+            w = quality.write_with_observed_gates(
+                cleaned,
+                f"{out_dir}/silver/{name}",
+                null_rate_columns={
+                    c: thresholds.null_rate_default
+                    for c in _NULL_GATE_COLS.get(name, [])
+                },
+                require_nonzero=False,
+                layer=f"silver.{name}",
+                reconcile=(result.bronze_counts[name], thresholds.reconcile_drift),
             )
-        elif name in _LENIENT_DUP_KEYS:
-            quality.check_duplicate_rate(
-                silver_df,
-                _LENIENT_DUP_KEYS[name],
-                thresholds.duplicate_rate_lenient,
-                "silver",
-            )
-        quality.reconcile_row_counts(
-            result.bronze_counts[name], n, thresholds.reconcile_drift, name
-        )
-        quality.log_layer_stats("silver", name, n)
-        result.silver_counts[name] = n
-        out[name] = silver_df
+        except quality.DataQualityError:
+            # a table's duplicate gate precedes its reconcile gate, and
+            # earlier tables' gates precede both: on a pre-publish breach,
+            # the duplicate gates so far (this table's on its unpublished
+            # frame) raise first, in one action
+            quality.run_gates(gates + duplicate_gate(name, cleaned))
+            raise
+        out[name] = w["table"]
+        result.silver_counts[name] = w["n_rows"]
+        gates += duplicate_gate(name, out[name])
 
-    for child, fk, parent, pk in _RI_EDGES:
-        quality.check_referential_integrity(
+    gates += [
+        quality.referential_integrity_gate(
             out[child], fk, out[parent], pk, "silver", thresholds.referential_integrity
         )
+        for child, fk, parent, pk in _RI_EDGES
+    ]
+    # every duplicate and RI gate in one Spark action
+    quality.run_gates(gates)
+    for name, n in result.silver_counts.items():
+        quality.log_layer_stats("silver", name, n)
     return out
 
 

@@ -13,13 +13,24 @@ better plans at 100 TB):
   partial aggregation instead of a count-over-partition window
   (reference utils/quality.py:74-79) — a window shuffles every full row,
   the groupBy shuffles only (key, partial-count) pairs.
+- every duplicate and referential-integrity gate is ONE aggregate that
+  yields its total and its breach count together; the reference runs a
+  ``df.count()`` and then a second action per gate. The RI gate is a
+  left join of the non-null foreign keys to the parent's DISTINCT keys
+  (count the unmatched), not a ``left_anti`` join plus a ``count()``.
+- ``run_gates`` batches any number of those aggregates into one Spark
+  action (a union of one-row frames, one ``collect()``) and then checks
+  them in list order; ``check_duplicate_rate`` and
+  ``check_referential_integrity`` are its one-gate form.
 - composite keys are supported directly (the reference dedups composite
   keys but gates only single columns).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -113,32 +124,110 @@ def check_null_rate(
     return rate
 
 
-def check_duplicate_rate(
+@dataclass(frozen=True)
+class Gate:
+    """One gate for ``run_gates``: ``counts`` is a one-row frame of
+    ``total`` and ``bad`` (longs); ``check(total, bad)`` returns the rate
+    or raises ``DataQualityError``."""
+
+    counts: DataFrame
+    check: Callable[[int, int], float]
+
+
+def duplicate_rate_gate(
     df: DataFrame, columns: str | list[str], threshold: float, layer: str = ""
-) -> float:
+) -> Gate:
     """Fraction of rows belonging to any key-group of size > 1.
 
     Counts ALL members of duplicate groups, not just the extras — the
-    reference's exact definition (utils/quality.py:65-94).
+    reference's exact definition (utils/quality.py:65-94). Null keys
+    group together, as in any ``groupBy``.
     """
     cols = [columns] if isinstance(columns, str) else list(columns)
-    total = df.count()
-    if total == 0:
-        return 0.0
-    dup_rows = (
+    n = F.col("_grp_n")
+    counts = (
         df.groupBy(*cols)
         .agg(F.count(F.lit(1)).alias("_grp_n"))
-        .filter(F.col("_grp_n") > 1)
-        .agg(F.coalesce(F.sum("_grp_n"), F.lit(0)).alias("dups"))
-        .collect()[0]["dups"]
-    )
-    rate = round(dup_rows / total, 6)
-    if rate > threshold:
-        raise DataQualityError(
-            f"[{layer}] duplicate rate {rate:.6f} on {cols} exceeds threshold {threshold}"
+        .agg(
+            F.coalesce(F.sum(n), F.lit(0)).alias("total"),
+            F.coalesce(F.sum(F.when(n > 1, n)), F.lit(0)).alias("bad"),
         )
-    logger.info("DUPLICATE_RATE_OK layer=%s columns=%s rate=%.6f", layer, cols, rate)
-    return rate
+    )
+
+    def check(total: int, bad: int) -> float:
+        if total == 0:
+            return 0.0
+        rate = round(bad / total, 6)
+        if rate > threshold:
+            raise DataQualityError(
+                f"[{layer}] duplicate rate {rate:.6f} on {cols} exceeds threshold {threshold}"
+            )
+        logger.info("DUPLICATE_RATE_OK layer=%s columns=%s rate=%.6f", layer, cols, rate)
+        return rate
+
+    return Gate(counts, check)
+
+
+def referential_integrity_gate(
+    child: DataFrame,
+    fk: str,
+    parent: DataFrame,
+    pk: str,
+    layer: str = "",
+    threshold: float = 0.0,
+) -> Gate:
+    """orphan_rate over non-null FK rows; default zero tolerance.
+
+    Semantics: reference utils/quality.py:97-130. The parent is projected
+    to its distinct key column FIRST, so only keys shuffle (or broadcast
+    when small) and the left join cannot fan out; a null parent key
+    matches nothing.
+    """
+    keys = parent.select(F.col(pk).alias("__pk")).distinct()
+    counts = (
+        child.select(F.col(fk).alias("__fk"))
+        .filter(F.col("__fk").isNotNull())
+        .join(keys, F.col("__fk") == F.col("__pk"), "left")
+        .agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count(F.when(F.col("__pk").isNull(), 1)).alias("bad"),
+        )
+    )
+
+    def check(total: int, orphans: int) -> float:
+        if total == 0:
+            return 0.0
+        rate = round(orphans / total, 6)
+        if rate > threshold:
+            raise DataQualityError(
+                f"[{layer}] orphan rate {rate:.6f} ({orphans}/{total}) on '{fk}' "
+                f"exceeds threshold {threshold}"
+            )
+        logger.info("RI_OK layer=%s fk=%s rate=%.6f", layer, fk, rate)
+        return rate
+
+    return Gate(counts, check)
+
+
+def run_gates(gates: list[Gate]) -> list[float]:
+    """Evaluate every gate's counts in ONE Spark action, then check the
+    gates in list order: the first breach raises, each passing gate logs
+    its OK line, and the rates come back in list order."""
+    if not gates:
+        return []
+    tagged = [
+        g.counts.select(F.lit(i).alias("gate"), "total", "bad")
+        for i, g in enumerate(gates)
+    ]
+    rows = {r["gate"]: r for r in reduce(lambda a, b: a.union(b), tagged).collect()}
+    return [g.check(rows[i]["total"], rows[i]["bad"]) for i, g in enumerate(gates)]
+
+
+def check_duplicate_rate(
+    df: DataFrame, columns: str | list[str], threshold: float, layer: str = ""
+) -> float:
+    """``duplicate_rate_gate`` evaluated alone: one Spark action."""
+    return run_gates([duplicate_rate_gate(df, columns, threshold, layer)])[0]
 
 
 def check_referential_integrity(
@@ -149,29 +238,10 @@ def check_referential_integrity(
     layer: str = "",
     threshold: float = 0.0,
 ) -> float:
-    """orphan_rate over non-null FK rows; default zero tolerance.
-
-    Semantics: reference utils/quality.py:97-130. The left_anti join
-    broadcasts when the parent key set is small; at 100 TB project the
-    parent to its key column FIRST (done here) so only keys shuffle.
-    """
-    non_null = child.filter(F.col(fk).isNotNull())
-    total = non_null.count()
-    if total == 0:
-        return 0.0
-    orphans = non_null.join(
-        parent.select(F.col(pk).alias("__pk")).distinct(),
-        on=F.col(fk) == F.col("__pk"),
-        how="left_anti",
-    ).count()
-    rate = round(orphans / total, 6)
-    if rate > threshold:
-        raise DataQualityError(
-            f"[{layer}] orphan rate {rate:.6f} ({orphans}/{total}) on '{fk}' "
-            f"exceeds threshold {threshold}"
-        )
-    logger.info("RI_OK layer=%s fk=%s rate=%.6f", layer, fk, rate)
-    return rate
+    """``referential_integrity_gate`` evaluated alone: one Spark action."""
+    return run_gates(
+        [referential_integrity_gate(child, fk, parent, pk, layer, threshold)]
+    )[0]
 
 
 def reconcile_row_counts(
@@ -216,21 +286,27 @@ def write_with_observed_gates(
     require_nonzero: bool = True,
     layer: str = "",
     partition_by: list[str] | None = None,
+    reconcile: tuple[int, float] | None = None,
 ) -> dict:
     """The one gated table commit: every medallion layer, both curation
     tables and the training set go through here.
 
     The gate aggregates (row count, one null count per gated column)
     ride the write job itself as a ``df.observe`` observation, so the
-    non-empty and null-rate gates cost ZERO extra scans or jobs — the
-    separate-job gates above (the reference's utils/quality.py shape)
-    re-scan the table once per gate.
+    non-empty, null-rate and reconcile gates cost ZERO extra scans or
+    jobs — ``check_null_rate`` above (the reference's utils/quality.py
+    shape) re-scans the table once per gate.
 
     The table at ``path`` is a versioned table: the write commits
     through ``versioned.write_versioned`` with the gates in its
     ``validate`` hook — after the data write, before the manifest
     publish — so a failing gate leaves an unpublished orphan and
     readers keep the previous version.
+
+    ``reconcile=(source_rows, drift_threshold)`` adds the reconcile gate
+    (``reconcile_row_counts`` on the observed row count, table named by
+    ``layer``) to the same pre-publish hook, so a drifted table is never
+    published either.
 
     Null rates are compared RAW (nulls / rows, 0 on an empty table):
     rounding first would let e.g. 0.0010004 sneak under a 0.001
@@ -271,6 +347,9 @@ def write_with_observed_gates(
                     f"[{layer}] null rate {rate:.6f} on '{col}' "
                     f"exceeds threshold {threshold}"
                 )
+        if reconcile is not None:
+            source_rows, drift = reconcile
+            reconcile_row_counts(source_rows, n, drift, layer)
 
     out["version"] = write_versioned(
         observed, path, partition_by=partition_by, validate=enforce

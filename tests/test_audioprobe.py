@@ -15,11 +15,10 @@ import pytest
 
 from instacart_medallion_lakehouse_spark.operators import multimodal
 from instacart_medallion_lakehouse_spark.operators.audioprobe import (
-    encode_flac_stub,
-    encode_mp3_stub,
     parse_flac,
     parse_mp3,
 )
+from codec_stubs import encode_flac_stub, encode_mp3_stub
 
 
 class TestMp3:

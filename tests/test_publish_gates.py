@@ -1,5 +1,5 @@
-"""Gates that run before publish: a refresh whose non-empty or null-rate
-gate trips must leave the previous version of the gated table as the
+"""Gates that run before publish: a refresh whose non-empty, null-rate
+or reconcile gate trips must leave the previous version of the gated table as the
 latest, readable with the previous run's rows. The star inputs come
 from the benchmark's generator, so these run without the driver
 testdata."""
@@ -63,6 +63,13 @@ def _silver(spark, dirs, out):
     pipeline.run_medallion(spark, dirs["nulls"], out)
 
 
+def _silver_reconcile(spark, dirs, out):
+    res = pipeline.PipelineResult()
+    bronze = pipeline.run_bronze(spark, dirs["good"], out, res)
+    res.bronze_counts["region"] *= 2
+    pipeline.run_silver(spark, bronze, out, res)
+
+
 def _gold(spark, dirs, out):
     silver = {
         name: read_versioned(spark, f"{out}/silver/{name}")
@@ -77,9 +84,10 @@ def _gold(spark, dirs, out):
     [
         (_bronze, "bronze/region", "0 rows"),
         (_silver, "silver/orders", "null rate"),
+        (_silver_reconcile, "silver/region", "row-count drift"),
         (_gold, "gold/fct_lineitem", "0 rows"),
     ],
-    ids=["bronze_nonempty", "silver_null_rate", "gold_nonempty"],
+    ids=["bronze_nonempty", "silver_null_rate", "silver_reconcile", "gold_nonempty"],
 )
 def test_tripped_gate_keeps_previous_version(
     spark, star, tmp_path, trip, table, message

@@ -11,10 +11,10 @@ import pytest
 from instacart_medallion_lakehouse_spark.operators import multimodal
 from instacart_medallion_lakehouse_spark.operators.imagecodec import decode
 from instacart_medallion_lakehouse_spark.operators.y4mcodec import (
-    encode_y4m,
     iter_y4m_frames,
     parse_y4m_header,
 )
+from codec_stubs import encode_y4m
 
 
 def _frames(n: int, h: int = 16, w: int = 24) -> list[np.ndarray]:
