@@ -33,9 +33,13 @@ action, and raise if any breaches. Re-runs give identical
 results and append history, reachable by time travel;
 ``versioned.vacuum`` reclaims it.
 
-Scale notes: each layer is a separate job chain; silver dedup is the
-only full-fact shuffle (window on the PK); gold reuses one cached
-enriched base across all marts (reference 03:42-44,73 does the same).
+Scale notes: each layer is a separate job chain. The fact table,
+lineitem, is keyless and never deduped: silver reads all of it in the
+fused gate action, in its lenient duplicate gate (a group-by) and in
+the lineitem → orders RI join. The PK dedup windows shuffle only the
+keyed tables. Gold caches the silver lineitem and orders frames and
+builds every mart from them (reference 03:42-44,73 caches its enriched
+base the same way).
 """
 
 from __future__ import annotations

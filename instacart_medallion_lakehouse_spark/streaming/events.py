@@ -444,6 +444,18 @@ def interval_join_clicks_views_stream(
     ).select("click_id", "view_id", "user_id", "click_ts", "view_ts")
 
 
+def await_drain(query, timeout_sec: int, message: str) -> None:
+    """Wait for a started availableNow ``query`` to finish, raising
+    TimeoutError(``message``) when it does not within ``timeout_sec``;
+    the query is stopped either way if it is still active."""
+    try:
+        if not query.awaitTermination(timeout_sec):
+            raise TimeoutError(message)
+    finally:
+        if query.isActive:
+            query.stop()
+
+
 def stream_to_parquet(
     streaming_df: DataFrame,
     path: str,
@@ -467,17 +479,13 @@ def stream_to_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"parquet drain into {path} did not finish within "
-                f"{timeout_sec}s; the written files are a prefix of the "
-                "input — re-run with the same checkpoint to resume"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    await_drain(
+        q,
+        timeout_sec,
+        f"parquet drain into {path} did not finish within "
+        f"{timeout_sec}s; the written files are a prefix of the "
+        "input — re-run with the same checkpoint to resume",
+    )
 
 
 def drain_to_batch(
@@ -538,19 +546,15 @@ def drain_to_batch(
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                # drain_to_batch feeds oracle-checked queries: a silent
-                # partial memory table surfaces as a baffling value
-                # mismatch — fail loudly instead
-                raise TimeoutError(
-                    f"stream drain '{name}' did not finish within "
-                    f"{timeout_sec}s; memory table holds a partial result"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
+        # drain_to_batch feeds oracle-checked queries: a silent partial
+        # memory table surfaces as a baffling value mismatch — fail
+        # loudly instead
+        await_drain(
+            q,
+            timeout_sec,
+            f"stream drain '{name}' did not finish within "
+            f"{timeout_sec}s; memory table holds a partial result",
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if prev_nd is None:
@@ -606,21 +610,17 @@ def stream_to_versioned(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # the drain did NOT reach end-of-input: some micro-batches
-            # may already be committed as snapshot versions. Surface it
-            # — a silent partial table is worse than a loud one. The
-            # checkpoint makes a retry resume where this one stopped.
-            raise TimeoutError(
-                f"versioned drain into {root} did not finish within "
-                f"{timeout_sec}s; committed snapshots are a prefix of the "
-                "input — re-run with the same checkpoint to resume"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    # a drain that did NOT reach end-of-input may already have committed
+    # some micro-batches as snapshot versions. Surface it — a silent
+    # partial table is worse than a loud one. The checkpoint makes a
+    # retry resume where this one stopped.
+    await_drain(
+        q,
+        timeout_sec,
+        f"versioned drain into {root} did not finish within "
+        f"{timeout_sec}s; committed snapshots are a prefix of the "
+        "input — re-run with the same checkpoint to resume",
+    )
 
 
 def stream_upsert_to_versioned(
@@ -710,14 +710,10 @@ def stream_upsert_to_versioned(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"CDC upsert drain into {root} did not finish within "
-                f"{timeout_sec}s; applied batches are a prefix of the "
-                "input — re-run with the same checkpoint to resume"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    await_drain(
+        q,
+        timeout_sec,
+        f"CDC upsert drain into {root} did not finish within "
+        f"{timeout_sec}s; applied batches are a prefix of the "
+        "input — re-run with the same checkpoint to resume",
+    )

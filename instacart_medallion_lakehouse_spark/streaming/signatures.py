@@ -65,6 +65,7 @@ def stream_signatures_to_index(
     per micro-batch, compute signatures for the batch's documents and
     MERGE by doc_id (first batch bootstraps the table)."""
     from ..versioned import list_versions, upsert_versioned, write_versioned
+    from .events import await_drain
 
     sigs = signature_rows(docs_stream, num_hashes)
 
@@ -82,14 +83,10 @@ def stream_signatures_to_index(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"signature-index drain into {root} did not finish within "
-                f"{timeout_sec}s; committed batches are a prefix — re-run "
-                "with the same checkpoint to resume"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    await_drain(
+        q,
+        timeout_sec,
+        f"signature-index drain into {root} did not finish within "
+        f"{timeout_sec}s; committed batches are a prefix — re-run "
+        "with the same checkpoint to resume",
+    )

@@ -64,8 +64,9 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..versioned import (
+    _change_dirs,
+    _manifest,
     _manifest_dirs,
-    _manifest_path,
     added_dirs as _added_dirs,
     list_versions,
 )
@@ -168,22 +169,13 @@ class _VersionedStreamReader(DataSourceStreamReader):
         parts: list[_DirPartition] = []
         for v in wanted:
             if self._cdc:
-                with open(_manifest_path(self._root, v)) as f:
-                    changes = json.load(f).get("changes")
-                if changes:
-                    # the committer materialized this version's change
-                    # rows (upsert_versioned(change_data_feed=True)):
-                    # read them verbatim, _op included
-                    parts.append(
-                        _DirPartition(
-                            os.path.join(self._root, changes),
-                            self._schema_json,
-                            cdc_version=v,
-                        )
-                    )
-                    continue
-            added = _added_dirs(self._root, v)
-            if added is None:
+                # recorded change dirs are read verbatim, _op included;
+                # append dirs get a synthesized 'insert'
+                resolved = _change_dirs(self._root, v)
+            else:
+                added = _added_dirs(self._root, v)
+                resolved = None if added is None else (added, None)
+            if resolved is None:
                 if self._on_rewrite == "error":
                     raise RuntimeError(
                         f"version {v} of {self._root} is a snapshot "
@@ -200,14 +192,15 @@ class _VersionedStreamReader(DataSourceStreamReader):
                         "(compaction)."
                     )
                 continue
+            dirs, op = resolved
             parts.extend(
                 _DirPartition(
                     os.path.join(self._root, rel),
                     self._schema_json,
                     cdc_version=v if self._cdc else None,
-                    cdc_op="insert" if self._cdc else None,
+                    cdc_op=op,
                 )
-                for rel in added
+                for rel in dirs
             )
         # Spark requires >= 1 partition per micro-batch; an all-skip
         # range still needs an empty contribution
@@ -228,14 +221,10 @@ class _VersionedBatchReader(DataSourceReader):
         self._schema_json = schema_json
 
     def partitions(self):
-        versions = list_versions(self._root)
-        if not versions:
-            raise FileNotFoundError(f"no committed versions under {self._root}")
-        with open(_manifest_path(self._root, versions[-1])) as f:
-            dirs = _manifest_dirs(json.load(f))
+        _, manifest = _manifest(self._root)
         return [
             _DirPartition(os.path.join(self._root, rel), self._schema_json)
-            for rel in dirs
+            for rel in _manifest_dirs(manifest)
         ]
 
     def read(self, partition: _DirPartition):
@@ -258,16 +247,8 @@ class VersionedStreamDataSource(DataSource):
             )
         return root
 
-    def _latest_schema_json(self) -> str:
-        root = self._root()
-        versions = list_versions(root)
-        if not versions:
-            raise FileNotFoundError(f"no committed versions under {root}")
-        with open(_manifest_path(root, versions[-1])) as f:
-            return json.dumps(json.load(f)["schema"])
-
     def schema(self) -> StructType:
-        base = StructType.fromJson(json.loads(self._latest_schema_json()))
+        base = StructType.fromJson(_manifest(self._root())[1]["schema"])
         if (self.options.get("mode") or "append").lower() == "cdc":
             from pyspark.sql.types import LongType, StringType, StructField
 

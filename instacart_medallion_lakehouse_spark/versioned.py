@@ -26,6 +26,16 @@ on the rename and the loser fails cleanly rather than corrupting (POSIX
 rename onto an existing path would overwrite, so the commit uses
 ``os.link`` + unlink, which fails with EEXIST if the version was taken).
 
+Base-version rule: every commit names the version it was derived from
+(its BASE) and publishes exactly base + 1 or fails with the race error.
+A snapshot overwrite's base is the latest version when it commits; an
+append, a MERGE (``upsert_versioned``) and a compaction take the
+version they READ as base, so a commit that lands between their read
+and their publish makes them fail instead of being silently dropped.
+``_commit`` is the only code that writes a snapshot's data and
+publishes it; ``_manifest`` / ``_read_manifest`` are the only code that
+reads a manifest.
+
 Scale notes: the protocol is pure metadata — one small JSON per commit,
 no data-file rewrite beyond the snapshot itself, identical on an object
 store (publish = conditional PUT of the manifest key). Readers pay one
@@ -38,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -66,8 +77,6 @@ def _new_data_dir(root: str, version: int) -> str:
     orphan instead; the manifest records the actual relpath, so
     readers never reconstruct the name.
     """
-    import uuid
-
     return os.path.join(root, _DATA, f"v{version:08d}_{uuid.uuid4().hex[:8]}")
 
 
@@ -84,6 +93,28 @@ def list_versions(root: str) -> list[int]:
             except ValueError:
                 continue
     return sorted(out)
+
+
+def _read_manifest(root: str, version: int) -> dict:
+    """The manifest of a version the caller already listed."""
+    with open(_manifest_path(root, version)) as f:
+        return json.load(f)
+
+
+def _manifest(root: str, version: int | None = None) -> tuple[int, dict]:
+    """``(version, manifest)`` of the latest committed version, or of
+    ``version`` — FileNotFoundError when the table or version is absent."""
+    versions = list_versions(root)
+    if not versions:
+        raise FileNotFoundError(f"no committed versions under {root}")
+    if version is None:
+        version = versions[-1]
+    elif version not in versions:
+        raise FileNotFoundError(
+            f"version {version} of {root} does not exist "
+            f"(committed: {versions})"
+        )
+    return version, _read_manifest(root, version)
 
 
 def _manifest_dirs(manifest: dict) -> list[str]:
@@ -107,14 +138,14 @@ def _manifest_all_dirs(manifest: dict) -> list[str]:
     return out
 
 
-def _committed_data_dirs(root: str) -> set[str]:
-    """Absolute data-dir paths referenced by any committed manifest."""
-    out = set()
-    for v in list_versions(root):
-        with open(_manifest_path(root, v)) as f:
-            for rel in _manifest_all_dirs(json.load(f)):
-                out.add(os.path.normpath(os.path.join(root, rel)))
-    return out
+def _referenced_dirs(root: str, versions) -> set[str]:
+    """Absolute dirs (data and change data) the manifests of
+    ``versions`` keep alive."""
+    return {
+        os.path.normpath(os.path.join(root, rel))
+        for v in versions
+        for rel in _manifest_all_dirs(_read_manifest(root, v))
+    }
 
 
 def _orphan_data_dirs(root: str) -> list[str]:
@@ -125,7 +156,7 @@ def _orphan_data_dirs(root: str) -> list[str]:
     ddir = os.path.join(root, _DATA)
     if not os.path.isdir(ddir):
         return []
-    committed = _committed_data_dirs(root)
+    committed = _referenced_dirs(root, list_versions(root))
     out = []
     for name in os.listdir(ddir):
         if not name.startswith("v"):
@@ -136,12 +167,70 @@ def _orphan_data_dirs(root: str) -> list[str]:
     return sorted(out)
 
 
+def _commit(
+    df: DataFrame,
+    root: str,
+    base: int,
+    partition_by: list[str] | None = None,
+    validate=None,
+    schema: dict | None = None,
+    append_to: list[str] | None = None,
+    changes: DataFrame | None = None,
+) -> int:
+    """The one commit: write ``df`` as a fresh data dir (and a MERGE's
+    ``changes`` as its change dir), run ``validate``, then publish
+    version ``base + 1``. Returns that version.
+
+    ``base`` is the version the commit was derived from. If another
+    writer published ``base + 1`` first, the publish raises the race
+    error and this commit's dirs stay invisible orphans. ``append_to``
+    (an append's prior dirs) makes the manifest reference those dirs
+    plus the new one; ``schema`` (JSON) is recorded instead of
+    ``df``'s when an append pins the table's schema.
+    """
+    version = base + 1
+    os.makedirs(_version_dir(root), exist_ok=True)
+    data = _new_data_dir(root, version)
+    writer = df.write.mode("errorifexists")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(data)
+    changes_rel = None
+    if changes is not None:
+        # change data rides the SAME crash protocol: written before the
+        # manifest, so a failure leaves both dirs as invisible orphans
+        # and a committed version's change feed is always complete.
+        # The cdf marker in the name keeps it v-prefixed (orphan-
+        # scannable) but visibly distinct from snapshot dirs.
+        cdir = os.path.join(
+            root, _DATA, f"v{version:08d}cdf_{uuid.uuid4().hex[:8]}"
+        )
+        changes.write.mode("errorifexists").parquet(cdir)
+        changes_rel = os.path.relpath(cdir, root)
+    if validate is not None:
+        validate()
+
+    rel = os.path.relpath(data, root)
+    manifest = {
+        "version": version,
+        "data": [*append_to, rel] if append_to else rel,
+        "committed_at": time.time(),
+        "schema": schema or df.schema.jsonValue(),
+        # recorded so maintenance jobs (compaction, upsert) preserve the
+        # disk layout instead of silently flattening it on rewrite
+        "partition_by": list(partition_by) if partition_by else [],
+    }
+    if changes_rel:
+        manifest["changes"] = changes_rel
+    _publish_manifest(root, version, manifest)
+    return version
+
+
 def write_versioned(
     df: DataFrame,
     root: str,
     partition_by: list[str] | None = None,
     validate=None,
-    _changes_df: DataFrame | None = None,
 ) -> int:
     """Commit ``df`` as the next snapshot version and return its number.
 
@@ -159,52 +248,19 @@ def write_versioned(
     data dir is an ordinary orphan (invisible to readers, reclaimed by
     ``vacuum``), and readers keep serving the previous version.
     """
-    os.makedirs(_version_dir(root), exist_ok=True)
-    # data dirs are writer-unique (_new_data_dir), so a crashed or
-    # race-losing writer's leftovers never block a version number —
-    # next version is simply max(committed) + 1 and the orphan dir is
-    # reclaimed by vacuum()
-    version = max(list_versions(root), default=0) + 1
-    data = _new_data_dir(root, version)
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data)
-    changes_rel = None
-    if _changes_df is not None:
-        # change-data rides the SAME crash protocol: written before the
-        # manifest, so a failure leaves both dirs as invisible orphans
-        # and a committed version's change feed is always complete.
-        # The cdf marker in the name keeps it v-prefixed (orphan-
-        # scannable) but visibly distinct from snapshot dirs.
-        import uuid
-
-        cdir = os.path.join(
-            root, _DATA, f"v{version:08d}cdf_{uuid.uuid4().hex[:8]}"
-        )
-        _changes_df.write.mode("errorifexists").parquet(cdir)
-        changes_rel = os.path.relpath(cdir, root)
-    if validate is not None:
-        validate()
-
-    manifest = {
-        "version": version,
-        "data": os.path.relpath(data, root),
-        "committed_at": time.time(),
-        "schema": df.schema.jsonValue(),
-        # recorded so maintenance jobs (compaction, upsert) preserve the
-        # disk layout instead of silently flattening it on rewrite
-        "partition_by": list(partition_by) if partition_by else [],
-    }
-    if changes_rel:
-        manifest["changes"] = changes_rel
-    _publish_manifest(root, version, manifest)
-    return version
+    # an overwrite does not depend on the prior snapshot's contents, so
+    # its base is whatever is latest now; data dirs are writer-unique,
+    # so a crashed or race-losing writer's leftovers never block a
+    # version number and vacuum() reclaims them
+    base = max(list_versions(root), default=0)
+    return _commit(df, root, base, partition_by, validate)
 
 
 def _publish_manifest(root: str, version: int, manifest: dict) -> None:
     final = _manifest_path(root, version)
-    tmp = final + f".tmp.{os.getpid()}"
+    # pid alone is not unique: two threads of one process committing the
+    # same version would share (and overwrite) one temp file
+    tmp = final + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
         f.flush()
@@ -248,7 +304,9 @@ def append_versioned(
     version exists. Crash semantics are identical to write_versioned:
     data first, manifest last, orphans invisible. The appended batch
     inherits the table's recorded partition layout so partition pruning
-    keeps working across constituent dirs.
+    keeps working across constituent dirs. The version it extends is
+    its base: if another commit lands first, the append fails with the
+    race error rather than dropping that commit's rows.
 
     ``merge_schema=True`` is Delta's mergeSchema contract: the batch may
     ADD columns (the new manifest's schema is table fields + new fields,
@@ -260,9 +318,10 @@ def append_versioned(
     """
     versions = list_versions(root)
     if not versions:
-        return write_versioned(df, root, validate=validate)
-    with open(_manifest_path(root, versions[-1])) as f:
-        prior = json.load(f)
+        return _commit(df, root, 0, validate=validate)
+    base = versions[-1]
+    prior = _read_manifest(root, base)
+
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -308,26 +367,15 @@ def append_versioned(
             f"{sorted(df.columns)} (merge_schema=True to evolve)"
         )
     df = df.select(*table_schema.fieldNames())
-    partition_by = prior.get("partition_by") or None
-
-    version = max(versions) + 1
-    data = _new_data_dir(root, version)
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data)
-    if validate is not None:
-        validate()
-
-    manifest = {
-        "version": version,
-        "data": [*_manifest_dirs(prior), os.path.relpath(data, root)],
-        "committed_at": time.time(),
-        "schema": schema_json,
-        "partition_by": list(partition_by) if partition_by else [],
-    }
-    _publish_manifest(root, version, manifest)
-    return version
+    return _commit(
+        df,
+        root,
+        base,
+        prior.get("partition_by"),
+        validate,
+        schema=schema_json,
+        append_to=_manifest_dirs(prior),
+    )
 
 
 def read_versioned(
@@ -335,18 +383,7 @@ def read_versioned(
 ) -> DataFrame:
     """Read a committed snapshot — latest by default, or time-travel to
     an explicit ``version``."""
-    versions = list_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} of {root} does not exist "
-            f"(committed: {versions})"
-        )
-    with open(_manifest_path(root, version)) as f:
-        manifest = json.load(f)
+    _, manifest = _manifest(root, version)
     reader = spark.read
     if "schema" in manifest:
         # pin the committed schema: a partitioned snapshot's partition
@@ -395,23 +432,14 @@ def vacuum(
     # dropped version's dirs are only reclaimable when no KEPT manifest
     # still references them — exactly Delta's rule that VACUUM removes
     # files no retained snapshot needs.
-    still_referenced: set[str] = set()
-    for v in keep:
-        with open(_manifest_path(root, v)) as f:
-            for rel in _manifest_all_dirs(json.load(f)):
-                still_referenced.add(os.path.normpath(os.path.join(root, rel)))
+    still_referenced = _referenced_dirs(root, keep)
     removed = []
     for v in committed:
         if v not in keep:
-            with open(_manifest_path(root, v)) as f:
-                dirs = [
-                    os.path.normpath(os.path.join(root, rel))
-                    for rel in _manifest_all_dirs(json.load(f))
-                ]
+            dirs = _referenced_dirs(root, [v])
             os.unlink(_manifest_path(root, v))
-            for data in dirs:
-                if data not in still_referenced:
-                    shutil.rmtree(data, ignore_errors=True)
+            for data in dirs - still_referenced:
+                shutil.rmtree(data, ignore_errors=True)
             removed.append(v)
     now = time.time()
     for path in _orphan_data_dirs(root):
@@ -429,8 +457,7 @@ def history(root: str) -> list[dict]:
     the DESCRIBE HISTORY analog."""
     out = []
     for v in list_versions(root):
-        with open(_manifest_path(root, v)) as f:
-            m = json.load(f)
+        m = _read_manifest(root, v)
         out.append(
             {"version": v, "committed_at": m["committed_at"], "data": m["data"]}
         )
@@ -452,15 +479,13 @@ def compact_versioned(
     protocol as any write: readers keep the old version until the
     compacted one is committed, and time travel still reaches the
     pre-compaction snapshot. File count = ceil(snapshot bytes /
-    target_file_bytes), measured from the current data files.
+    target_file_bytes), measured from the current data files. The
+    compacted version is its base: a commit that lands after the
+    compaction's read makes it fail with the race error.
     """
     import math
 
-    versions = list_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    with open(_manifest_path(root, versions[-1])) as f:
-        manifest = json.load(f)
+    base, manifest = _manifest(root)
     total = 0
     for rel in _manifest_dirs(manifest):
         for dirpath, _dirs, files in os.walk(os.path.join(root, rel)):
@@ -468,13 +493,12 @@ def compact_versioned(
                 if name.endswith(".parquet"):
                     total += os.path.getsize(os.path.join(dirpath, name))
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = read_versioned(spark, root, versions[-1])
+    df = read_versioned(spark, root, base)
     # coalesce, not repartition: compaction must not pay a shuffle.
     # Thread the recorded partition layout through the rewrite — without
     # it, compacting a disk-partitioned snapshot would silently drop the
     # layout and every post-compaction 'latest' read loses pruning.
-    partition_by = manifest.get("partition_by") or None
-    return write_versioned(df.coalesce(n_files), root, partition_by=partition_by)
+    return _commit(df.coalesce(n_files), root, base, manifest.get("partition_by"))
 
 
 def upsert_versioned(
@@ -494,14 +518,17 @@ def upsert_versioned(
     rewrite. That is exactly what a Delta MERGE does physically to
     touched files, except this full-snapshot format rewrites the whole
     table — the simplification that keeps the commit protocol to one
-    manifest. Readers see the old version until the new manifest lands;
-    concurrent upserts race on the version number and the loser fails
-    cleanly (write_versioned's link-based publish), which is the
-    serializable-writer behavior MERGE needs.
+    manifest. Readers see the old version until the new manifest lands.
+
+    The MERGE is derived from the version it reads (N), so it publishes
+    N+1 or fails: if any other commit lands in between, the link-based
+    publish raises the race error instead of silently dropping that
+    commit — the serializable-writer behavior MERGE needs.
     """
     from pyspark.sql import functions as F
 
-    current = read_versioned(spark, root)
+    base, manifest = _manifest(root)
+    current = read_versioned(spark, root, base)
     if set(current.columns) != set(updates.columns):
         raise ValueError(
             f"upsert schema mismatch: table has {sorted(current.columns)}, "
@@ -556,11 +583,9 @@ def upsert_versioned(
             .otherwise(F.lit("insert"))
             .alias("_op"),
         )
-    # preserve the latest snapshot's recorded disk layout across the merge
-    with open(_manifest_path(root, list_versions(root)[-1])) as f:
-        partition_by = json.load(f).get("partition_by") or None
-    return write_versioned(
-        merged, root, partition_by=partition_by, _changes_df=changes
+    # preserve the read snapshot's recorded disk layout across the merge
+    return _commit(
+        merged, root, base, manifest.get("partition_by"), changes=changes
     )
 
 
@@ -568,16 +593,31 @@ def added_dirs(root: str, version: int) -> list[str] | None:
     """Relative data dirs ``version`` ADDED over its committed parent,
     or None if the commit was a REWRITE (dropped parent dirs — not an
     append). The bootstrap commit adds everything."""
-    with open(_manifest_path(root, version)) as f:
-        cur = set(_manifest_dirs(json.load(f)))
+    cur = set(_manifest_dirs(_read_manifest(root, version)))
     prior_versions = [v for v in list_versions(root) if v < version]
     if not prior_versions:
         return sorted(cur)
-    with open(_manifest_path(root, max(prior_versions))) as f:
-        parent = set(_manifest_dirs(json.load(f)))
+    parent = set(_manifest_dirs(_read_manifest(root, max(prior_versions))))
     if not parent <= cur:
         return None
     return sorted(cur - parent)
+
+
+def _change_dirs(root: str, version: int) -> tuple[list[str], str | None] | None:
+    """The one change resolver, for ``read_change_feed`` and the
+    streaming source's cdc mode: what committed ``version`` changed.
+
+    Returns ``(dirs, op)``: the change dir the committer recorded
+    (``upsert_versioned(change_data_feed=True)``), whose rows carry
+    their own ``_op`` (op None); else an append's added dirs, whose
+    rows are inserts (op 'insert'). None for a rewrite with no recorded
+    change data.
+    """
+    changes = _read_manifest(root, version).get("changes")
+    if changes:
+        return [changes], None
+    added = added_dirs(root, version)
+    return None if added is None else (added, "insert")
 
 
 def read_change_feed(
@@ -609,28 +649,28 @@ def read_change_feed(
         for v in list_versions(root)
         if from_version < v <= (to_version if to_version is not None else 1 << 62)
     ]
+    from pyspark.sql.types import StructType
+
     parts: list[DataFrame] = []
     for v in versions:
-        with open(_manifest_path(root, v)) as f:
-            manifest = json.load(f)
-        if manifest.get("changes"):
-            df = spark.read.parquet(os.path.join(root, manifest["changes"]))
+        resolved = _change_dirs(root, v)
+        if resolved is None:
+            raise ValueError(
+                f"version {v} of {root} is a snapshot rewrite with no "
+                "recorded change data; commit it with "
+                "change_data_feed=True or diff_versions() explicitly"
+            )
+        dirs, op = resolved
+        if not dirs:
+            continue
+        paths = [os.path.join(root, rel) for rel in dirs]
+        if op is None:
+            df = spark.read.parquet(*paths)
         else:
-            added = added_dirs(root, v)
-            if added is None:
-                raise ValueError(
-                    f"version {v} of {root} is a snapshot rewrite with no "
-                    "recorded change data; commit it with "
-                    "change_data_feed=True or diff_versions() explicitly"
-                )
-            if not added:
-                continue
-            from pyspark.sql.types import StructType
-
-            reader = spark.read.schema(StructType.fromJson(manifest["schema"]))
-            df = reader.parquet(
-                *[os.path.join(root, rel) for rel in added]
-            ).withColumn("_op", F.lit("insert"))
+            schema = StructType.fromJson(_read_manifest(root, v)["schema"])
+            df = spark.read.schema(schema).parquet(*paths).withColumn(
+                "_op", F.lit(op)
+            )
         parts.append(df.withColumn("_commit_version", F.lit(v).cast("long")))
     if not parts:
         raise ValueError(

@@ -4,7 +4,9 @@
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 
 import pytest
 
@@ -16,25 +18,39 @@ def root(tmp_path):
     return str(tmp_path / "tbl")
 
 
+# inline frames with the driver testdata's region / nation columns, so
+# the commit-protocol tests run where that testdata is absent
+@pytest.fixture()
+def region(spark):
+    names = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
+    return spark.createDataFrame(
+        list(enumerate(names)), "r_regionkey int, r_name string"
+    )
+
+
+@pytest.fixture()
+def nation(spark):
+    return spark.createDataFrame(
+        [(k, f"NATION_{k}", k % 5) for k in range(25)],
+        "n_nationkey int, n_name string, n_regionkey int",
+    )
+
+
 class TestCommitProtocol:
-    def test_versions_increment_and_latest_wins(self, spark, sf_dir, root):
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
-        nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    def test_versions_increment_and_latest_wins(self, spark, region, nation, root):
         assert V.write_versioned(region, root) == 1
         assert V.write_versioned(nation, root) == 2
         latest = V.read_versioned(spark, root)
         assert latest.count() == nation.count()
         assert set(latest.columns) == set(nation.columns)
 
-    def test_time_travel_reads_old_snapshot(self, spark, sf_dir, root):
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    def test_time_travel_reads_old_snapshot(self, spark, region, root):
         V.write_versioned(region, root)
         V.write_versioned(region.limit(2), root)
         assert V.read_versioned(spark, root, version=1).count() == region.count()
         assert V.read_versioned(spark, root).count() == 2
 
-    def test_uncommitted_data_is_invisible(self, spark, sf_dir, root):
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    def test_uncommitted_data_is_invisible(self, spark, region, root):
         V.write_versioned(region, root)
         # simulate a crashed writer: data dir exists, manifest never
         # lands (data dirs are writer-unique, so the crashed attempt
@@ -71,8 +87,7 @@ class TestCommitProtocol:
         assert a != b
         assert os.path.basename(a).startswith("v00000001_")
 
-    def test_commit_race_single_winner(self, spark, sf_dir, root, monkeypatch):
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    def test_commit_race_single_winner(self, spark, region, root, monkeypatch):
         V.write_versioned(region, root)
         # race: both writers read "latest = 1" and target version 2; the
         # second to publish must FAIL (link EEXIST), not overwrite
@@ -85,8 +100,7 @@ class TestCommitProtocol:
         # the forged winner's manifest is untouched
         assert open(forged).read().startswith('{"version": 2')
 
-    def test_history_and_vacuum(self, spark, sf_dir, root):
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    def test_history_and_vacuum(self, spark, region, root):
         for _ in range(3):
             V.write_versioned(region, root)
         h = V.history(root)
@@ -96,6 +110,78 @@ class TestCommitProtocol:
         with pytest.raises(FileNotFoundError):
             V.read_versioned(spark, root, version=1)
         assert V.read_versioned(spark, root).count() == region.count()
+
+
+class TestConcurrentCommits:
+    def test_threads_publishing_one_version_leave_one_winner(
+        self, root, monkeypatch
+    ):
+        """Two threads of ONE process publish the same version; both
+        have staged their temp manifest when they reach the link. Exactly
+        one wins, the published manifest is the winner's own, and the
+        loser gets the race error."""
+        os.makedirs(os.path.join(root, "_versions"))
+        barrier = threading.Barrier(2, timeout=30)
+        real_link = os.link
+
+        def link_after_both_staged(src, dst):
+            barrier.wait()
+            return real_link(src, dst)
+
+        monkeypatch.setattr(V.os, "link", link_after_both_staged)
+        outcome = {}
+
+        def publish(name):
+            try:
+                V._publish_manifest(root, 2, {"version": 2, "data": name})
+                outcome[name] = "won"
+            except Exception as e:  # any error is an outcome to assert on
+                outcome[name] = e
+
+        threads = [threading.Thread(target=publish, args=(n,)) for n in "AB"]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        winners = [n for n, o in outcome.items() if o == "won"]
+        assert len(winners) == 1, outcome
+        (loser,) = set("AB") - set(winners)
+        assert isinstance(outcome[loser], RuntimeError), outcome
+        assert "concurrent commit" in str(outcome[loser])
+        with open(V._manifest_path(root, 2)) as f:
+            assert json.load(f)["data"] == winners[0]
+        assert os.listdir(os.path.join(root, "_versions")) == ["v00000002.json"]
+
+    @pytest.mark.parametrize("rewrite", ["upsert", "compact"])
+    def test_rewrite_fails_when_a_commit_lands_after_its_read(
+        self, spark, root, monkeypatch, rewrite
+    ):
+        """A MERGE or compaction derived from version 1 must not publish
+        over an append that committed version 2 after its read: it fails
+        with the race error and the appended row stays in latest."""
+        schema = "id long, v string"
+        V.write_versioned(spark.createDataFrame([(1, "a"), (2, "b")], schema), root)
+        appended = spark.createDataFrame([(3, "c")], schema)
+        real_read = V.read_versioned
+        reads = []
+
+        def read_then_concurrent_append(spark_, root_, version=None):
+            out = real_read(spark_, root_, version)
+            if not reads:
+                reads.append(version)
+                V.append_versioned(appended, root_)
+            return out
+
+        monkeypatch.setattr(V, "read_versioned", read_then_concurrent_append)
+        with pytest.raises(RuntimeError, match="concurrent commit"):
+            if rewrite == "upsert":
+                updates = spark.createDataFrame([(1, "A")], schema)
+                V.upsert_versioned(spark, root, updates, key=["id"])
+            else:
+                V.compact_versioned(spark, root)
+        assert V.list_versions(root) == [1, 2]
+        latest = {r.id: r.v for r in real_read(spark, root).collect()}
+        assert latest == {1: "a", 2: "b", 3: "c"}
 
 
 class TestVersionedGoldPipeline:
