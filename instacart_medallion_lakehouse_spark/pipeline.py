@@ -19,33 +19,51 @@ Layer contract (reference parity, SURVEY.md §1.1/§3):
 Every table commits as the next version of a versioned table
 (versioned.py manifest protocol, through
 quality.write_with_observed_gates): the non-empty and null-rate gates
-run before the manifest publish, so a failing gate leaves the previous
-version readable, and readers never see a half-written table — the
-atomic overwrite the reference gets from Delta (01:95-102). Silver's
-reconcile gate runs there too. Silver's seven duplicate-rate and four
-referential-integrity gates read the committed tables and run together
-as ONE Spark action (``quality.run_gates``) once all seven silver
-tables have committed: a breach raises with all seven new silver
-versions published (and before gold runs). Gate precedence is as
-before: when a pre-publish gate of table k trips, the duplicate
-gates of tables 1..k (k's on its unpublished frame) run first, in one
-action, and raise if any breaches. Re-runs give identical
-results and append history, reachable by time travel;
+run before the manifest publish, and readers never see a half-written
+table — the atomic overwrite the reference gets from Delta (01:95-102).
+Silver's reconcile gate runs there too.
+
+A layer commits its tables concurrently, one thread per table
+(``_commit_layer``; the threads inherit the caller's Spark job group),
+and all or nothing for gate failures: each table's pre-publish hook
+runs its own gates and then waits until every table of the layer has
+passed them. A failure in any table (a gate or a Spark error) stops
+every table of the layer from publishing, and the next layer never
+runs; the error raised is the first in table order. (A failure AFTER
+that barrier, e.g. a lost publish race, can still leave the layer
+mixed; a refresh manifest over all layers is ROADMAP item 2.)
+
+Silver's seven duplicate-rate and four referential-integrity gates read
+the committed tables and run together as ONE Spark action
+(``quality.run_gates``) once all seven silver tables have committed: a
+breach raises with all seven new silver versions published (and before
+gold runs). Gate precedence is as before: when a pre-publish gate of
+table k trips, the duplicate gates of tables 1..k run first on their
+unpublished frames, in one action, and raise if any breaches. Re-runs
+give identical results and append history, reachable by time travel;
 ``versioned.vacuum`` reclaims it.
 
-Scale notes: each layer is a separate job chain. The fact table,
-lineitem, is keyless and never deduped: silver reads all of it in the
-fused gate action, in its lenient duplicate gate (a group-by) and in
-the lineitem → orders RI join. The PK dedup windows shuffle only the
-keyed tables. Gold caches the silver lineitem and orders frames and
-builds every mart from them (reference 03:42-44,73 caches its enriched
-base the same way).
+Scale notes: each layer is a separate job chain, its tables' jobs
+running side by side. At small inputs a refresh costs fixed planning
+and commit work per table, not data, so the concurrent commits fill
+cores a serial loop leaves idle. The fact table, lineitem, is keyless
+and never deduped: silver reads all of it in the fused gate action, in
+its lenient duplicate gate (a group-by) and in the lineitem → orders RI
+join. The PK dedup windows shuffle only the keyed tables. Gold does NOT
+cache the silver lineitem and orders frames (the reference caches its
+enriched base, 03:42-44,73): every mart re-reads the committed silver
+tables, because concurrent marts racing to fill one lazy cache ran a
+varying number of jobs from run to run, while uncached they run a
+fixed, smaller number.
 """
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -123,12 +141,56 @@ class PipelineResult:
     gold_counts: dict[str, int] = field(default_factory=dict)
 
 
+def _commit_layer(
+    spark: SparkSession,
+    tables: list[str],
+    commit: Callable[[str, Callable[[], object]], dict],
+) -> dict[str, dict]:
+    """Run ``commit(name, before_publish)`` for every table of one layer
+    at once, one thread per table, and return the results by name.
+
+    Each commit passes ``before_publish`` to
+    ``quality.write_with_observed_gates``, whose pre-publish hook calls
+    it after the table's own gates: a barrier that opens once every
+    table has passed its gates. A failure in any table (a gate or a
+    Spark error) breaks the barrier, so no table of the layer
+    publishes. Once every thread has finished, the first real error in
+    table order is raised (the others' ``BrokenBarrierError`` is only
+    the echo of it). Threads inherit the caller's job group and tags;
+    the results come back in table order.
+    """
+    barrier = threading.Barrier(len(tables))
+    results: dict[str, dict] = {}
+    errors: dict[str, BaseException] = {}
+
+    def run(name: str) -> None:
+        try:
+            results[name] = commit(name, barrier.wait)
+        except BaseException as e:  # re-raised below, in table order
+            errors[name] = e
+            barrier.abort()
+
+    # each thread starts with its own copy of the caller's local
+    # properties (job group, description) and tags
+    threads = [InheritableThread(run, args=(name,), session=spark) for name in tables]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for name in tables:
+        if name in errors and not isinstance(
+            errors[name], threading.BrokenBarrierError
+        ):
+            raise errors[name]
+    return {name: results[name] for name in tables}
+
+
 def run_bronze(
     spark: SparkSession, sf_dir: str, out_dir: str, result: PipelineResult
 ) -> dict[str, DataFrame]:
     """Raw → bronze: scan, stamp lineage metadata, gate non-empty, write."""
-    out: dict[str, DataFrame] = {}
-    for name in BRONZE_TABLES:
+
+    def commit(name: str, before_publish: Callable[[], object]) -> dict:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet").withColumns(
             {
                 "_ingested_at": F.current_timestamp(),
@@ -138,14 +200,19 @@ def run_bronze(
         )
         # the non-empty gate is observed on the write pass itself — no
         # post-write re-scan job per table
-        w = quality.write_with_observed_gates(
-            df, f"{out_dir}/bronze/{name}", layer=f"bronze.{name}"
+        return quality.write_with_observed_gates(
+            df,
+            f"{out_dir}/bronze/{name}",
+            layer=f"bronze.{name}",
+            _before_publish=before_publish,
         )
-        n = w["n_rows"]
+
+    written = _commit_layer(spark, BRONZE_TABLES, commit)
+    for name in BRONZE_TABLES:
+        n = written[name]["n_rows"]
         quality.log_layer_stats("bronze", name, n)
         result.bronze_counts[name] = n
-        out[name] = w["table"]
-    return out
+    return {name: w["table"] for name, w in written.items()}
 
 
 def run_silver(
@@ -156,8 +223,6 @@ def run_silver(
     thresholds: quality.GateThresholds = quality.DEFAULT_THRESHOLDS,
 ) -> dict[str, DataFrame]:
     """Bronze → silver: deterministic dedup, drop lineage cols, gate, write."""
-    out: dict[str, DataFrame] = {}
-    gates: list[quality.Gate] = []
 
     def duplicate_gate(name: str, df: DataFrame) -> list[quality.Gate]:
         keys = _SILVER_KEYS[name]
@@ -176,6 +241,7 @@ def run_silver(
             ]
         return []
 
+    cleaned: dict[str, DataFrame] = {}
     for name, keys in _SILVER_KEYS.items():
         df = bronze[name]
         if keys is not None:
@@ -206,12 +272,16 @@ def run_silver(
             df = dedup_keep_first(
                 df, keys=keys, order_by=[F.col("_ingested_at"), content_hash]
             )
-        cleaned = df.drop("_ingested_at", "_source_file", "_bronze_version")
+        cleaned[name] = df.drop("_ingested_at", "_source_file", "_bronze_version")
+
+    tripped: set[str] = set()
+
+    def commit(name: str, before_publish: Callable[[], object]) -> dict:
         # null-rate and reconcile gates ride the write-pass observation
         # with the row count and run before publish — zero extra scans
         try:
-            w = quality.write_with_observed_gates(
-                cleaned,
+            return quality.write_with_observed_gates(
+                cleaned[name],
                 f"{out_dir}/silver/{name}",
                 null_rate_columns={
                     c: thresholds.null_rate_default
@@ -220,18 +290,30 @@ def run_silver(
                 require_nonzero=False,
                 layer=f"silver.{name}",
                 reconcile=(result.bronze_counts[name], thresholds.reconcile_drift),
+                _before_publish=before_publish,
             )
         except quality.DataQualityError:
-            # a table's duplicate gate precedes its reconcile gate, and
-            # earlier tables' gates precede both: on a pre-publish breach,
-            # the duplicate gates so far (this table's on its unpublished
-            # frame) raise first, in one action
-            quality.run_gates(gates + duplicate_gate(name, cleaned))
+            tripped.add(name)
             raise
-        out[name] = w["table"]
-        result.silver_counts[name] = w["n_rows"]
-        gates += duplicate_gate(name, out[name])
 
+    tables = list(cleaned)
+    try:
+        written = _commit_layer(spark, tables, commit)
+    except quality.DataQualityError:
+        # a table's duplicate gate precedes its reconcile gate, and
+        # earlier tables' gates precede both: on a pre-publish breach at
+        # table k, the duplicate gates of tables 1..k (on their
+        # unpublished frames) raise first, in one action
+        k = next(i for i, name in enumerate(tables) if name in tripped)
+        quality.run_gates(
+            [g for name in tables[: k + 1] for g in duplicate_gate(name, cleaned[name])]
+        )
+        raise
+    out = {name: w["table"] for name, w in written.items()}
+    for name in tables:
+        result.silver_counts[name] = written[name]["n_rows"]
+
+    gates = [g for name in tables for g in duplicate_gate(name, out[name])]
     gates += [
         quality.referential_integrity_gate(
             out[child], fk, out[parent], pk, "silver", thresholds.referential_integrity
@@ -253,40 +335,38 @@ def run_gold(
 ) -> dict[str, DataFrame]:
     """Silver → gold: star marts, fact disk-partitioned, each committed
     as a new version of its table."""
-    li = silver["lineitem"].cache()
-    orders = silver["orders"].cache()
-    try:
-        gold: dict[str, tuple[DataFrame, list[str] | None]] = {
-            "fct_lineitem": (marts.fct_lineitem(li), ["l_returnflag"]),
-            "dim_customers": (marts.dim_customers(li, orders), None),
-            "dim_parts": (marts.dim_parts(li, orders, silver["part"]), None),
-            "mart_region_performance": (
-                marts.region_performance(
-                    li, orders, silver["customer"], silver["nation"], silver["region"]
-                ),
-                None,
+    li, orders = silver["lineitem"], silver["orders"]
+    gold: dict[str, tuple[DataFrame, list[str] | None]] = {
+        "fct_lineitem": (marts.fct_lineitem(li), ["l_returnflag"]),
+        "dim_customers": (marts.dim_customers(li, orders), None),
+        "dim_parts": (marts.dim_parts(li, orders, silver["part"]), None),
+        "mart_region_performance": (
+            marts.region_performance(
+                li, orders, silver["customer"], silver["nation"], silver["region"]
             ),
-            "mart_return_velocity": (marts.return_velocity(li, orders), None),
-        }
-        out: dict[str, DataFrame] = {}
-        for name, (df, part_by) in gold.items():
-            # the non-empty gate runs before the manifest publish, so a
-            # 0-row mart raises and never becomes the latest version
-            w = quality.write_with_observed_gates(
-                df,
-                f"{out_dir}/gold/{name}",
-                layer=f"gold.{name}",
-                partition_by=part_by,
-            )
-            n = w["n_rows"]
-            quality.log_layer_stats("gold", name, n)
-            result.gold_counts[name] = n
-            out[name] = w["table"]
-    finally:
-        # a gate failure must not leave the silver frames cached
-        li.unpersist()
-        orders.unpersist()
-    return out
+            None,
+        ),
+        "mart_return_velocity": (marts.return_velocity(li, orders), None),
+    }
+
+    def commit(name: str, before_publish: Callable[[], object]) -> dict:
+        df, part_by = gold[name]
+        # the non-empty gate runs before the manifest publish, so a
+        # 0-row mart raises and never becomes the latest version
+        return quality.write_with_observed_gates(
+            df,
+            f"{out_dir}/gold/{name}",
+            layer=f"gold.{name}",
+            partition_by=part_by,
+            _before_publish=before_publish,
+        )
+
+    written = _commit_layer(spark, list(gold), commit)
+    for name in gold:
+        n = written[name]["n_rows"]
+        quality.log_layer_stats("gold", name, n)
+        result.gold_counts[name] = n
+    return {name: w["table"] for name, w in written.items()}
 
 
 def run_medallion(

@@ -287,6 +287,7 @@ def write_with_observed_gates(
     layer: str = "",
     partition_by: list[str] | None = None,
     reconcile: tuple[int, float] | None = None,
+    _before_publish: Callable[[], object] | None = None,
 ) -> dict:
     """The one gated table commit: every medallion layer, both curation
     tables and the training set go through here.
@@ -307,6 +308,10 @@ def write_with_observed_gates(
     (``reconcile_row_counts`` on the observed row count, table named by
     ``layer``) to the same pre-publish hook, so a drifted table is never
     published either.
+
+    ``_before_publish`` (internal: ``pipeline`` passes its layer's
+    barrier wait) runs last in that hook, after every gate passed; if
+    it raises, the table does not publish.
 
     Null rates are compared RAW (nulls / rows, 0 on an empty table):
     rounding first would let e.g. 0.0010004 sneak under a 0.001
@@ -350,6 +355,8 @@ def write_with_observed_gates(
         if reconcile is not None:
             source_rows, drift = reconcile
             reconcile_row_counts(source_rows, n, drift, layer)
+        if _before_publish is not None:
+            _before_publish()
 
     out["version"] = write_versioned(
         observed, path, partition_by=partition_by, validate=enforce

@@ -182,13 +182,18 @@ def _commit(
     version ``base + 1``. Returns that version.
 
     ``base`` is the version the commit was derived from. If another
-    writer published ``base + 1`` first, the publish raises the race
-    error and this commit's dirs stay invisible orphans. ``append_to``
+    writer published ``base + 1`` first, the commit raises the race
+    error: before its data write when that version is already there,
+    else at the publish, leaving its dirs as invisible orphans. ``append_to``
     (an append's prior dirs) makes the manifest reference those dirs
     plus the new one; ``schema`` (JSON) is recorded instead of
     ``df``'s when an append pins the table's schema.
     """
     version = base + 1
+    # a commit that has already lost the race skips its data write; the
+    # link in _publish_manifest stays the real guard
+    if os.path.exists(_manifest_path(root, version)):
+        raise _race_error(root, version)
     os.makedirs(_version_dir(root), exist_ok=True)
     data = _new_data_dir(root, version)
     writer = df.write.mode("errorifexists")
@@ -271,11 +276,15 @@ def _publish_manifest(root: str, version: int, manifest: dict) -> None:
         # exactly one writer wins each version number
         os.link(tmp, final)
     except FileExistsError:
-        raise RuntimeError(
-            f"concurrent commit lost the race for version {version} of {root}"
-        )
+        raise _race_error(root, version)
     finally:
         os.unlink(tmp)
+
+
+def _race_error(root: str, version: int) -> RuntimeError:
+    return RuntimeError(
+        f"concurrent commit lost the race for version {version} of {root}"
+    )
 
 
 def append_versioned(

@@ -1,14 +1,19 @@
 """Gates that run before publish: a refresh whose non-empty, null-rate
 or reconcile gate trips must leave the previous version of the gated table as the
-latest, readable with the previous run's rows. The star inputs come
-from the benchmark's generator, so these run without the driver
-testdata."""
+latest, readable with the previous run's rows. A layer commits its
+tables concurrently and all or nothing: a trip anywhere in it leaves
+every table of the layer, and every later layer, as it was. The star
+inputs come from the benchmark's generator, so these run without the
+driver testdata."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
 import shutil
+import sys
+import threading
+import time
 
 import numpy as np
 import pyarrow as pa
@@ -28,18 +33,25 @@ def _rows(df) -> list[tuple]:
 
 @pytest.fixture(scope="module")
 def star(spark, tmp_path_factory):
-    """Generated inputs, a good input set with one table emptied and one
-    with 20 % null order FKs, and one good refresh to copy per case."""
+    """Generated inputs: a good input set, sets with region, lineitem,
+    or orders and lineitem emptied, one with 20 % null order FKs, and
+    one good refresh to copy per case."""
     spec = importlib.util.spec_from_file_location(
         "perfbench_datagen", os.path.join(ROOT, "perfbench", "datagen.py")
     )
     datagen = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(datagen)
     tables = datagen.star_tables(0.001, np.random.default_rng(0))
-    dirs = {n: str(tmp_path_factory.mktemp(n)) for n in ("good", "empty", "nulls")}
+    names = ("good", "empty", "empty_lineitem", "empty_orders_lineitem", "nulls")
+    dirs = {n: str(tmp_path_factory.mktemp(n)) for n in names}
     datagen.write_tables(dirs["good"], tables)
-    empty_region = {**tables, "region": tables["region"].slice(0, 0)}
-    datagen.write_tables(dirs["empty"], empty_region)
+
+    def emptied(*names):
+        return {**tables, **{n: tables[n].slice(0, 0) for n in names}}
+
+    datagen.write_tables(dirs["empty"], emptied("region"))
+    datagen.write_tables(dirs["empty_lineitem"], emptied("lineitem"))
+    datagen.write_tables(dirs["empty_orders_lineitem"], emptied("orders", "lineitem"))
     orders = tables["orders"]
     custkey = orders.column("o_custkey")
     mask = pa.array(np.arange(orders.num_rows) % 5 == 0)
@@ -104,3 +116,148 @@ def test_tripped_gate_keeps_previous_version(
         trip(spark, dirs, out)
     assert list_versions(path) == versions
     assert _rows(read_versioned(spark, path)) == first
+
+
+def _layer_state(spark, out, layer):
+    """Per table of ``layer``: its versions and its latest rows."""
+    return {
+        name: (list_versions(path), _rows(read_versioned(spark, path)))
+        for name in sorted(os.listdir(f"{out}/{layer}"))
+        for path in [f"{out}/{layer}/{name}"]
+    }
+
+
+def _layer_versions(out, layer):
+    return {
+        name: list_versions(f"{out}/{layer}/{name}")
+        for name in sorted(os.listdir(f"{out}/{layer}"))
+    }
+
+
+def _bronze_last_table(spark, dirs, out):
+    pipeline.run_medallion(spark, dirs["empty_lineitem"], out)
+
+
+def _gold_later_mart(spark, dirs, out):
+    silver = {
+        name: read_versioned(spark, f"{out}/silver/{name}")
+        for name in pipeline.BRONZE_TABLES
+    }
+    silver["region"] = silver["region"].limit(0)
+    pipeline.run_gold(spark, silver, out, pipeline.PipelineResult())
+
+
+LAYERS = ("bronze", "silver", "gold")
+
+
+@pytest.mark.parametrize(
+    "trip, layer, message",
+    [
+        (_bronze_last_table, "bronze", r"\[bronze\.lineitem\] has 0 rows"),
+        (_silver, "silver", r"\[silver\.orders\] null rate"),
+        (_gold_later_mart, "gold", r"\[gold\.mart_region_performance\] has 0 rows"),
+    ],
+    ids=LAYERS,
+)
+def test_tripped_gate_publishes_no_table_of_its_layer(
+    spark, star, tmp_path, trip, layer, message
+):
+    """Each case trips a table that is not its layer's first, so a
+    layer that committed table by table would have published the
+    tables before it."""
+    dirs, refreshed = star
+    out = str(tmp_path / "out")
+    shutil.copytree(refreshed, out)
+    before = _layer_state(spark, out, layer)
+    later = LAYERS[LAYERS.index(layer) + 1 :]
+    later_versions = {lay: _layer_versions(out, lay) for lay in later}
+
+    with pytest.raises(DataQualityError, match=message):
+        trip(spark, dirs, out)
+    assert _layer_state(spark, out, layer) == before
+    assert {lay: _layer_versions(out, lay) for lay in later} == later_versions
+
+
+def test_two_tripped_tables_raise_the_earlier_ones_error(spark, star, tmp_path):
+    dirs, refreshed = star
+    out = str(tmp_path / "out")
+    shutil.copytree(refreshed, out)
+    before = _layer_versions(out, "bronze")
+
+    with pytest.raises(DataQualityError, match=r"^\[bronze\.orders\] has 0 rows$"):
+        pipeline.run_bronze(
+            spark, dirs["empty_orders_lineitem"], out, pipeline.PipelineResult()
+        )
+    assert _layer_versions(out, "bronze") == before
+
+
+def test_layer_threads_run_their_jobs_in_the_callers_job_group(
+    spark, star, tmp_path
+):
+    """Every Spark job a layer's commit threads start belongs to the
+    caller's job group: none is left without a group."""
+    dirs, _ = star
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("bronze_refresh", "run_bronze under a job group")
+    try:
+        pipeline.run_bronze(spark, dirs["good"], str(tmp_path), pipeline.PipelineResult())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup("bronze_refresh")) >= len(pipeline.BRONZE_TABLES)
+
+
+def _run_layer(spark, tables, commit) -> dict:
+    """``_commit_layer`` on a thread joined with a timeout, so a barrier
+    that never opens fails the test instead of hanging it."""
+    outcome: dict = {}
+
+    def call():
+        try:
+            outcome["results"] = pipeline._commit_layer(spark, tables, commit)
+        except Exception as e:  # the outcome the test asserts on
+            outcome["error"] = e
+
+    t = threading.Thread(target=call)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "a layer's commits never finished"
+    return outcome
+
+
+def test_commit_layer_is_all_or_nothing_and_raises_in_table_order(spark):
+    """More commit threads than cores, switching often: every table
+    publishes and the results come back in table order; with two tables
+    failing, none publishes and the earlier table's error is raised even
+    though the later one fails first."""
+    tables = [f"t{i:02d}" for i in range(12)]
+    published = []
+
+    def commit(name, before_publish):
+        if name == "t03":
+            time.sleep(0.2)
+            raise ValueError(name)
+        if name == "t09":
+            raise ValueError(name)
+        before_publish()
+        published.append(name)
+        return {"name": name}
+
+    def healthy(name, before_publish):
+        before_publish()
+        return {"name": name}
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ok = _run_layer(spark, tables, healthy)
+        failed = _run_layer(spark, tables, commit)
+    finally:
+        sys.setswitchinterval(interval)
+    assert list(ok["results"].items()) == [(n, {"name": n}) for n in tables]
+    assert isinstance(failed["error"], ValueError)
+    assert str(failed["error"]) == "t03"
+    assert published == []

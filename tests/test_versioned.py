@@ -158,7 +158,8 @@ class TestConcurrentCommits:
     ):
         """A MERGE or compaction derived from version 1 must not publish
         over an append that committed version 2 after its read: it fails
-        with the race error and the appended row stays in latest."""
+        with the race error before writing any data, and the appended
+        row stays in latest."""
         schema = "id long, v string"
         V.write_versioned(spark.createDataFrame([(1, "a"), (2, "b")], schema), root)
         appended = spark.createDataFrame([(3, "c")], schema)
@@ -180,6 +181,7 @@ class TestConcurrentCommits:
             else:
                 V.compact_versioned(spark, root)
         assert V.list_versions(root) == [1, 2]
+        assert V._orphan_data_dirs(root) == []
         latest = {r.id: r.v for r in real_read(spark, root).collect()}
         assert latest == {1: "a", 2: "b", 3: "c"}
 
