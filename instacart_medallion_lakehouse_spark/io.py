@@ -366,19 +366,18 @@ def _parquet_has_nanos_ts(path: str, col: str) -> bool:
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table, normalizing ``ts`` to session-zone timestamp.
 
-    The testdata's physical type for ``ts`` has varied between generator
-    versions — Parquet INT64 TIMESTAMP(NANOS) (rejected by Spark's
-    vectorized reader unless read as long) and plain ``timestamp[us]``
-    NTZ — so normalize whatever arrives:
+    The only code that decides how ``events.parquet`` is read:
+    ``streaming.events.read_events_stream`` streams with the schema of
+    ``_read_events_raw`` and normalizes with ``_normalize_events_ts``.
+    """
+    return _normalize_events_ts(_read_events_raw(spark, f"{sf_dir}/events.parquet"))
 
-    - ``bigint`` (nanos via ``spark.sql.legacy.parquet.nanosAsLong``):
-      truncate to microseconds with INTEGER division (``ts div 1000`` —
-      double-math division would lose precision above 2^53 ns), matching
-      DuckDB's own ns→us truncation.
-    - ``timestamp_ntz``: cast to ``timestamp``. The session timezone is
-      pinned to UTC (session.py), so the cast reinterprets the same
-      wall-clock micros as a UTC instant — byte-identical values, and
-      one stable output type for every downstream consumer.
+
+def _read_events_raw(spark: SparkSession, path: str) -> DataFrame:
+    """The events file with ``ts`` in its physical form, which has varied
+    between testdata generator versions: Parquet INT64 TIMESTAMP(NANOS)
+    (rejected by Spark's vectorized reader unless read as long), plain
+    ``timestamp[us]`` NTZ and tz-adjusted ``timestamp[us, tz=UTC]``.
 
     The ``nanosAsLong`` legacy conf is session-wide and changes how
     EVERY later parquet read maps TIMESTAMP(NANOS) columns, so it is
@@ -387,17 +386,29 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan consults it again at execution time, after this function
     returns, so a set/restore would break the read it was set for).
     """
-    from pyspark.sql import functions as F
-
-    path = f"{sf_dir}/events.parquet"
     if _parquet_has_nanos_ts(path, "ts"):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    """``ts`` to ``timestamp`` by its dtype, on a batch or streaming frame:
+
+    - ``bigint`` (nanos via ``nanosAsLong``): truncate to microseconds
+      with INTEGER division (``ts div 1000`` — double-math division
+      would lose precision above 2^53 ns), matching DuckDB's own ns→us
+      truncation.
+    - ``timestamp_ntz``: cast to ``timestamp``. The session timezone is
+      pinned to UTC (session.py), so the cast reinterprets the same
+      wall-clock micros as a UTC instant — byte-identical values, and
+      one stable output type for every downstream consumer.
+    - ``timestamp`` (tz-adjusted) is already an instant: left as is.
+    """
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

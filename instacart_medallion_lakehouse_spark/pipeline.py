@@ -226,9 +226,10 @@ def run_silver(
 
     def duplicate_gate(name: str, df: DataFrame) -> list[quality.Gate]:
         keys = _SILVER_KEYS[name]
+        layer = f"silver.{name}"
         if keys is not None:
             return [
-                quality.duplicate_rate_gate(df, keys, thresholds.duplicate_rate, "silver")
+                quality.duplicate_rate_gate(df, keys, thresholds.duplicate_rate, layer)
             ]
         if name in _LENIENT_DUP_KEYS:
             return [
@@ -236,7 +237,7 @@ def run_silver(
                     df,
                     _LENIENT_DUP_KEYS[name],
                     thresholds.duplicate_rate_lenient,
-                    "silver",
+                    layer,
                 )
             ]
         return []
@@ -316,7 +317,7 @@ def run_silver(
     gates = [g for name in tables for g in duplicate_gate(name, out[name])]
     gates += [
         quality.referential_integrity_gate(
-            out[child], fk, out[parent], pk, "silver", thresholds.referential_integrity
+            out[child], fk, out[parent], pk, f"silver.{child}", thresholds.referential_integrity
         )
         for child, fk, parent, pk in _RI_EDGES
     ]

@@ -106,29 +106,34 @@ def load_pipeline_config(path: str) -> dict:
 def check_null_rate(
     df: DataFrame, column: str, threshold: float, layer: str = ""
 ) -> float:
-    """null_rate = nulls/total (0 if total=0), rounded to 6 dp; raise if > threshold.
+    """null_rate = nulls/total (0 if total=0); raise if > threshold.
 
     Semantics: reference utils/quality.py:28-62. Single aggregation job.
+    The raw rate is compared, so one null in millions of rows still
+    breaches a 0.0 threshold; the rate returned and logged is rounded
+    to 6 dp.
     """
     row = df.agg(
         F.count(F.lit(1)).alias("total"),
         F.sum(F.when(F.col(column).isNull(), 1).otherwise(0)).alias("nulls"),
     ).collect()[0]
     total, nulls = row["total"], row["nulls"] or 0
-    rate = round(nulls / total, 6) if total else 0.0
+    rate = nulls / total if total else 0.0
     if rate > threshold:
         raise DataQualityError(
-            f"[{layer}] null rate {rate:.6f} on '{column}' exceeds threshold {threshold}"
+            f"[{layer}] null rate {rate:.6f} ({nulls}/{total}) on '{column}' "
+            f"exceeds threshold {threshold}"
         )
     logger.info("NULL_RATE_OK layer=%s column=%s rate=%.6f", layer, column, rate)
-    return rate
+    return round(rate, 6)
 
 
 @dataclass(frozen=True)
 class Gate:
     """One gate for ``run_gates``: ``counts`` is a one-row frame of
     ``total`` and ``bad`` (longs); ``check(total, bad)`` returns the rate
-    or raises ``DataQualityError``."""
+    or raises ``DataQualityError``. Checks compare the raw rate with
+    the threshold and return it rounded to 6 dp."""
 
     counts: DataFrame
     check: Callable[[int, int], float]
@@ -157,13 +162,14 @@ def duplicate_rate_gate(
     def check(total: int, bad: int) -> float:
         if total == 0:
             return 0.0
-        rate = round(bad / total, 6)
+        rate = bad / total
         if rate > threshold:
             raise DataQualityError(
-                f"[{layer}] duplicate rate {rate:.6f} on {cols} exceeds threshold {threshold}"
+                f"[{layer}] duplicate rate {rate:.6f} ({bad}/{total}) on {cols} "
+                f"exceeds threshold {threshold}"
             )
         logger.info("DUPLICATE_RATE_OK layer=%s columns=%s rate=%.6f", layer, cols, rate)
-        return rate
+        return round(rate, 6)
 
     return Gate(counts, check)
 
@@ -197,14 +203,14 @@ def referential_integrity_gate(
     def check(total: int, orphans: int) -> float:
         if total == 0:
             return 0.0
-        rate = round(orphans / total, 6)
+        rate = orphans / total
         if rate > threshold:
             raise DataQualityError(
                 f"[{layer}] orphan rate {rate:.6f} ({orphans}/{total}) on '{fk}' "
                 f"exceeds threshold {threshold}"
             )
         logger.info("RI_OK layer=%s fk=%s rate=%.6f", layer, fk, rate)
-        return rate
+        return round(rate, 6)
 
     return Gate(counts, check)
 
@@ -349,7 +355,7 @@ def write_with_observed_gates(
             out[f"null_rate_{col}"] = rate
             if rate > threshold:
                 raise DataQualityError(
-                    f"[{layer}] null rate {rate:.6f} on '{col}' "
+                    f"[{layer}] null rate {rate:.6f} ({nulls}/{n}) on '{col}' "
                     f"exceeds threshold {threshold}"
                 )
         if reconcile is not None:

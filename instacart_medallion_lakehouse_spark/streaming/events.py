@@ -30,50 +30,9 @@ import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..functions.scalar import dround
 from ..operators.aggs import avg_fixedpoint
-
-def _events_stream_schema(ts_type: str) -> StructType:
-    """Stream-source schema matching the batch reader's view of ``ts``.
-
-    The testdata's physical type for ts has varied between generator
-    versions (INT64 TIMESTAMP(NANOS) → bigint under nanosAsLong, vs
-    plain timestamp[us] NTZ), so the schema is built per-dataset from
-    what the batch reader actually sees — file-source streams require an
-    explicit schema and a wrong ts type silently corrupts every window.
-    """
-    from pyspark.sql.types import TimestampNTZType, TimestampType
-
-    # three observed physical forms, mirroring io.read_events exactly:
-    # bigint (nanosAsLong), tz-adjusted 'timestamp' (left as-is by the
-    # batch reader — declaring NTZ here would reinterpret instants as
-    # wall-clock and shift every window), and NTZ
-    if ts_type == "bigint":
-        ts_field = LongType()
-    elif ts_type == "timestamp":
-        ts_field = TimestampType()
-    else:
-        ts_field = TimestampNTZType()
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_field),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-
 
 _memory_sink_counter = itertools.count()
 
@@ -81,33 +40,25 @@ _memory_sink_counter = itertools.count()
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, ts normalized to timestamp.
 
-    Probes the batch footer schema (a metadata-only read) to decide how
-    ts is physically stored, then applies the identical normalization as
-    the batch reader (io.read_events) — nanos are integer-truncated to
-    micros, NTZ micros are cast under the UTC session zone — so batch
-    and stream see the same timestamps.
+    File-stream sources need an explicit schema, and a wrong ``ts`` type
+    silently corrupts every window. The schema is the batch reader's
+    raw read of the same file (``io._read_events_raw``: footer probe,
+    ``nanosAsLong`` switch, one schema-inference job), and ``ts`` goes
+    through the batch reader's normalization, so batch and stream see
+    the same timestamps.
     """
-    # session-wide legacy conf flipped ONLY when the footer actually
-    # carries TIMESTAMP(NANOS) — same policy and rationale as the batch
-    # reader (io.read_events): an unconditional set silently changes how
-    # every later parquet read in the session maps nanos columns
-    from ..io import _parquet_has_nanos_ts
+    from ..io import _normalize_events_ts, _read_events_raw
 
-    if _parquet_has_nanos_ts(f"{sf_dir}/events.parquet", "ts"):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ts_type = dict(probe.dtypes).get("ts", "timestamp_ntz")
+    schema = _read_events_raw(spark, f"{sf_dir}/events.parquet").schema
     # file stream sources require a DIRECTORY; point at the sf dir and
     # glob-filter to the events file
     raw = (
-        spark.readStream.schema(_events_stream_schema(ts_type))
+        spark.readStream.schema(schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if ts_type == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return _normalize_events_ts(raw)
 
 
 def tumbling_counts_stream(

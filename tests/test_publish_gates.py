@@ -118,6 +118,29 @@ def test_tripped_gate_keeps_previous_version(
     assert _rows(read_versioned(spark, path)) == first
 
 
+def test_silver_ri_breach_names_the_child_table(spark, star, tmp_path):
+    """Silver's fused duplicate and RI gates label a breach with the
+    table it is on. (What silver publishes on such a breach is not
+    asserted: these gates still run after the layer's publish.)"""
+    from pyspark.sql import functions as F
+
+    dirs, refreshed = star
+    out = str(tmp_path / "out")
+    shutil.copytree(refreshed, out)
+    res = pipeline.PipelineResult()
+    bronze = pipeline.run_bronze(spark, dirs["good"], out, res)
+    key = F.col("l_orderkey")
+    # a shift far past every order key keeps (l_orderkey, l_linenumber)
+    # unique and the row count unchanged: only the RI gate can trip
+    bronze["lineitem"] = bronze["lineitem"].withColumn(
+        "l_orderkey", F.when(key % 7 == 0, key + 10**12).otherwise(key)
+    )
+    with pytest.raises(
+        DataQualityError, match=r"^\[silver\.lineitem\] orphan rate .* on 'l_orderkey'"
+    ):
+        pipeline.run_silver(spark, bronze, out, res)
+
+
 def _layer_state(spark, out, layer):
     """Per table of ``layer``: its versions and its latest rows."""
     return {

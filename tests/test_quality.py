@@ -86,6 +86,41 @@ class TestSparkGates:
         )
 
 
+class TestZeroToleranceBreaches:
+    """The gates compare the raw rate: a breach smaller than 5e-7 must
+    not round to 0.0 and pass a zero threshold."""
+
+    def _frame(self, spark):
+        return spark.createDataFrame([(1,)], "k int")
+
+    def test_one_orphan_in_two_million_keys(self, spark):
+        df = self._frame(spark)
+        gate = quality.referential_integrity_gate(df, "k", df, "k", "L", 0.0)
+        with pytest.raises(
+            DataQualityError, match=r"^\[L\] orphan rate 0\.000000 \(1/2000000\)"
+        ):
+            gate.check(2_000_000, 1)
+
+    def test_one_duplicated_pair_in_four_million_rows(self, spark):
+        gate = quality.duplicate_rate_gate(self._frame(spark), "k", 0.0, "L")
+        with pytest.raises(
+            DataQualityError,
+            match=r"^\[L\] duplicate rate 0\.000000 \(2/4000000\)",
+        ):
+            gate.check(4_000_000, 2)
+
+    def test_one_null_in_two_million_rows(self, spark):
+        from pyspark.sql import functions as F
+
+        df = spark.range(2_000_000).select(
+            F.when(F.col("id") == 0, None).otherwise(F.col("id")).alias("x")
+        )
+        with pytest.raises(
+            DataQualityError, match=r"^\[L\] null rate 0\.000000 \(1/2000000\)"
+        ):
+            quality.check_null_rate(df, "x", threshold=0.0, layer="L")
+
+
 class TestObservedGates:
     def test_metrics_match_recomputation_and_no_extra_scan(
         self, spark, sf_dir, tmp_path

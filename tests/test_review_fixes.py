@@ -67,7 +67,8 @@ class TestGateConditionalCommit:
         with pytest.raises(DataQualityError):
             pipeline.run_gold(spark, silver, str(tmp_path), res)
         assert V.list_versions(str(tmp_path / "gold" / "fct_lineitem")) == []
-        # the frames run_gold cached are released on the failure path too
+        # run_gold caches nothing: the caller's silver frames stay
+        # uncached, so a failed refresh leaves no storage pinned
         for name in ("lineitem", "orders"):
             assert silver[name].storageLevel == StorageLevel.NONE, name
 

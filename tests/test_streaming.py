@@ -5,9 +5,14 @@ results; streaming dedup must drop in-horizon duplicates.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from instacart_medallion_lakehouse_spark import queries as q
+from instacart_medallion_lakehouse_spark.io import read_events
 from instacart_medallion_lakehouse_spark.streaming import events as se
 
 
@@ -42,6 +47,63 @@ class TestStreamBatchEquivalence:
             "session_value",
         )
         assert _rows_set(batch_sessions, bcols) == _rows_set(stream, bcols)
+
+
+class TestEventsReadersAgree:
+    """``io.read_events`` and ``read_events_stream`` read every physical
+    form ``ts`` has had in the testdata to the same rows, with ``ts`` a
+    session-zone timestamp. Inline data, so this runs without the
+    driver testdata."""
+
+    # 2024-01-01T00:00:00.123456789Z and two later instants, in ns
+    _NANOS = [
+        1_704_067_200_123_456_789,
+        1_704_070_800_000_001_999,
+        1_704_153_600_999_999_000,
+    ]
+
+    @pytest.mark.parametrize(
+        "ts_type",
+        [pa.timestamp("us"), pa.timestamp("us", tz="UTC"), pa.timestamp("ns")],
+        ids=["us_naive", "us_utc", "ns"],
+    )
+    def test_batch_and_stream_read_the_same_rows(self, spark, tmp_path, ts_type):
+        unit = 1 if ts_type.unit == "ns" else 1000
+        ts = pa.array([n // unit for n in self._NANOS], pa.int64()).cast(ts_type)
+        table = pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": ts,
+                "user_id": pa.array([10, 10, 20], pa.int64()),
+                "event_type": ["view", "click", "view"],
+                "value": [1.5, 2.25, 0.0],
+                "props": ['{"a":1}', None, "{}"],
+            }
+        )
+        pq.write_table(table, str(tmp_path / "events.parquet"))
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(key, None)
+        try:
+            batch = read_events(spark, str(tmp_path))
+            stream = se.drain_to_batch(
+                se.read_events_stream(spark, str(tmp_path)),
+                output_mode="append",
+                no_data_batches=False,
+            )
+            assert dict(batch.dtypes)["ts"] == "timestamp"
+            assert dict(stream.dtypes)["ts"] == "timestamp"
+            cols = [c for c in batch.columns if c != "ts"]
+            rows = [
+                df.select(*cols, F.unix_micros("ts").alias("ts_us")).collect()
+                for df in (batch, stream)
+            ]
+            assert sorted(rows[0]) == sorted(rows[1])
+            assert sorted(r.ts_us for r in rows[0]) == [n // 1000 for n in self._NANOS]
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 class TestStreamingDedup:
