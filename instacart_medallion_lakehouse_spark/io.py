@@ -9,7 +9,7 @@ Reference parity (SURVEY.md §2.1):
 The reference writes every layer as Delta on Databricks. Here the
 medallion layers commit through ``versioned.py`` instead (atomic
 publish and time travel on parquet, via
-``quality.write_with_observed_gates``); ``write_table`` and
+``quality.stage_with_observed_gates``); ``write_table`` and
 ``read_table`` are the plain-parquet overwrite sink and scan, with the
 clustering, z-order and partitioning layouts.
 """

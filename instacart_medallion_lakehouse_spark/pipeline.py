@@ -17,51 +17,47 @@ Layer contract (reference parity, SURVEY.md §1.1/§3):
   (03_gold_metrics.py:96).
 
 Every table commits as the next version of a versioned table
-(versioned.py manifest protocol, through
-quality.write_with_observed_gates): the non-empty and null-rate gates
-run before the manifest publish, and readers never see a half-written
-table — the atomic overwrite the reference gets from Delta (01:95-102).
-Silver's reconcile gate runs there too.
+(versioned.py manifest protocol), and every layer commits in one shape,
+``_commit_layer``: STAGE, CHECK, PUBLISH. Each table is staged on its
+own thread (the threads inherit the caller's Spark job group): its data
+written, nothing published, with its non-empty, null-rate and reconcile
+gates observed on that write pass
+(``quality.stage_with_observed_gates``). Every gate of the layer is then
+checked, and only when all pass does every table publish. A gate breach
+or a Spark error anywhere in a layer therefore publishes no table of
+that layer, and the next layer never runs — the atomic overwrite and
+gate-halts-the-refresh the reference gets from Delta (01:95-102). (A
+failure between two tables' publishes, e.g. a lost publish race, can
+still leave the layer mixed; a refresh manifest over all layers is
+ROADMAP item 2.)
 
-A layer commits its tables concurrently, one thread per table
-(``_commit_layer``; the threads inherit the caller's Spark job group),
-and all or nothing for gate failures: each table's pre-publish hook
-runs its own gates and then waits until every table of the layer has
-passed them. A failure in any table (a gate or a Spark error) stops
-every table of the layer from publishing, and the next layer never
-runs; the error raised is the first in table order. (A failure AFTER
-that barrier, e.g. a lost publish race, can still leave the layer
-mixed; a refresh manifest over all layers is ROADMAP item 2.)
-
-Silver's seven duplicate-rate and four referential-integrity gates read
-the committed tables and run together as ONE Spark action
-(``quality.run_gates``) once all seven silver tables have committed: a
-breach raises with all seven new silver versions published (and before
-gold runs). Gate precedence is as before: when a pre-publish gate of
-table k trips, the duplicate gates of tables 1..k run first on their
-unpublished frames, in one action, and raise if any breaches. Re-runs
-give identical results and append history, reachable by time travel;
-``versioned.vacuum`` reclaims it.
+The error raised is the first in this order: a staging error, in table
+order; then, table by table, silver's duplicate gate and the table's
+observed gates, in that order; then silver's referential-integrity
+edges. Silver's seven duplicate-rate and four RI gates read the staged
+tables and run as ONE Spark action (``quality.run_gates``).
+Re-runs give identical results and append history, reachable by time
+travel; ``versioned.vacuum`` reclaims it.
 
 Scale notes: each layer is a separate job chain, its tables' jobs
 running side by side. At small inputs a refresh costs fixed planning
-and commit work per table, not data, so the concurrent commits fill
-cores a serial loop leaves idle. The fact table, lineitem, is keyless
-and never deduped: silver reads all of it in the fused gate action, in
-its lenient duplicate gate (a group-by) and in the lineitem → orders RI
-join. The PK dedup windows shuffle only the keyed tables. Gold does NOT
-cache the silver lineitem and orders frames (the reference caches its
-enriched base, 03:42-44,73): every mart re-reads the committed silver
-tables, because concurrent marts racing to fill one lazy cache ran a
-varying number of jobs from run to run, while uncached they run a
-fixed, smaller number.
+and commit work per table, not data, so the concurrent staging writes
+fill cores a serial loop leaves idle. The fact table, lineitem, is
+keyless and never deduped: silver reads all of it in the fused gate
+action, in its lenient duplicate gate (a group-by) and in the
+lineitem → orders RI join. The PK dedup windows shuffle only the keyed
+tables. Gold does NOT cache the silver lineitem and orders frames (the
+reference caches its enriched base, 03:42-44,73): every mart re-reads
+the silver tables' files, because concurrent marts racing to fill one
+lazy cache ran a varying number of jobs from run to run, while uncached
+they run a fixed, smaller number.
 """
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
@@ -70,6 +66,7 @@ from pyspark.sql import functions as F
 from . import quality
 from .operators.cleanse import dedup_keep_first
 from .plans import marts
+from .versioned import Staged
 
 BRONZE_TABLES = [
     "region",
@@ -131,10 +128,15 @@ _RI_EDGES = [
 
 BRONZE_VERSION = "bronze_v1"
 
+# a staged table and the check of its observed gates
+# (quality.stage_with_observed_gates)
+_Stage = tuple[Staged, Callable[[], dict]]
+
 
 @dataclass
 class PipelineResult:
-    """Per-layer row counts + gate outcomes for reconciliation/reporting."""
+    """Per-layer row counts of the published tables, for reconciliation
+    and reporting."""
 
     bronze_counts: dict[str, int] = field(default_factory=dict)
     silver_counts: dict[str, int] = field(default_factory=dict)
@@ -143,32 +145,35 @@ class PipelineResult:
 
 def _commit_layer(
     spark: SparkSession,
+    layer: str,
     tables: list[str],
-    commit: Callable[[str, Callable[[], object]], dict],
-) -> dict[str, dict]:
-    """Run ``commit(name, before_publish)`` for every table of one layer
-    at once, one thread per table, and return the results by name.
+    stage: Callable[[str], _Stage],
+    counts: dict[str, int],
+    gates: Callable[
+        [dict[str, DataFrame], Callable[[str], None]], list[quality.Gate]
+    ] = lambda frames, enforce: [],
+) -> dict[str, DataFrame]:
+    """Stage, check, then publish the ``layer`` tables ``tables`` (see
+    the module docstring); return the staged frames by name, in table
+    order.
 
-    Each commit passes ``before_publish`` to
-    ``quality.write_with_observed_gates``, whose pre-publish hook calls
-    it after the table's own gates: a barrier that opens once every
-    table has passed its gates. A failure in any table (a gate or a
-    Spark error) breaks the barrier, so no table of the layer
-    publishes. Once every thread has finished, the first real error in
-    table order is raised (the others' ``BrokenBarrierError`` is only
-    the echo of it). Threads inherit the caller's job group and tags;
-    the results come back in table order.
+    ``stage(name)`` builds a table's frame and stages it; it runs on one
+    thread per table. The checks run on the caller's thread:
+    ``gates(frames, enforce)`` gives the layer's batched gates over the
+    staged frames, run as one Spark action, and may chain a table's
+    observed gates into them with ``Gate.then(partial(enforce, name))``;
+    the observed gates no batched gate ran follow in table order. Once every table has published,
+    ``counts`` gets each table's row count and its LAYER_COMPLETE line
+    is logged.
     """
-    barrier = threading.Barrier(len(tables))
-    results: dict[str, dict] = {}
+    staged: dict[str, _Stage] = {}
     errors: dict[str, BaseException] = {}
 
     def run(name: str) -> None:
         try:
-            results[name] = commit(name, barrier.wait)
+            staged[name] = stage(name)
         except BaseException as e:  # re-raised below, in table order
             errors[name] = e
-            barrier.abort()
 
     # each thread starts with its own copy of the caller's local
     # properties (job group, description) and tags
@@ -178,11 +183,25 @@ def _commit_layer(
     for t in threads:
         t.join()
     for name in tables:
-        if name in errors and not isinstance(
-            errors[name], threading.BrokenBarrierError
-        ):
+        if name in errors:
             raise errors[name]
-    return {name: results[name] for name in tables}
+
+    frames = {name: staged[name][0].read(spark) for name in tables}
+    observed: dict[str, dict] = {}
+
+    def enforce(name: str) -> None:
+        if name not in observed:
+            observed[name] = staged[name][1]()
+
+    quality.run_gates(gates(frames, enforce))
+    for name in tables:  # the observed gates no batched gate ran
+        enforce(name)
+    for name in tables:
+        staged[name][0].publish()
+    for name in tables:
+        counts[name] = observed[name]["n_rows"]
+        quality.log_layer_stats(layer, name, counts[name])
+    return frames
 
 
 def run_bronze(
@@ -190,7 +209,9 @@ def run_bronze(
 ) -> dict[str, DataFrame]:
     """Raw → bronze: scan, stamp lineage metadata, gate non-empty, write."""
 
-    def commit(name: str, before_publish: Callable[[], object]) -> dict:
+    def stage(name: str) -> _Stage:
+        # the scan is planned on the table's own thread, so the seven
+        # tables' scan set-up runs side by side
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet").withColumns(
             {
                 "_ingested_at": F.current_timestamp(),
@@ -200,19 +221,11 @@ def run_bronze(
         )
         # the non-empty gate is observed on the write pass itself — no
         # post-write re-scan job per table
-        return quality.write_with_observed_gates(
-            df,
-            f"{out_dir}/bronze/{name}",
-            layer=f"bronze.{name}",
-            _before_publish=before_publish,
+        return quality.stage_with_observed_gates(
+            df, f"{out_dir}/bronze/{name}", layer=f"bronze.{name}"
         )
 
-    written = _commit_layer(spark, BRONZE_TABLES, commit)
-    for name in BRONZE_TABLES:
-        n = written[name]["n_rows"]
-        quality.log_layer_stats("bronze", name, n)
-        result.bronze_counts[name] = n
-    return {name: w["table"] for name, w in written.items()}
+    return _commit_layer(spark, "bronze", BRONZE_TABLES, stage, result.bronze_counts)
 
 
 def run_silver(
@@ -223,25 +236,6 @@ def run_silver(
     thresholds: quality.GateThresholds = quality.DEFAULT_THRESHOLDS,
 ) -> dict[str, DataFrame]:
     """Bronze → silver: deterministic dedup, drop lineage cols, gate, write."""
-
-    def duplicate_gate(name: str, df: DataFrame) -> list[quality.Gate]:
-        keys = _SILVER_KEYS[name]
-        layer = f"silver.{name}"
-        if keys is not None:
-            return [
-                quality.duplicate_rate_gate(df, keys, thresholds.duplicate_rate, layer)
-            ]
-        if name in _LENIENT_DUP_KEYS:
-            return [
-                quality.duplicate_rate_gate(
-                    df,
-                    _LENIENT_DUP_KEYS[name],
-                    thresholds.duplicate_rate_lenient,
-                    layer,
-                )
-            ]
-        return []
-
     cleaned: dict[str, DataFrame] = {}
     for name, keys in _SILVER_KEYS.items():
         df = bronze[name]
@@ -275,57 +269,44 @@ def run_silver(
             )
         cleaned[name] = df.drop("_ingested_at", "_source_file", "_bronze_version")
 
-    tripped: set[str] = set()
-
-    def commit(name: str, before_publish: Callable[[], object]) -> dict:
+    def stage(name: str) -> _Stage:
         # null-rate and reconcile gates ride the write-pass observation
-        # with the row count and run before publish — zero extra scans
-        try:
-            return quality.write_with_observed_gates(
-                cleaned[name],
-                f"{out_dir}/silver/{name}",
-                null_rate_columns={
-                    c: thresholds.null_rate_default
-                    for c in _NULL_GATE_COLS.get(name, [])
-                },
-                require_nonzero=False,
-                layer=f"silver.{name}",
-                reconcile=(result.bronze_counts[name], thresholds.reconcile_drift),
-                _before_publish=before_publish,
+        # with the row count — zero extra scans
+        return quality.stage_with_observed_gates(
+            cleaned[name],
+            f"{out_dir}/silver/{name}",
+            null_rate_columns={
+                c: thresholds.null_rate_default for c in _NULL_GATE_COLS.get(name, [])
+            },
+            require_nonzero=False,
+            layer=f"silver.{name}",
+            reconcile=(result.bronze_counts[name], thresholds.reconcile_drift),
+        )
+
+    def gates(
+        frames: dict[str, DataFrame], enforce: Callable[[str], None]
+    ) -> list[quality.Gate]:
+        # each table's duplicate gate, then its observed gates; then the
+        # RI edges — every duplicate and RI gate in one Spark action
+        checks = []
+        for name, df in frames.items():
+            keys, threshold = _SILVER_KEYS[name], thresholds.duplicate_rate
+            if keys is None:  # keyless: the lenient inverted gate
+                keys = _LENIENT_DUP_KEYS[name]
+                threshold = thresholds.duplicate_rate_lenient
+            dup = quality.duplicate_rate_gate(df, keys, threshold, f"silver.{name}")
+            checks.append(dup.then(partial(enforce, name)))
+        return checks + [
+            quality.referential_integrity_gate(
+                frames[child], fk, frames[parent], pk, f"silver.{child}",
+                thresholds.referential_integrity,
             )
-        except quality.DataQualityError:
-            tripped.add(name)
-            raise
+            for child, fk, parent, pk in _RI_EDGES
+        ]
 
-    tables = list(cleaned)
-    try:
-        written = _commit_layer(spark, tables, commit)
-    except quality.DataQualityError:
-        # a table's duplicate gate precedes its reconcile gate, and
-        # earlier tables' gates precede both: on a pre-publish breach at
-        # table k, the duplicate gates of tables 1..k (on their
-        # unpublished frames) raise first, in one action
-        k = next(i for i, name in enumerate(tables) if name in tripped)
-        quality.run_gates(
-            [g for name in tables[: k + 1] for g in duplicate_gate(name, cleaned[name])]
-        )
-        raise
-    out = {name: w["table"] for name, w in written.items()}
-    for name in tables:
-        result.silver_counts[name] = written[name]["n_rows"]
-
-    gates = [g for name in tables for g in duplicate_gate(name, out[name])]
-    gates += [
-        quality.referential_integrity_gate(
-            out[child], fk, out[parent], pk, f"silver.{child}", thresholds.referential_integrity
-        )
-        for child, fk, parent, pk in _RI_EDGES
-    ]
-    # every duplicate and RI gate in one Spark action
-    quality.run_gates(gates)
-    for name, n in result.silver_counts.items():
-        quality.log_layer_stats("silver", name, n)
-    return out
+    return _commit_layer(
+        spark, "silver", list(cleaned), stage, result.silver_counts, gates
+    )
 
 
 def run_gold(
@@ -350,24 +331,15 @@ def run_gold(
         "mart_return_velocity": (marts.return_velocity(li, orders), None),
     }
 
-    def commit(name: str, before_publish: Callable[[], object]) -> dict:
+    def stage(name: str) -> _Stage:
         df, part_by = gold[name]
-        # the non-empty gate runs before the manifest publish, so a
+        # the non-empty gate is checked before the layer publishes, so a
         # 0-row mart raises and never becomes the latest version
-        return quality.write_with_observed_gates(
-            df,
-            f"{out_dir}/gold/{name}",
-            layer=f"gold.{name}",
-            partition_by=part_by,
-            _before_publish=before_publish,
+        return quality.stage_with_observed_gates(
+            df, f"{out_dir}/gold/{name}", layer=f"gold.{name}", partition_by=part_by
         )
 
-    written = _commit_layer(spark, list(gold), commit)
-    for name in gold:
-        n = written[name]["n_rows"]
-        quality.log_layer_stats("gold", name, n)
-        result.gold_counts[name] = n
-    return {name: w["table"] for name, w in written.items()}
+    return _commit_layer(spark, "gold", list(gold), stage, result.gold_counts)
 
 
 def run_medallion(

@@ -22,6 +22,11 @@ better plans at 100 TB):
   action (a union of one-row frames, one ``collect()``) and then checks
   them in list order; ``check_duplicate_rate`` and
   ``check_referential_integrity`` are its one-gate form.
+- a table write's non-empty, null-rate and reconcile gates are observed
+  ON the write pass (``stage_with_observed_gates``: zero extra scans)
+  and checked between the write's stage and its publish, so a breach
+  never publishes. ``Gate.then`` chains such a check after a batched
+  gate, so one ``run_gates`` call can check a whole layer in order.
 - composite keys are supported directly (the reference dedups composite
   keys but gates only single columns).
 """
@@ -36,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .logging_util import get_logger
-from .versioned import read_versioned, write_versioned
+from .versioned import Staged, read_versioned, stage_versioned
 
 logger = get_logger("quality")
 
@@ -137,6 +142,16 @@ class Gate:
 
     counts: DataFrame
     check: Callable[[int, int], float]
+
+    def then(self, after: Callable[[], object]) -> "Gate":
+        """This gate, with ``after()`` run once its check passed."""
+
+        def check(total: int, bad: int) -> float:
+            rate = self.check(total, bad)
+            after()
+            return rate
+
+        return Gate(self.counts, check)
 
 
 def duplicate_rate_gate(
@@ -285,7 +300,7 @@ def log_layer_stats(layer: str, table: str, rows: int) -> None:
     logger.info("LAYER_COMPLETE layer=%s table=%s rows=%d", layer, table, rows)
 
 
-def write_with_observed_gates(
+def stage_with_observed_gates(
     df: DataFrame,
     path: str,
     null_rate_columns: dict[str, float] | None = None,
@@ -293,10 +308,11 @@ def write_with_observed_gates(
     layer: str = "",
     partition_by: list[str] | None = None,
     reconcile: tuple[int, float] | None = None,
-    _before_publish: Callable[[], object] | None = None,
-) -> dict:
-    """The one gated table commit: every medallion layer, both curation
-    tables and the training set go through here.
+) -> tuple[Staged, Callable[[], dict]]:
+    """The one gated table write: stage ``df`` as the next version of
+    the versioned table at ``path`` and return ``(staged, enforce)``.
+    Every medallion layer, both curation tables and the training set go
+    through here.
 
     The gate aggregates (row count, one null count per gated column)
     ride the write job itself as a ``df.observe`` observation, so the
@@ -304,29 +320,20 @@ def write_with_observed_gates(
     jobs — ``check_null_rate`` above (the reference's utils/quality.py
     shape) re-scans the table once per gate.
 
-    The table at ``path`` is a versioned table: the write commits
-    through ``versioned.write_versioned`` with the gates in its
-    ``validate`` hook — after the data write, before the manifest
-    publish — so a failing gate leaves an unpublished orphan and
-    readers keep the previous version.
+    ``enforce()`` checks those gates on the observed values and returns
+    ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>": float}``;
+    it raises ``DataQualityError`` on a breach. The caller publishes
+    ``staged`` only once ``enforce()`` (and any gates of its own) passed,
+    so a breach leaves an unpublished orphan and readers keep the
+    previous version.
 
     ``reconcile=(source_rows, drift_threshold)`` adds the reconcile gate
     (``reconcile_row_counts`` on the observed row count, table named by
-    ``layer``) to the same pre-publish hook, so a drifted table is never
-    published either.
-
-    ``_before_publish`` (internal: ``pipeline`` passes its layer's
-    barrier wait) runs last in that hook, after every gate passed; if
-    it raises, the table does not publish.
+    ``layer``).
 
     Null rates are compared RAW (nulls / rows, 0 on an empty table):
     rounding first would let e.g. 0.0010004 sneak under a 0.001
     threshold; the 6-dp form is for the message only.
-
-    Returns ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>":
-    float, "version": int, "table": DataFrame}``; ``table`` reads back
-    the committed version with the schema its manifest records (no
-    inference job).
     """
     from pyspark.sql import Observation
 
@@ -340,12 +347,11 @@ def write_with_observed_gates(
             for c in null_rate_columns
         ],
     )
-    out: dict = {}
 
-    def enforce() -> None:
+    def enforce() -> dict:
         got = obs.get
         n = int(got["n_rows"])
-        out["n_rows"] = n
+        out: dict = {"n_rows": n}
         if require_nonzero:
             assert_row_count_nonzero(n, layer)
         for col, threshold in null_rate_columns.items():
@@ -361,11 +367,30 @@ def write_with_observed_gates(
         if reconcile is not None:
             source_rows, drift = reconcile
             reconcile_row_counts(source_rows, n, drift, layer)
-        if _before_publish is not None:
-            _before_publish()
+        return out
 
-    out["version"] = write_versioned(
-        observed, path, partition_by=partition_by, validate=enforce
+    return stage_versioned(observed, path, partition_by), enforce
+
+
+def write_with_observed_gates(
+    df: DataFrame,
+    path: str,
+    null_rate_columns: dict[str, float] | None = None,
+    require_nonzero: bool = True,
+    layer: str = "",
+    partition_by: list[str] | None = None,
+    reconcile: tuple[int, float] | None = None,
+) -> dict:
+    """``stage_with_observed_gates``, its gates enforced, then published.
+
+    Returns ``enforce()``'s values plus ``"version": int`` and
+    ``"table": DataFrame``; ``table`` reads back the committed version
+    with the schema its manifest records (no inference job).
+    """
+    staged, enforce = stage_with_observed_gates(
+        df, path, null_rate_columns, require_nonzero, layer, partition_by, reconcile
     )
+    out = enforce()
+    out["version"] = staged.publish()
     out["table"] = read_versioned(df.sparkSession, path, out["version"])
     return out

@@ -32,9 +32,11 @@ A snapshot overwrite's base is the latest version when it commits; an
 append, a MERGE (``upsert_versioned``) and a compaction take the
 version they READ as base, so a commit that lands between their read
 and their publish makes them fail instead of being silently dropped.
-``_commit`` is the only code that writes a snapshot's data and
-publishes it; ``_manifest`` / ``_read_manifest`` are the only code that
-reads a manifest.
+A commit runs in two halves: ``_stage`` is the only code that writes a
+snapshot's data, returning a ``Staged`` version, and ``Staged.publish``
+the only code that publishes one; a caller may check the staged data
+between the two (``stage_versioned``). ``_manifest`` /
+``_read_manifest`` are the only code that reads a manifest.
 
 Scale notes: the protocol is pure metadata — one small JSON per commit,
 no data-file rewrite beyond the snapshot itself, identical on an object
@@ -49,6 +51,7 @@ import json
 import os
 import time
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -167,27 +170,51 @@ def _orphan_data_dirs(root: str) -> list[str]:
     return sorted(out)
 
 
-def _commit(
+@dataclass(frozen=True)
+class Staged:
+    """A version whose data is written but not yet published: the first
+    half of a commit. ``publish()`` makes it the table's next version;
+    ``read(spark)`` scans it before that. A staged version that is never
+    published leaves its dirs as invisible orphans that ``vacuum``
+    reclaims, and readers keep the previous version."""
+
+    root: str
+    version: int
+    manifest: dict
+
+    def publish(self) -> int:
+        """Publish the staged version and return its number; raises the
+        race error if another writer published that version first."""
+        manifest = {**self.manifest, "committed_at": time.time()}
+        _publish_manifest(self.root, self.version, manifest)
+        return self.version
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        """The staged snapshot, scanned as ``read_versioned`` scans a
+        published one."""
+        return _scan(spark, self.root, self.manifest)
+
+
+def _stage(
     df: DataFrame,
     root: str,
     base: int,
     partition_by: list[str] | None = None,
-    validate=None,
     schema: dict | None = None,
     append_to: list[str] | None = None,
     changes: DataFrame | None = None,
-) -> int:
-    """The one commit: write ``df`` as a fresh data dir (and a MERGE's
-    ``changes`` as its change dir), run ``validate``, then publish
-    version ``base + 1``. Returns that version.
+) -> Staged:
+    """The one data write: write ``df`` as a fresh data dir (and a
+    MERGE's ``changes`` as its change dir) and stage it as version
+    ``base + 1``.
 
     ``base`` is the version the commit was derived from. If another
     writer published ``base + 1`` first, the commit raises the race
-    error: before its data write when that version is already there,
-    else at the publish, leaving its dirs as invisible orphans. ``append_to``
-    (an append's prior dirs) makes the manifest reference those dirs
-    plus the new one; ``schema`` (JSON) is recorded instead of
-    ``df``'s when an append pins the table's schema.
+    error: here, before the data write, when that version is already
+    there, else at the publish, leaving its dirs as invisible orphans.
+    ``append_to`` (an append's prior dirs) makes the manifest reference
+    those dirs plus the new one; ``schema`` (JSON) is recorded instead
+    of ``df``'s when an append pins the table's schema.
     """
     version = base + 1
     # a commit that has already lost the race skips its data write; the
@@ -200,7 +227,15 @@ def _commit(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data)
-    changes_rel = None
+    rel = os.path.relpath(data, root)
+    manifest = {
+        "version": version,
+        "data": [*append_to, rel] if append_to else rel,
+        "schema": schema or df.schema.jsonValue(),
+        # recorded so maintenance jobs (compaction, upsert) preserve the
+        # disk layout instead of silently flattening it on rewrite
+        "partition_by": list(partition_by) if partition_by else [],
+    }
     if changes is not None:
         # change data rides the SAME crash protocol: written before the
         # manifest, so a failure leaves both dirs as invisible orphans
@@ -211,54 +246,38 @@ def _commit(
             root, _DATA, f"v{version:08d}cdf_{uuid.uuid4().hex[:8]}"
         )
         changes.write.mode("errorifexists").parquet(cdir)
-        changes_rel = os.path.relpath(cdir, root)
-    if validate is not None:
-        validate()
-
-    rel = os.path.relpath(data, root)
-    manifest = {
-        "version": version,
-        "data": [*append_to, rel] if append_to else rel,
-        "committed_at": time.time(),
-        "schema": schema or df.schema.jsonValue(),
-        # recorded so maintenance jobs (compaction, upsert) preserve the
-        # disk layout instead of silently flattening it on rewrite
-        "partition_by": list(partition_by) if partition_by else [],
-    }
-    if changes_rel:
-        manifest["changes"] = changes_rel
-    _publish_manifest(root, version, manifest)
-    return version
+        manifest["changes"] = os.path.relpath(cdir, root)
+    return Staged(root, version, manifest)
 
 
-def write_versioned(
-    df: DataFrame,
-    root: str,
-    partition_by: list[str] | None = None,
-    validate=None,
-) -> int:
-    """Commit ``df`` as the next snapshot version and return its number.
+def stage_versioned(
+    df: DataFrame, root: str, partition_by: list[str] | None = None
+) -> Staged:
+    """Write ``df`` as the next snapshot version without publishing it.
 
-    Data first, manifest last (see module docstring): a failure between
-    the two leaves an orphan data dir that readers never observe and
-    ``vacuum`` removes. ``partition_by`` disk-partitions the snapshot —
-    partition pruning composes with versioning since each snapshot is an
-    ordinary parquet tree.
-
-    ``validate`` (no-arg callable) runs after the data write completes
-    but BEFORE the manifest publish — the gate-conditional commit point
-    quality.write_with_observed_gates puts its gates in. Because the write
-    action has finished, any ``df.observe`` metrics are available inside
-    the hook; if it raises, the manifest is never published, the staged
-    data dir is an ordinary orphan (invisible to readers, reclaimed by
-    ``vacuum``), and readers keep serving the previous version.
+    Data first, manifest last (see module docstring): the staged data
+    dir is invisible to readers until ``Staged.publish()``; between the
+    two the caller can check it, e.g. read the write's ``df.observe``
+    metrics or scan it with ``Staged.read``. ``partition_by``
+    disk-partitions the snapshot — partition pruning composes with
+    versioning since each snapshot is an ordinary parquet tree.
     """
     # an overwrite does not depend on the prior snapshot's contents, so
     # its base is whatever is latest now; data dirs are writer-unique,
     # so a crashed or race-losing writer's leftovers never block a
     # version number and vacuum() reclaims them
     base = max(list_versions(root), default=0)
-    return _commit(df, root, base, partition_by, validate)
+    return _stage(df, root, base, partition_by)
+
+
+def write_versioned(
+    df: DataFrame, root: str, partition_by: list[str] | None = None
+) -> int:
+    """Commit ``df`` as the next snapshot version and return its number:
+    ``stage_versioned`` then ``publish``. A failure between the two
+    leaves an orphan data dir that readers never observe and ``vacuum``
+    removes."""
+    return stage_versioned(df, root, partition_by).publish()
 
 
 def _publish_manifest(root: str, version: int, manifest: dict) -> None:
@@ -290,7 +309,6 @@ def _race_error(root: str, version: int) -> RuntimeError:
 def append_versioned(
     df: DataFrame,
     root: str,
-    validate=None,
     merge_schema: bool = False,
 ) -> int:
     """Commit ``df`` APPENDED to the latest snapshot as the next version,
@@ -327,7 +345,7 @@ def append_versioned(
     """
     versions = list_versions(root)
     if not versions:
-        return _commit(df, root, 0, validate=validate)
+        return _stage(df, root, 0).publish()
     base = versions[-1]
     prior = _read_manifest(root, base)
 
@@ -376,15 +394,14 @@ def append_versioned(
             f"{sorted(df.columns)} (merge_schema=True to evolve)"
         )
     df = df.select(*table_schema.fieldNames())
-    return _commit(
+    return _stage(
         df,
         root,
         base,
         prior.get("partition_by"),
-        validate,
         schema=schema_json,
         append_to=_manifest_dirs(prior),
-    )
+    ).publish()
 
 
 def read_versioned(
@@ -392,7 +409,11 @@ def read_versioned(
 ) -> DataFrame:
     """Read a committed snapshot — latest by default, or time-travel to
     an explicit ``version``."""
-    _, manifest = _manifest(root, version)
+    return _scan(spark, root, _manifest(root, version)[1])
+
+
+def _scan(spark: SparkSession, root: str, manifest: dict) -> DataFrame:
+    """The snapshot ``manifest`` names, with the schema it records."""
     reader = spark.read
     if "schema" in manifest:
         # pin the committed schema: a partitioned snapshot's partition
@@ -507,7 +528,9 @@ def compact_versioned(
     # Thread the recorded partition layout through the rewrite — without
     # it, compacting a disk-partitioned snapshot would silently drop the
     # layout and every post-compaction 'latest' read loses pruning.
-    return _commit(df.coalesce(n_files), root, base, manifest.get("partition_by"))
+    return _stage(
+        df.coalesce(n_files), root, base, manifest.get("partition_by")
+    ).publish()
 
 
 def upsert_versioned(
@@ -593,9 +616,9 @@ def upsert_versioned(
             .alias("_op"),
         )
     # preserve the read snapshot's recorded disk layout across the merge
-    return _commit(
+    return _stage(
         merged, root, base, manifest.get("partition_by"), changes=changes
-    )
+    ).publish()
 
 
 def added_dirs(root: str, version: int) -> list[str] | None:

@@ -1,10 +1,10 @@
-"""Gates that run before publish: a refresh whose non-empty, null-rate
-or reconcile gate trips must leave the previous version of the gated table as the
-latest, readable with the previous run's rows. A layer commits its
-tables concurrently and all or nothing: a trip anywhere in it leaves
-every table of the layer, and every later layer, as it was. The star
-inputs come from the benchmark's generator, so these run without the
-driver testdata."""
+"""Gates that run before publish: a refresh whose non-empty, null-rate,
+reconcile, duplicate or RI gate trips must leave the previous version of
+the gated table as the latest, readable with the previous run's rows. A
+layer stages its tables concurrently, checks every gate, and only then
+publishes: a trip anywhere in it leaves every table of the layer, and
+every later layer, as it was. The star inputs come from the benchmark's
+generator, so these run without the driver testdata."""
 
 from __future__ import annotations
 
@@ -118,29 +118,6 @@ def test_tripped_gate_keeps_previous_version(
     assert _rows(read_versioned(spark, path)) == first
 
 
-def test_silver_ri_breach_names_the_child_table(spark, star, tmp_path):
-    """Silver's fused duplicate and RI gates label a breach with the
-    table it is on. (What silver publishes on such a breach is not
-    asserted: these gates still run after the layer's publish.)"""
-    from pyspark.sql import functions as F
-
-    dirs, refreshed = star
-    out = str(tmp_path / "out")
-    shutil.copytree(refreshed, out)
-    res = pipeline.PipelineResult()
-    bronze = pipeline.run_bronze(spark, dirs["good"], out, res)
-    key = F.col("l_orderkey")
-    # a shift far past every order key keeps (l_orderkey, l_linenumber)
-    # unique and the row count unchanged: only the RI gate can trip
-    bronze["lineitem"] = bronze["lineitem"].withColumn(
-        "l_orderkey", F.when(key % 7 == 0, key + 10**12).otherwise(key)
-    )
-    with pytest.raises(
-        DataQualityError, match=r"^\[silver\.lineitem\] orphan rate .* on 'l_orderkey'"
-    ):
-        pipeline.run_silver(spark, bronze, out, res)
-
-
 def _layer_state(spark, out, layer):
     """Per table of ``layer``: its versions and its latest rows."""
     return {
@@ -161,6 +138,36 @@ def _bronze_last_table(spark, dirs, out):
     pipeline.run_medallion(spark, dirs["empty_lineitem"], out)
 
 
+def _silver_from_bronze(change):
+    """Bronze from the good inputs, ``change`` applied to its frames,
+    then silver over them."""
+
+    def trip(spark, dirs, out):
+        res = pipeline.PipelineResult()
+        bronze = pipeline.run_bronze(spark, dirs["good"], out, res)
+        change(bronze)
+        pipeline.run_silver(spark, bronze, out, res)
+
+    return trip
+
+
+def _orphan_order_keys(bronze):
+    from pyspark.sql import functions as F
+
+    key = F.col("l_orderkey")
+    # a shift far past every order key keeps (l_orderkey, l_linenumber)
+    # unique and the row count unchanged: only the RI gate can trip
+    bronze["lineitem"] = bronze["lineitem"].withColumn(
+        "l_orderkey", F.when(key % 7 == 0, key + 10**12).otherwise(key)
+    )
+
+
+def _doubled_lineitem(bronze):
+    # every row twice: lineitem's lenient duplicate gate trips, and so
+    # does its reconcile gate, which ranks after it
+    bronze["lineitem"] = bronze["lineitem"].unionByName(bronze["lineitem"])
+
+
 def _gold_later_mart(spark, dirs, out):
     silver = {
         name: read_versioned(spark, f"{out}/silver/{name}")
@@ -179,15 +186,26 @@ LAYERS = ("bronze", "silver", "gold")
         (_bronze_last_table, "bronze", r"\[bronze\.lineitem\] has 0 rows"),
         (_silver, "silver", r"\[silver\.orders\] null rate"),
         (_gold_later_mart, "gold", r"\[gold\.mart_region_performance\] has 0 rows"),
+        (
+            _silver_from_bronze(_orphan_order_keys),
+            "silver",
+            r"^\[silver\.lineitem\] orphan rate .* on 'l_orderkey'",
+        ),
+        (
+            _silver_from_bronze(_doubled_lineitem),
+            "silver",
+            r"^\[silver\.lineitem\] duplicate rate",
+        ),
     ],
-    ids=LAYERS,
+    ids=[*LAYERS, "silver_ri", "silver_duplicate"],
 )
 def test_tripped_gate_publishes_no_table_of_its_layer(
     spark, star, tmp_path, trip, layer, message
 ):
     """Each case trips a table that is not its layer's first, so a
     layer that committed table by table would have published the
-    tables before it."""
+    tables before it. Silver's duplicate and RI gates read the staged
+    tables and are checked before any of them publishes."""
     dirs, refreshed = star
     out = str(tmp_path / "out")
     shutil.copytree(refreshed, out)
@@ -233,14 +251,28 @@ def test_layer_threads_run_their_jobs_in_the_callers_job_group(
     assert len(tracker.getJobIdsForGroup("bronze_refresh")) >= len(pipeline.BRONZE_TABLES)
 
 
-def _run_layer(spark, tables, commit) -> dict:
-    """``_commit_layer`` on a thread joined with a timeout, so a barrier
-    that never opens fails the test instead of hanging it."""
-    outcome: dict = {}
+class _FakeStaged:
+    def __init__(self, name, published):
+        self.name, self.published = name, published
+
+    def publish(self):
+        self.published.append(self.name)
+
+    def read(self, spark):
+        return self.name
+
+
+def _run_layer(spark, tables, stage) -> dict:
+    """``_commit_layer`` on a thread joined with a timeout, so a layer
+    whose staging threads never finish fails the test instead of
+    hanging it."""
+    outcome: dict = {"counts": {}}
 
     def call():
         try:
-            outcome["results"] = pipeline._commit_layer(spark, tables, commit)
+            outcome["results"] = pipeline._commit_layer(
+                spark, "test", tables, stage, outcome["counts"]
+            )
         except Exception as e:  # the outcome the test asserts on
             outcome["error"] = e
 
@@ -252,35 +284,43 @@ def _run_layer(spark, tables, commit) -> dict:
 
 
 def test_commit_layer_is_all_or_nothing_and_raises_in_table_order(spark):
-    """More commit threads than cores, switching often: every table
+    """More staging threads than cores, switching often: every table
     publishes and the results come back in table order; with two tables
-    failing, none publishes and the earlier table's error is raised even
-    though the later one fails first."""
+    failing to stage, none publishes and the earlier table's error is
+    raised even though the later one fails first; a table whose gates
+    breach after every table staged stops every table publishing."""
     tables = [f"t{i:02d}" for i in range(12)]
     published = []
 
-    def commit(name, before_publish):
-        if name == "t03":
-            time.sleep(0.2)
-            raise ValueError(name)
-        if name == "t09":
-            raise ValueError(name)
-        before_publish()
-        published.append(name)
-        return {"name": name}
+    def stager(fail_stage=(), fail_gate=()):
+        def stage(name):
+            if name in fail_stage:
+                if name == "t03":
+                    time.sleep(0.2)  # fails after t09
+                raise ValueError(name)
 
-    def healthy(name, before_publish):
-        before_publish()
-        return {"name": name}
+            def enforce():
+                if name in fail_gate:
+                    raise DataQualityError(name)
+                return {"n_rows": int(name[1:])}
+
+            return _FakeStaged(name, published), enforce
+
+        return stage
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        ok = _run_layer(spark, tables, healthy)
-        failed = _run_layer(spark, tables, commit)
+        ok = _run_layer(spark, tables, stager())
+        assert published == tables
+        published.clear()
+        failed = _run_layer(spark, tables, stager(fail_stage=("t03", "t09")))
+        breached = _run_layer(spark, tables, stager(fail_gate=("t11",)))
     finally:
         sys.setswitchinterval(interval)
-    assert list(ok["results"].items()) == [(n, {"name": n}) for n in tables]
+    assert list(ok["results"].items()) == [(n, n) for n in tables]
+    assert list(ok["counts"].items()) == [(n, i) for i, n in enumerate(tables)]
     assert isinstance(failed["error"], ValueError)
     assert str(failed["error"]) == "t03"
+    assert isinstance(breached["error"], DataQualityError)
     assert published == []

@@ -1,8 +1,9 @@
 """Tests for the round-4 adversarial-review fixes on the pipeline /
 curation / quality / versioned surfaces:
 
-- gate-conditional versioned commit (validate hook runs post-write,
-  pre-publish; a failing gate never publishes a manifest)
+- gate-conditional versioned commit (a staged version's observed
+  metrics are readable before publish; one never published stays
+  invisible)
 - silver null-rate gates observed on the write pass
 - lenient inverted duplicate gate for keyless tables (lineitem)
 - sessionize tie-break parameterization
@@ -20,38 +21,40 @@ from instacart_medallion_lakehouse_spark.quality import DataQualityError
 
 
 class TestGateConditionalCommit:
-    def test_failing_validate_never_publishes(self, spark, sf_dir, tmp_path):
+    @pytest.fixture()
+    def region(self, spark):
+        # inline, with the driver testdata's region columns, so these
+        # run where that testdata is absent
+        names = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
+        return spark.createDataFrame(
+            list(enumerate(names)), "r_regionkey int, r_name string"
+        )
+
+    def test_unpublished_stage_is_invisible(self, spark, region, tmp_path):
         root = str(tmp_path / "tbl")
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
         assert V.write_versioned(region, root) == 1
+        first = sorted(region.collect())
 
-        def breach():
-            raise DataQualityError("planted gate breach")
-
-        with pytest.raises(DataQualityError):
-            V.write_versioned(region.limit(0), root, validate=breach)
-        # the breached attempt is an unpublished orphan: version list and
-        # latest-readable snapshot are untouched
+        staged = V.stage_versioned(region.limit(0), root)
+        assert staged.version == 2
+        assert staged.read(spark).count() == 0
+        # never published (a gate breached): the staged attempt is an
+        # orphan, and the version list and latest snapshot are untouched
         assert V.list_versions(root) == [1]
-        assert V.read_versioned(spark, root).count() == region.count()
+        assert sorted(V.read_versioned(spark, root).collect()) == first
 
-    def test_validate_sees_observed_metrics(self, spark, sf_dir, tmp_path):
+    def test_observed_metrics_readable_before_publish(self, spark, region, tmp_path):
         from pyspark.sql import Observation
 
         root = str(tmp_path / "tbl")
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
         obs = Observation("commit_gate")
-        seen = {}
-
-        def gate():
-            seen["n"] = int(obs.get["n_rows"])
-
-        V.write_versioned(
-            region.observe(obs, F.count(F.lit(1)).alias("n_rows")),
-            root,
-            validate=gate,
+        staged = V.stage_versioned(
+            region.observe(obs, F.count(F.lit(1)).alias("n_rows")), root
         )
-        assert seen["n"] == region.count()
+        assert int(obs.get["n_rows"]) == region.count()
+        assert V.list_versions(root) == []
+        assert staged.publish() == 1
+        assert V.list_versions(root) == [1]
 
     def test_empty_gold_mart_not_promoted(self, spark, sf_dir, tmp_path):
         # run_gold over a silver dict whose lineitem is empty: the 0-row
