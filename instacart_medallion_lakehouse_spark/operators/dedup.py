@@ -812,7 +812,6 @@ def hamming_band_pairs(
     band_bits: int,
     max_hamming: int,
     id_col: str = "doc_id",
-    sig_b: DataFrame | None = None,
     bands: DataFrame | None = None,
     bands_b: DataFrame | None = None,
 ) -> DataFrame:
@@ -825,19 +824,19 @@ def hamming_band_pairs(
     all of them with zero recall loss; bit_count(xor) verifies
     candidates.
 
-    One-sided (``sig_b`` None): self-join with ``a._id < b._id`` —
-    each unordered pair once. Two-sided: ``sig`` is the BATCH side and
-    ``sig_b`` the INDEX side (the incremental batch-vs-index shape of
-    lsh_candidate_pairs; caller guarantees disjoint id sets), emitting
-    (id_a=batch, id_b=index) ordered pairs.
+    One-sided (``bands_b`` None): self-join with ``a._id < b._id`` —
+    each unordered pair once. Two-sided: ``sig`` (or ``bands``) is the
+    BATCH side and ``bands_b`` the INDEX side (the incremental
+    batch-vs-index shape of lsh_candidate_pairs; caller guarantees
+    disjoint id sets), emitting (id_a=batch, id_b=index) ordered pairs.
 
     Used by the multimodal perceptual-hash dedup (image dHash, audio
     and video fingerprints). The signature tables are pinned — one row
     per item, feeding both sides of the band join.
 
     ``bands``/``bands_b`` (r11): a PREBUILT band table (the
-    ``_hash_band_table`` schema ``(_id, _sh, idx, val)``) replaces the
-    corresponding ``sig`` side — the band-store path
+    ``_hash_band_table`` schema ``(_id, _sh, idx, val)``) for the batch
+    side (in place of ``sig``) or the index side — the band-store path
     (queries.shared_table with ``bucket_by=["idx", "val"]``): a store
     bucketed+sorted on ``(idx, val)`` makes this join
     exchange-AND-sort-free on that side, so the only remaining shuffle
@@ -853,13 +852,6 @@ def hamming_band_pairs(
         sig.count()  # materialize before the band join (ngram note)
         bands_a = _hash_band_table(sig, hash_col, n_bands, band_bits, id_col)
     if bands_b is not None:
-        cond_ids = F.lit(True)
-    elif sig_b is not None:
-        sig_b = pin(sig_b)
-        sig_b.count()
-        bands_b = _hash_band_table(
-            sig_b, hash_col, n_bands, band_bits, id_col
-        )
         cond_ids = F.lit(True)
     else:
         # one-sided self-join: with a prebuilt (bucketed) band table

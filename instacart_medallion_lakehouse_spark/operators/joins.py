@@ -1,9 +1,10 @@
-"""Join operators: star enrichment, RI orphans, broadcast policy.
+"""Join operators: star enrichment, as-of join, broadcast policy.
 
 Reference parity (SURVEY.md §2.3):
 - J1 multi-way star join  — notebooks/03_gold_metrics.py:53-58
 - J3 left outer           — 03_gold_metrics.py:124,198,205
-- J4 left anti (orphans)  — utils/quality.py:111-115
+- J4 left anti (orphans)  — utils/quality.py:111-115; counted in
+  ``quality.orphan_counts`` as a left join to the parent's distinct keys
 - J6 broadcast for small dims — configs/pipeline_config.yml:28-29
 
 Scale posture: the fact table is joined LAST against pre-projected,
@@ -59,19 +60,6 @@ def enriched_lineitem(
             F.col("n_regionkey") == F.col("r_regionkey"),
             "inner",
         )
-    )
-
-
-def orphan_rows(child: DataFrame, fk: str, parent: DataFrame, pk: str) -> DataFrame:
-    """J4: child rows whose FK has no matching parent PK (RI violation set).
-
-    Left-anti join with the parent pre-projected to its distinct key —
-    only keys move, and a small parent key-set broadcasts.
-    """
-    return child.filter(F.col(fk).isNotNull()).join(
-        parent.select(F.col(pk).alias("__pk")).distinct(),
-        on=F.col(fk) == F.col("__pk"),
-        how="left_anti",
     )
 
 

@@ -4,23 +4,30 @@ Same contract as reference utils/quality.py (SURVEY.md §2.11): driver-side
 Python functions that take DataFrames, compose *built-in* operators, and
 raise ``DataQualityError`` on breach. Zero row-level Python UDFs.
 
+Each rate gate (null rate, duplicate rate, orphan rate) is defined once:
+a counts builder (``null_counts``, ``duplicate_counts``,
+``orphan_counts``) that yields the gate's ``total`` and ``bad`` rows as
+one aggregate, and the one rate check (``_rate_check``: 0.0 on an empty
+input, the RAW rate compared with the threshold, one breach message
+form). The gates, their one-gate ``check_*`` forms, the write's observed
+null-rate gate and the registry's gate queries all use those.
+
 Scale-first deviations from the reference implementation (same semantics,
 better plans at 100 TB):
-- ``check_null_rate`` uses ONE conditional aggregation pass instead of two
-  full scans (reference utils/quality.py:28-62 runs ``df.count()`` and a
+- the null rate is ONE conditional aggregation pass instead of two full
+  scans (reference utils/quality.py:28-62 runs ``df.count()`` and a
   second ``filter(isNull).count()``).
-- ``check_duplicate_rate`` uses ``groupBy(pk).count()`` with map-side
+- the duplicate rate uses ``groupBy(pk).count()`` with map-side
   partial aggregation instead of a count-over-partition window
   (reference utils/quality.py:74-79) — a window shuffles every full row,
   the groupBy shuffles only (key, partial-count) pairs.
-- every duplicate and referential-integrity gate is ONE aggregate that
-  yields its total and its breach count together; the reference runs a
-  ``df.count()`` and then a second action per gate. The RI gate is a
-  left join of the non-null foreign keys to the parent's DISTINCT keys
-  (count the unmatched), not a ``left_anti`` join plus a ``count()``.
-- ``run_gates`` batches any number of those aggregates into one Spark
-  action (a union of one-row frames, one ``collect()``) and then checks
-  them in list order; ``check_duplicate_rate`` and
+- the orphan rate is a left join of the non-null foreign keys to the
+  parent's DISTINCT keys (count the unmatched) in the same aggregate as
+  its total, not a ``count()`` plus a ``left_anti`` join and a second
+  ``count()``.
+- ``run_gates`` batches any number of gates into one Spark action (a
+  union of one-row frames, one ``collect()``) and then checks them in
+  list order; ``check_null_rate``, ``check_duplicate_rate`` and
   ``check_referential_integrity`` are its one-gate form.
 - a table write's non-empty, null-rate and reconcile gates are observed
   ON the write pass (``stage_with_observed_gates``: zero extra scans)
@@ -37,7 +44,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .logging_util import get_logger
@@ -108,37 +115,12 @@ def load_pipeline_config(path: str) -> dict:
         return yaml.safe_load(f) or {}
 
 
-def check_null_rate(
-    df: DataFrame, column: str, threshold: float, layer: str = ""
-) -> float:
-    """null_rate = nulls/total (0 if total=0); raise if > threshold.
-
-    Semantics: reference utils/quality.py:28-62. Single aggregation job.
-    The raw rate is compared, so one null in millions of rows still
-    breaches a 0.0 threshold; the rate returned and logged is rounded
-    to 6 dp.
-    """
-    row = df.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col(column).isNull(), 1).otherwise(0)).alias("nulls"),
-    ).collect()[0]
-    total, nulls = row["total"], row["nulls"] or 0
-    rate = nulls / total if total else 0.0
-    if rate > threshold:
-        raise DataQualityError(
-            f"[{layer}] null rate {rate:.6f} ({nulls}/{total}) on '{column}' "
-            f"exceeds threshold {threshold}"
-        )
-    logger.info("NULL_RATE_OK layer=%s column=%s rate=%.6f", layer, column, rate)
-    return round(rate, 6)
-
-
 @dataclass(frozen=True)
 class Gate:
     """One gate for ``run_gates``: ``counts`` is a one-row frame of
-    ``total`` and ``bad`` (longs); ``check(total, bad)`` returns the rate
-    or raises ``DataQualityError``. Checks compare the raw rate with
-    the threshold and return it rounded to 6 dp."""
+    ``total`` and ``bad`` (longs; ``bad`` may be null when ``total`` is
+    0); ``check(total, bad)`` returns the rate or raises
+    ``DataQualityError`` (``_rate_check``)."""
 
     counts: DataFrame
     check: Callable[[int, int], float]
@@ -154,19 +136,52 @@ class Gate:
         return Gate(self.counts, check)
 
 
-def duplicate_rate_gate(
-    df: DataFrame, columns: str | list[str], threshold: float, layer: str = ""
-) -> Gate:
-    """Fraction of rows belonging to any key-group of size > 1.
+def _rate_check(
+    layer: str, kind: str, subject: str, threshold: float, ok_line: str
+) -> Callable[[int, int], float]:
+    """The one rate check every rate gate uses: ``check(total, bad)``
+    is 0.0 on an empty input, raises ``DataQualityError`` when the RAW
+    rate ``bad / total`` exceeds ``threshold`` (one bad row in millions
+    still breaches a 0.0 threshold), else logs ``ok_line`` with the rate
+    and returns the rate rounded to 6 dp."""
+
+    def check(total: int, bad: int) -> float:
+        if not total:
+            return 0.0
+        rate = bad / total
+        if rate > threshold:
+            raise DataQualityError(
+                f"[{layer}] {kind} rate {rate:.6f} ({bad}/{total}) on {subject} "
+                f"exceeds threshold {threshold}"
+            )
+        logger.info("%s rate=%.6f", ok_line, rate)
+        return round(rate, 6)
+
+    return check
+
+
+def _nulls(column: str) -> Column:
+    """Null count of ``column`` (null on an empty input, like any sum)."""
+    return F.sum(F.when(F.col(column).isNull(), 1).otherwise(0))
+
+
+def null_counts(df: DataFrame, column: str) -> DataFrame:
+    """``total`` rows and ``bad`` = rows whose ``column`` is null: one
+    conditional aggregate. Semantics: reference utils/quality.py:28-62."""
+    return df.agg(F.count(F.lit(1)).alias("total"), _nulls(column).alias("bad"))
+
+
+def duplicate_counts(df: DataFrame, columns: list[str]) -> DataFrame:
+    """``total`` rows and ``bad`` = rows belonging to any key-group of
+    size > 1.
 
     Counts ALL members of duplicate groups, not just the extras — the
     reference's exact definition (utils/quality.py:65-94). Null keys
     group together, as in any ``groupBy``.
     """
-    cols = [columns] if isinstance(columns, str) else list(columns)
     n = F.col("_grp_n")
-    counts = (
-        df.groupBy(*cols)
+    return (
+        df.groupBy(*columns)
         .agg(F.count(F.lit(1)).alias("_grp_n"))
         .agg(
             F.coalesce(F.sum(n), F.lit(0)).alias("total"),
@@ -174,19 +189,53 @@ def duplicate_rate_gate(
         )
     )
 
-    def check(total: int, bad: int) -> float:
-        if total == 0:
-            return 0.0
-        rate = bad / total
-        if rate > threshold:
-            raise DataQualityError(
-                f"[{layer}] duplicate rate {rate:.6f} ({bad}/{total}) on {cols} "
-                f"exceeds threshold {threshold}"
-            )
-        logger.info("DUPLICATE_RATE_OK layer=%s columns=%s rate=%.6f", layer, cols, rate)
-        return round(rate, 6)
 
-    return Gate(counts, check)
+def orphan_counts(child: DataFrame, fk: str, parent: DataFrame, pk: str) -> DataFrame:
+    """``total`` non-null ``fk`` rows and ``bad`` = those with no
+    matching ``pk`` in ``parent`` (reference utils/quality.py:97-130).
+
+    The parent is projected to its distinct key column FIRST, so only
+    keys shuffle (or broadcast when small) and the left join cannot fan
+    out; a null parent key matches nothing.
+    """
+    keys = parent.select(F.col(pk).alias("__pk")).distinct()
+    return (
+        child.select(F.col(fk).alias("__fk"))
+        .filter(F.col("__fk").isNotNull())
+        .join(keys, F.col("__fk") == F.col("__pk"), "left")
+        .agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count(F.when(F.col("__pk").isNull(), 1)).alias("bad"),
+        )
+    )
+
+
+def _null_check(column: str, threshold: float, layer: str) -> Callable[[int, int], float]:
+    return _rate_check(
+        layer, "null", f"'{column}'", threshold,
+        f"NULL_RATE_OK layer={layer} column={column}",
+    )
+
+
+def null_rate_gate(
+    df: DataFrame, column: str, threshold: float, layer: str = ""
+) -> Gate:
+    """Fraction of rows whose ``column`` is null (``null_counts``)."""
+    return Gate(null_counts(df, column), _null_check(column, threshold, layer))
+
+
+def duplicate_rate_gate(
+    df: DataFrame, columns: str | list[str], threshold: float, layer: str = ""
+) -> Gate:
+    """Fraction of rows in a duplicated key-group (``duplicate_counts``)."""
+    cols = [columns] if isinstance(columns, str) else list(columns)
+    return Gate(
+        duplicate_counts(df, cols),
+        _rate_check(
+            layer, "duplicate", str(cols), threshold,
+            f"DUPLICATE_RATE_OK layer={layer} columns={cols}",
+        ),
+    )
 
 
 def referential_integrity_gate(
@@ -197,37 +246,14 @@ def referential_integrity_gate(
     layer: str = "",
     threshold: float = 0.0,
 ) -> Gate:
-    """orphan_rate over non-null FK rows; default zero tolerance.
-
-    Semantics: reference utils/quality.py:97-130. The parent is projected
-    to its distinct key column FIRST, so only keys shuffle (or broadcast
-    when small) and the left join cannot fan out; a null parent key
-    matches nothing.
-    """
-    keys = parent.select(F.col(pk).alias("__pk")).distinct()
-    counts = (
-        child.select(F.col(fk).alias("__fk"))
-        .filter(F.col("__fk").isNotNull())
-        .join(keys, F.col("__fk") == F.col("__pk"), "left")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.count(F.when(F.col("__pk").isNull(), 1)).alias("bad"),
-        )
+    """orphan_rate over non-null FK rows (``orphan_counts``); default
+    zero tolerance."""
+    return Gate(
+        orphan_counts(child, fk, parent, pk),
+        _rate_check(
+            layer, "orphan", f"'{fk}'", threshold, f"RI_OK layer={layer} fk={fk}"
+        ),
     )
-
-    def check(total: int, orphans: int) -> float:
-        if total == 0:
-            return 0.0
-        rate = orphans / total
-        if rate > threshold:
-            raise DataQualityError(
-                f"[{layer}] orphan rate {rate:.6f} ({orphans}/{total}) on '{fk}' "
-                f"exceeds threshold {threshold}"
-            )
-        logger.info("RI_OK layer=%s fk=%s rate=%.6f", layer, fk, rate)
-        return round(rate, 6)
-
-    return Gate(counts, check)
 
 
 def run_gates(gates: list[Gate]) -> list[float]:
@@ -242,6 +268,13 @@ def run_gates(gates: list[Gate]) -> list[float]:
     ]
     rows = {r["gate"]: r for r in reduce(lambda a, b: a.union(b), tagged).collect()}
     return [g.check(rows[i]["total"], rows[i]["bad"]) for i, g in enumerate(gates)]
+
+
+def check_null_rate(
+    df: DataFrame, column: str, threshold: float, layer: str = ""
+) -> float:
+    """``null_rate_gate`` evaluated alone: one Spark action."""
+    return run_gates([null_rate_gate(df, column, threshold, layer)])[0]
 
 
 def check_duplicate_rate(
@@ -321,8 +354,9 @@ def stage_with_observed_gates(
     shape) re-scans the table once per gate.
 
     ``enforce()`` checks those gates on the observed values and returns
-    ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>": float}``;
-    it raises ``DataQualityError`` on a breach. The caller publishes
+    ``{"n_rows": int, "nulls_<col>": int, "null_rate_<col>": float}``
+    (the rate as ``null_rate_gate``'s check returns it: 6 dp); it raises
+    ``DataQualityError`` on a breach. The caller publishes
     ``staged`` only once ``enforce()`` (and any gates of its own) passed,
     so a breach leaves an unpublished orphan and readers keep the
     previous version.
@@ -331,9 +365,9 @@ def stage_with_observed_gates(
     (``reconcile_row_counts`` on the observed row count, table named by
     ``layer``).
 
-    Null rates are compared RAW (nulls / rows, 0 on an empty table):
-    rounding first would let e.g. 0.0010004 sneak under a 0.001
-    threshold; the 6-dp form is for the message only.
+    Null rates are checked by the null-rate gate's own check, so they
+    are compared RAW (nulls / rows, 0 on an empty table): rounding first
+    would let e.g. 0.0010004 sneak under a 0.001 threshold.
     """
     from pyspark.sql import Observation
 
@@ -342,10 +376,7 @@ def stage_with_observed_gates(
     observed = df.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        *[
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
-            for c in null_rate_columns
-        ],
+        *[_nulls(c).alias(f"nulls_{c}") for c in null_rate_columns],
     )
 
     def enforce() -> dict:
@@ -355,15 +386,8 @@ def stage_with_observed_gates(
         if require_nonzero:
             assert_row_count_nonzero(n, layer)
         for col, threshold in null_rate_columns.items():
-            nulls = int(got[f"nulls_{col}"] or 0)
-            rate = nulls / n if n else 0.0
-            out[f"nulls_{col}"] = nulls
-            out[f"null_rate_{col}"] = rate
-            if rate > threshold:
-                raise DataQualityError(
-                    f"[{layer}] null rate {rate:.6f} ({nulls}/{n}) on '{col}' "
-                    f"exceeds threshold {threshold}"
-                )
+            nulls = out[f"nulls_{col}"] = int(got[f"nulls_{col}"] or 0)
+            out[f"null_rate_{col}"] = _null_check(col, threshold, layer)(n, nulls)
         if reconcile is not None:
             source_rows, drift = reconcile
             reconcile_row_counts(source_rows, n, drift, layer)

@@ -29,10 +29,11 @@ from .functions.scalar import dround
 from .io import read_events
 from .operators.aggs import avg_fixedpoint
 from .operators.cleanse import dedup_keep_first, enrich_events_time
-from .operators.joins import enriched_lineitem, orphan_rows
+from .operators.joins import enriched_lineitem
 from .operators.windows import sessionize
 from .pins import release_pins  # noqa: F401  (re-export: harness/tests)
 from .plans import marts
+from .quality import duplicate_counts, null_counts, orphan_counts
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -514,7 +515,8 @@ def enrich_case(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Quality gates as 1-row DataFrames (reference utils/quality.py; SURVEY §2.11)
+# Quality gates as 1-row DataFrames (reference utils/quality.py; SURVEY §2.11):
+# each projects the engine gate's own counts aggregate (quality.*_counts)
 # ---------------------------------------------------------------------------
 
 
@@ -529,12 +531,11 @@ def enrich_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def null_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
-    nulls = F.sum(F.when(F.col("props").isNull(), 1).otherwise(0))
-    return events.agg(
-        F.count(F.lit(1)).alias("total"),
-        nulls.alias("nulls"),
-        dround(nulls * F.lit(1.0) / F.count(F.lit(1)), 6).alias("null_rate"),
+    counts = null_counts(_t(spark, sf_dir, "events"), "props")
+    return counts.select(
+        "total",
+        F.col("bad").alias("nulls"),
+        dround(F.col("bad") * F.lit(1.0) / F.col("total"), 6).alias("null_rate"),
     )
 
 
@@ -552,20 +553,11 @@ def null_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def duplicate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference semantics: count ALL members of >1-sized key groups
     (utils/quality.py:65-94), via groupBy partial agg — not a window."""
-    li = _t(spark, sf_dir, "lineitem")
-    total = li.agg(F.count(F.lit(1)).alias("total"))
-    dups = (
-        li.groupBy("l_orderkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("dup_rows"))
-    )
-    return total.crossJoin(dups).select(
-        F.col("total").cast("long").alias("total"),
-        F.col("dup_rows").cast("long").alias("dup_rows"),
-        dround(F.col("dup_rows") * F.lit(1.0) / F.col("total"), 6).alias(
-            "duplicate_rate"
-        ),
+    counts = duplicate_counts(_t(spark, sf_dir, "lineitem"), ["l_orderkey"])
+    return counts.select(
+        "total",
+        F.col("bad").alias("dup_rows"),
+        dround(F.col("bad") * F.lit(1.0) / F.col("total"), 6).alias("duplicate_rate"),
     )
 
 
@@ -581,15 +573,13 @@ def duplicate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ri_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    orphans = orphan_rows(li, "l_orderkey", orders, "o_orderkey").agg(
-        F.count(F.lit(1)).alias("orphan_rows")
+    counts = orphan_counts(
+        _t(spark, sf_dir, "lineitem"), "l_orderkey",
+        _t(spark, sf_dir, "orders"), "o_orderkey",
     )
-    child = li.filter(F.col("l_orderkey").isNotNull()).agg(
-        F.count(F.lit(1)).alias("child_rows")
+    return counts.select(
+        F.col("bad").alias("orphan_rows"), F.col("total").alias("child_rows")
     )
-    return orphans.crossJoin(child)
 
 
 # ---------------------------------------------------------------------------

@@ -919,7 +919,7 @@ def urgent_customers_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     one urgent order, rolled up per market segment — the semi join
     emits each matching customer ONCE regardless of how many urgent
     orders they placed (an inner join + distinct would pay an extra
-    dedup shuffle for the same answer; the anti twin is ri_orphans).
+    dedup shuffle for the same answer).
     The probe side carries only the join key through the shuffle, and
     the priority filter pushes into the orders scan."""
     cust = _t(spark, sf_dir, "customer")

@@ -45,9 +45,8 @@ Schema is pinned at stream start from the latest manifest (evolution
 mid-stream follows the usual Structured Streaming rule: restart to
 pick up new columns); constituent dirs missing a pinned column yield
 typed NULLs, Hive-partitioned dirs recover their partition columns.
-The format also supports BATCH reads (``spark.read.format(...)``) of
-the latest version for symmetry, though ``read_versioned`` (a native
-parquet scan) is the better batch path.
+The format is streaming-only: a batch read of a versioned table is
+``versioned.read_versioned`` (a native parquet scan of one version).
 """
 
 from __future__ import annotations
@@ -57,7 +56,6 @@ import os
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -66,7 +64,6 @@ from pyspark.sql.types import StructType
 from ..versioned import (
     _change_dirs,
     _manifest,
-    _manifest_dirs,
     added_dirs as _added_dirs,
     list_versions,
 )
@@ -215,22 +212,6 @@ class _VersionedStreamReader(DataSourceStreamReader):
         pass  # offsets live in the checkpoint; the table needs nothing
 
 
-class _VersionedBatchReader(DataSourceReader):
-    def __init__(self, root: str, schema_json: str):
-        self._root = root
-        self._schema_json = schema_json
-
-    def partitions(self):
-        _, manifest = _manifest(self._root)
-        return [
-            _DirPartition(os.path.join(self._root, rel), self._schema_json)
-            for rel in _manifest_dirs(manifest)
-        ]
-
-    def read(self, partition: _DirPartition):
-        return _read_dir_as_arrow(partition)
-
-
 class VersionedStreamDataSource(DataSource):
     """``format("versioned")`` — register with
     ``spark.dataSource.register(VersionedStreamDataSource)``."""
@@ -270,18 +251,4 @@ class VersionedStreamDataSource(DataSource):
             )
         return _VersionedStreamReader(
             self._root(), json.dumps(base.jsonValue()), self.options
-        )
-
-    def reader(self, schema: StructType) -> _VersionedBatchReader:
-        if (self.options.get("mode") or "append").lower() == "cdc":
-            # the batch face reads the LATEST SNAPSHOT's dirs, which
-            # carry no per-version change data — silently null-filled
-            # _op/_commit_version columns would masquerade as a feed
-            raise ValueError(
-                "mode='cdc' is a streaming-only option; for a batch "
-                "change feed use versioned.read_change_feed(spark, "
-                "path, from_version[, to_version])"
-            )
-        return _VersionedBatchReader(
-            self._root(), json.dumps(schema.jsonValue())
         )

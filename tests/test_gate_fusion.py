@@ -1,15 +1,21 @@
 """Fused duplicate-rate and referential-integrity gates
 (quality.run_gates): the one-aggregate gates give the same rates as the
 reference's two-action formulas, a batch raises its first breach in list
-order, and silver evaluates all its duplicate and RI gates in one Spark
-action. Inline data only."""
+order, silver evaluates all its duplicate and RI gates in one Spark
+action, and the registry's gate queries (which project the gates' own
+counts) equal their DuckDB oracles. Inline data only."""
 
 from __future__ import annotations
+
+import datetime
+import importlib.util
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from instacart_medallion_lakehouse_spark import pipeline, quality
+from instacart_medallion_lakehouse_spark import pipeline, quality, queries
+from instacart_medallion_lakehouse_spark.io import read_events
 from instacart_medallion_lakehouse_spark.quality import DataQualityError
 
 
@@ -175,3 +181,74 @@ def test_run_silver_evaluates_its_gates_in_one_action(spark, tmp_path, monkeypat
     assert batches == [11]
     assert actions == ["collect"]
     assert res.silver_counts == res.bronze_counts
+
+
+def _write_gate_tables(d):
+    """Tiny ``events``, ``lineitem`` and ``orders`` files: null ``props``,
+    a duplicated and a null ``l_orderkey``, an orphan foreign key, and a
+    duplicated and a null parent key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [datetime.datetime(2024, 1, 1, h) for h in range(5)]
+    tables = {
+        "events": pa.table(
+            {
+                "event_id": pa.array(range(5), pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us")),
+                "props": ["a", None, "b", None, "c"],
+            }
+        ),
+        "lineitem": pa.table(
+            {"l_orderkey": pa.array([1, 1, 2, 3, None, 99, None], pa.int64())}
+        ),
+        "orders": pa.table(
+            {"o_orderkey": pa.array([1, 2, 2, 3, None], pa.int64())}
+        ),
+    }
+    for name, table in tables.items():
+        pq.write_table(table, os.path.join(d, f"{name}.parquet"))
+
+
+def test_registry_gate_queries_match_oracle_and_gates(spark, tmp_path):
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", os.path.join(repo, "tools", "check_oracle.py")
+    )
+    harness = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(harness)
+    import duckdb
+
+    d = str(tmp_path)
+    _write_gate_tables(d)
+    con = duckdb.connect()
+    for t in ("events", "lineitem", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+    rows = {}
+    for name in ("null_rate", "duplicate_rate", "ri_orphans"):
+        sdf = queries.queries()[name](spark, d)
+        got = [tuple(r) for r in sdf.collect()]
+        tbl = con.execute(queries.oracle_sql()[name]).fetch_arrow_table()
+        want = [tuple(r[c] for c in tbl.column_names) for r in tbl.to_pylist()]
+        assert harness.df_to_multiset(sdf.columns, got) == harness.df_to_multiset(
+            tbl.column_names, want
+        ), name
+        rows[name] = dict(zip(sdf.columns, got[0]))
+    con.close()
+
+    assert rows["null_rate"] == {"total": 5, "nulls": 2, "null_rate": 0.4}
+    assert rows["duplicate_rate"]["dup_rows"] == 4  # key 1 twice, null twice
+    assert rows["ri_orphans"] == {"orphan_rows": 1, "child_rows": 5}
+
+    events = read_events(spark, d)
+    lineitem = spark.read.parquet(f"{d}/lineitem.parquet")
+    orders = spark.read.parquet(f"{d}/orders.parquet")
+    assert quality.check_null_rate(events, "props", 1.0) == rows["null_rate"]["null_rate"]
+    assert (
+        quality.check_duplicate_rate(lineitem, "l_orderkey", 1.0)
+        == rows["duplicate_rate"]["duplicate_rate"]
+    )
+    ri = rows["ri_orphans"]
+    assert quality.check_referential_integrity(
+        lineitem, "l_orderkey", orders, "o_orderkey", threshold=1.0
+    ) == round(ri["orphan_rows"] / ri["child_rows"], 6)

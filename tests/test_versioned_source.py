@@ -125,18 +125,6 @@ class TestVersionedStreamSource:
         assert got.filter("o_note IS NULL").count() == orders.count()
         assert got.filter("o_note = 'late-col'").count() == 5
 
-    def test_batch_read_matches_read_versioned(
-        self, vsource_spark, sf_dir, tmp_path
-    ):
-        spark = vsource_spark
-        root = str(tmp_path / "tbl")
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
-        V.write_versioned(region, root)
-        V.append_versioned(region.limit(2), root)
-        got = spark.read.format("versioned").option("path", root).load()
-        assert got.count() == V.read_versioned(spark, root).count()
-        assert got.columns == region.columns
-
     def test_added_dirs_classification(self, vsource_spark, sf_dir, tmp_path):
         spark = vsource_spark
         root = str(tmp_path / "tbl")
@@ -284,20 +272,3 @@ class TestChangeDataFeed:
             rdr.partitions({"version": 1}, {"version": 3})
         # restarting at the earliest retained version works
         assert rdr.partitions({"version": 2}, {"version": 3})
-
-    def test_batch_cdc_mode_raises(self, vsource_spark, sf_dir, tmp_path):
-        """The batch face has no per-version change data — mode='cdc'
-        must fail loudly (pointing at read_change_feed), never return
-        null-filled _op/_commit_version columns."""
-        spark = vsource_spark
-        root = str(tmp_path / "tbl")
-        region = spark.read.parquet(f"{sf_dir}/region.parquet")
-        V.write_versioned(region, root)
-        with pytest.raises(Exception, match="streaming-only"):
-            (
-                spark.read.format("versioned")
-                .option("path", root)
-                .option("mode", "cdc")
-                .load()
-                .collect()
-            )
