@@ -1,7 +1,7 @@
 """Text-analysis expression layer for the documents table.
 
 Everything here is a pure Catalyst column expression — tokenization,
-shingling, language-ID, quality scoring, and fingerprinting all run
+language-ID, quality scoring, and fingerprinting all run
 inside whole-stage codegen with zero Python per row and zero shuffles.
 This is the hot path of a 100 TB training-data pipeline: per-document
 scoring must be a single narrow scan, and it is.
@@ -55,26 +55,6 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.regexp_extract_all(
         F.lower(text), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0
     )
-
-
-def token_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct n-token shingles as an array<string> (no shuffle).
-
-    Guarded for short docs: fewer than ``n`` tokens yields an empty array
-    (Spark ``sequence(1, k)`` with k < 1 would count DOWN — the guard is
-    mandatory, not defensive).
-    """
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def stopword_hits(toks: Column, words: list[str]) -> Column:

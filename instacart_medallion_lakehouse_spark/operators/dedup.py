@@ -7,10 +7,12 @@ Every operator here is built from Catalyst expressions + at most one
 candidate-generation join — no Python UDFs, no driver-side loops.
 
 Scale architecture (the part that matters at 100 TB):
-- Signatures (minhash, simhash, fingerprints) are computed as ARRAY
-  expressions inside the document scan — zero shuffles, linear work,
-  whole-stage codegen. A 100 TB corpus signature pass is
-  embarrassingly parallel.
+- Signatures (minhash, simhash) are computed in relational form:
+  explode the tokens or shingles, hash each row in a codegen'd
+  projection, and collapse per document in one hash aggregate with
+  map-side partials (``minhash_signatures``, ``simhash_table``). Spark
+  interprets higher-order array lambdas, so no signature here is an
+  array expression. The only shuffle is the per-document aggregate's.
 - Candidate generation is an equi-join on hash-derived band/bucket
   keys — the ONLY shuffle, and it moves (key, doc_id, small signature)
   pairs, never document text. This is the canonical MinHash-LSH band
@@ -26,7 +28,7 @@ exactly (see queries.py for the SQL twins).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dround
@@ -75,7 +77,7 @@ def shingle_table(docs: DataFrame, n: int, id_col: str) -> DataFrame:
     posexplode the tokens ONCE, then build each n-shingle with lead()
     windows over (doc, position) — entirely codegen'd projections plus
     one small window shuffle. This deliberately avoids the array route
-    (token_shingles inside transform): Catalyst's projection collapse
+    (element_at shingles inside transform): Catalyst's projection collapse
     inlines the split() into every element_at reference of the
     interpreted lambda, re-tokenizing the document once per shingle per
     position — quadratic work that the relational form structurally
@@ -355,29 +357,6 @@ def _jaccard_from_common(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> list[Column]:
-    """k seeded minhashes of a shingle array, zero shuffles.
-
-    Hash family: md5(seed || '_' || shingle), min taken LEXICOGRAPHICALLY
-    over the hex strings — uniform over shingles, identical on both
-    engines, and needs no hex→int conversion (string min is the min of
-    the underlying 128-bit value for fixed-width hex).
-
-    NB: the seed is captured via a closure FACTORY, never a lambda
-    default arg — PySpark derives the higher-order-function arity from
-    the lambda's parameter count, so ``lambda s, i=i`` would silently
-    become the 2-arg (element, index) form and bind i to the array index.
-    """
-
-    def hash_with_seed(i: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{i}_"), s))
-
-    return [
-        F.array_min(F.transform(shingles, hash_with_seed(i))).alias(f"sig_{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def _verify_jaccard(
     cand: DataFrame, ex: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
@@ -433,7 +412,15 @@ def minhash_lsh_pairs(
     cost only a verify, never a wrong answer; false negatives are the
     documented LSH recall (tunable via k, r).
     """
-    ex, bands = minhash_bands(docs, n, num_hashes, band_rows, id_col)
+    # both tables are cached AND materialized: the shingle table feeds
+    # hashing + verification, the band table both self-join sides; a
+    # lazily-filled cache would race and recompute the 16-hash
+    # signature chain per consumer (see ngram note)
+    ex = pin(shingle_table(docs, n, id_col))
+    ex.count()
+    sig = minhash_signatures(ex, num_hashes, id_col)
+    bands = pin(bands_from_signatures(sig, num_hashes, band_rows, id_col))
+    bands.count()
     return minhash_lsh_pairs_from(ex, bands, threshold, id_col)
 
 
@@ -467,47 +454,33 @@ def lsh_candidate_pairs(
     b-side ids (the incremental batch-vs-index shape; caller
     guarantees the two id sets are disjoint).
     """
-    if bands_b is None:
-        cond_ids = F.col("a._id") < F.col("b._id")
-        bands_b = bands_a
-    else:
-        cond_ids = F.lit(True)
     return (
-        bands_a.alias("a")
-        .join(
-            bands_b.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & cond_ids,
-        )
+        _band_join(bands_a, bands_b, ("band", "key"))
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
 
 
-def minhash_bands(
-    docs: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    band_rows: int = 2,
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, DataFrame]:
-    """(shingles, bands): the MinHash signature + LSH band pipeline,
-    shared by minhash_lsh_pairs (which self-joins the bands) and the
-    lsh_bucket_profile diagnostic (which aggregates them). One
-    definition — the candidate generator an operator runs and the
-    profile an operator inspects can never drift apart.
-
-    Both returned tables are cached AND materialized: the shingle
-    table feeds hashing + verification, the band table feeds both
-    self-join sides (or the profile aggregate); a lazily-filled cache
-    would race and recompute the 16-hash signature chain per consumer.
-    """
-    ex = pin(shingle_table(docs, n, id_col))
-    ex.count()  # materialize before multi-consumer reuse (see ngram note)
-    bands = pin(band_table_from_shingles(ex, num_hashes, band_rows, id_col))
-    bands.count()  # materialize before the self-join (see ngram note)
-    return ex, bands
+def _band_join(
+    bands_a: DataFrame, bands_b: DataFrame | None, keys: tuple[str, str]
+) -> DataFrame:
+    """The band join every candidate generator shares: ``bands_a`` as
+    ``a`` meets ``bands_b`` as ``b`` on both band ``keys`` (MinHash
+    ``(band, key)``, packed-bits ``(idx, val)``). One-sided
+    (``bands_b`` None): a self-join with ``a._id < b._id``, each
+    unordered pair once. Two-sided: every (a, b) match; the caller
+    guarantees disjoint id sets."""
+    if bands_b is None:
+        bands_b, cond_ids = bands_a, F.col("a._id") < F.col("b._id")
+    else:
+        cond_ids = F.lit(True)
+    k1, k2 = keys
+    return bands_a.alias("a").join(
+        bands_b.alias("b"),
+        (F.col(f"a.{k1}") == F.col(f"b.{k1}"))
+        & (F.col(f"a.{k2}") == F.col(f"b.{k2}"))
+        & cond_ids,
+    )
 
 
 def minhash_signatures(
@@ -529,22 +502,6 @@ def minhash_signatures(
     return hashed.groupBy(id_col).agg(
         *[F.min(f"h_{i}").alias(f"sig_{i}") for i in range(num_hashes)]
     )
-
-
-def band_table_from_shingles(
-    ex: DataFrame,
-    num_hashes: int = 16,
-    band_rows: int = 2,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(_id, band, key) LSH band table from an exploded shingle table —
-    the signature pipeline alone, with NO caching: the build half of
-    minhash_bands, also used as the builder for the persisted signature
-    store (a 100 TB corpus computes signatures once and persists them
-    as a table asset; per-query recompute is the sf0.1 anti-pattern).
-    """
-    sig = minhash_signatures(ex, num_hashes, id_col)
-    return bands_from_signatures(sig, num_hashes, band_rows, id_col)
 
 
 def bands_from_signatures(
@@ -581,7 +538,6 @@ def bands_from_signatures(
 # SimHash
 # ---------------------------------------------------------------------------
 
-_HIGH_NIBBLE = list("89abcdef")
 # membership in the high-nibble set is a single lexicographic compare
 # for LOWERCASE hex ('0'<..<'9'<'a'<..<'f' in ASCII): digit >= '8'
 # <=> digit in 89abcdef. The 32-sum SimHash aggregate evaluates this
@@ -591,8 +547,8 @@ _HIGH_NIBBLE = list("89abcdef")
 SIMHASH_BITS = 32
 
 
-def simhash32(toks: Column) -> Column:
-    """32-bit SimHash of a token array, zero shuffles.
+def simhash_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, simhash) via dictionary-encoded hashing + hash aggregate.
 
     Bit p of the fingerprint is the sign of Σ_tokens (+1 if hex digit
     p+1 of md5(token) has its top bit set, else −1) — the classic
@@ -601,58 +557,20 @@ def simhash32(toks: Column) -> Column:
     bit per (token, position)). Duplicate tokens weigh in as often as
     they appear, matching term-frequency weighting. 32 bits keeps the
     random-pair collision rate at Hamming<=3 around 2e-7, so verified
-    output is essentially all true near-dups.
+    output is essentially all true near-dups. A document with no
+    tokens (null text) gets no row.
 
-    Computed as: per-token ±1 contribution vectors (transform), summed
-    element-wise into a 32-long vector (aggregate+zip_with), then packed
-    into a long. All array expressions — scan-local at any scale.
-    """
-    contribs = F.transform(
-        toks,
-        lambda t: F.transform(
-            F.sequence(F.lit(1), F.lit(SIMHASH_BITS)),
-            lambda p: F.when(
-                F.md5(t).substr(p.cast("int"), F.lit(1)) >= "8", 1
-            ).otherwise(-1),
-        ),
-    )
-    sums = F.aggregate(
-        contribs,
-        F.array_repeat(F.lit(0), SIMHASH_BITS),
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-    )
-    # 2^p via pow (exact in double up to 2^52; shiftleft needs an int
-    # literal bit count, so it can't take the lambda-bound position column)
-    packed = F.aggregate(
-        F.zip_with(
-            sums,
-            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-            lambda s, p: F.when(
-                s > 0, F.pow(F.lit(2.0), p.cast("double")).cast("long")
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return packed
-
-
-def simhash_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, simhash) via dictionary-encoded hashing + hash aggregate.
-
-    Identical fingerprints to simhash32 (same per-(token, position)
-    bits, and sign-sum order cannot matter), computed the scale way:
-    md5 runs ONCE PER DISTINCT TOKEN (the dictionary — Zipf makes the
-    vocabulary orders of magnitude smaller than the token stream), the
-    per-token ±1 bit pattern broadcast-joins back onto the exploded
-    stream, and 32 plain-integer sums collapse in one codegen'd
-    HashAggregate with map-side partials, then pack. Hashing the
-    instance stream instead (the naive form) recomputes md5 per token
-    occurrence — A/B at sf0.1: 2.0-2.2s naive vs 1.5s dictionary, with
-    identical outputs; the gap grows with corpus/vocabulary ratio. The
-    array-expression form is worse still (interpreted lambdas, md5 per
-    bit position). Shuffles: one distinct over tokens (tiny), one
-    (id, 32 ints) aggregate exchange.
+    Computed the scale way: md5 runs ONCE PER DISTINCT TOKEN (the
+    dictionary — Zipf makes the vocabulary orders of magnitude smaller
+    than the token stream), the per-token ±1 bit pattern broadcast-joins
+    back onto the exploded stream, and 32 plain-integer sums collapse in
+    one codegen'd HashAggregate with map-side partials, then pack.
+    Hashing the instance stream instead (the naive form) recomputes md5
+    per token occurrence — A/B at sf0.1: 2.0-2.2s naive vs 1.5s
+    dictionary, with identical outputs; the gap grows with
+    corpus/vocabulary ratio. An array-expression form is worse still
+    (interpreted lambdas, md5 per bit position). Shuffles: one distinct
+    over tokens (tiny), one (id, 32 ints) aggregate exchange.
 
     Broadcast bound: the explicit hint on the dictionary is safe while
     the DISTINCT vocabulary (33 ints/row, ~300 B serialized) stays
@@ -710,7 +628,6 @@ def simhash_pairs(
     byte → equi-join on (byte_idx, byte_value) finds all of them with
     zero recall loss. Verification is bit_count(xor) on the candidates.
     """
-    assert max_hamming <= 3, "4-byte banding guarantees recall only for <= 3"
     # NOT pinned (r12): the two band self-join sides are byte-identical
     # subtrees, and at runtime AQE's final plan serves the second side's
     # shuffle of per-document partial sums (the Exchange on id_col
@@ -720,45 +637,11 @@ def simhash_pairs(
     # (tests/test_text_dedup.py checks this). The old pin+count added a
     # full blocking action (compute + cache write) on top of that shared
     # exchange (the r4 cache-vs-ReuseExchange lesson: lm_perplexity A/B
-    # cached 1.9-2.6s vs uncached 1.1-1.4s).
-    sig = simhash_table(docs, id_col)
-    bands = sig.select(
-        F.col(id_col).alias("_id"),
-        F.col("simhash").alias("_sh"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("idx"),
-                        F.shiftright("simhash", 8 * i)
-                        .bitwiseAND(F.lit(255))
-                        .alias("val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("nb"),
-    ).select("_id", "_sh", F.col("nb.idx").alias("idx"), F.col("nb.val").alias("val"))
-
-    hamming = F.bit_count(F.col("a._sh").bitwiseXOR(F.col("b._sh")))
-    return (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.idx") == F.col("b.idx"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        # verify BEFORE dedup: the hamming predicate is a codegen'd filter
-        # on the join output, so non-qualifying candidates never reach the
-        # distinct's shuffle (on dense corpora that's most of them)
-        .filter(hamming <= max_hamming)
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .distinct()
+    # cached 1.9-2.6s vs uncached 1.1-1.4s). hamming_band_pairs pins
+    # nothing when handed prebuilt bands.
+    bands = _hash_band_table(simhash_table(docs, id_col), "simhash", 4, 8, id_col)
+    return hamming_band_pairs(
+        None, "simhash", 4, 8, max_hamming, id_col, bands=bands
     )
 
 
@@ -816,8 +699,8 @@ def hamming_band_pairs(
     bands_b: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance <= ``max_hamming`` over an
-    arbitrary packed-bits column — the pigeonhole band trick of
-    simhash_pairs generalized to any (n_bands x band_bits) layout:
+    arbitrary packed-bits column — the pigeonhole band trick for any
+    (n_bands x band_bits) layout:
     <= max_hamming differing bits can touch at most max_hamming bands,
     so with ``n_bands > max_hamming`` every qualifying pair shares at
     least one intact band -> equi-join on (band_idx, band_value) finds
@@ -830,9 +713,10 @@ def hamming_band_pairs(
     batch-vs-index shape of lsh_candidate_pairs; caller guarantees
     disjoint id sets), emitting (id_a=batch, id_b=index) ordered pairs.
 
-    Used by the multimodal perceptual-hash dedup (image dHash, audio
-    and video fingerprints). The signature tables are pinned — one row
-    per item, feeding both sides of the band join.
+    Used by SimHash dedup (simhash_pairs, 4 x 8 bits) and the
+    multimodal perceptual-hash dedup (image dHash, audio and video
+    fingerprints). A ``sig`` table is pinned — one row per item,
+    feeding both sides of the band join.
 
     ``bands``/``bands_b`` (r11): a PREBUILT band table (the
     ``_hash_band_table`` schema ``(_id, _sh, idx, val)``) for the batch
@@ -851,22 +735,14 @@ def hamming_band_pairs(
         sig = pin(sig)
         sig.count()  # materialize before the band join (ngram note)
         bands_a = _hash_band_table(sig, hash_col, n_bands, band_bits, id_col)
-    if bands_b is not None:
-        cond_ids = F.lit(True)
-    else:
-        # one-sided self-join: with a prebuilt (bucketed) band table
-        # both scans come from the store, bucket-wise co-located
-        bands_b = bands_a
-        cond_ids = F.col("a._id") < F.col("b._id")
     hamming = F.bit_count(F.col("a._sh").bitwiseXOR(F.col("b._sh")))
+    # one-sided self-join: with a prebuilt (bucketed) band table both
+    # scans come from the store, bucket-wise co-located. Verify BEFORE
+    # the distinct: the hamming predicate is a codegen'd filter on the
+    # join output, so non-qualifying candidates never reach the
+    # distinct's shuffle (on dense corpora that's most of them)
     return (
-        bands_a.alias("a")
-        .join(
-            bands_b.alias("b"),
-            (F.col("a.idx") == F.col("b.idx"))
-            & (F.col("a.val") == F.col("b.val"))
-            & cond_ids,
-        )
+        _band_join(bands_a, bands_b, ("idx", "val"))
         .filter(hamming <= max_hamming)
         .select(
             F.col("a._id").alias("id_a"),

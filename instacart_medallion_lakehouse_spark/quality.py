@@ -86,7 +86,11 @@ class GateThresholds:
         """Load thresholds from a pipeline_config.yml (reference
         configs/pipeline_config.yml:12-25 shape: a ``quality_thresholds``
         mapping). Unknown keys fail fast — a typo'd threshold name must
-        not silently fall back to a default."""
+        not silently fall back to a default — and so does a value that
+        is not a number: YAML reads ``yes`` as ``True`` (``float(True)``
+        would make a zero-tolerance gate a 1.0 gate that never fires)
+        and an empty value as null. ``1e-3``, a string to PyYAML,
+        loads through ``float``."""
         import yaml
 
         with open(path) as f:
@@ -101,7 +105,20 @@ class GateThresholds:
             raise ValueError(
                 f"unknown quality_thresholds keys in {path}: {sorted(unknown)}"
             )
-        return cls(**{k: float(v) for k, v in section.items()})
+        return cls(**{k: _threshold(path, k, v) for k, v in section.items()})
+
+
+def _threshold(path: str, key: str, value: object) -> float:
+    """One quality_thresholds value as a float, or a ``ValueError``
+    naming the key (booleans and nulls are not numbers here)."""
+    if not isinstance(value, bool):  # float(None) raises TypeError
+        try:
+            return float(value)
+        except (TypeError, ValueError):
+            pass
+    raise ValueError(
+        f"quality_thresholds.{key} in {path} must be a number, got {value!r}"
+    )
 
 
 DEFAULT_THRESHOLDS = GateThresholds()

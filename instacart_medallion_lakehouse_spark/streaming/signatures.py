@@ -21,7 +21,6 @@ never divergent data).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,23 +36,6 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def signature_rows(docs: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """(doc_id, sig_0..sig_{k-1}) for a (possibly streaming) documents
-    frame. Uses the ARRAY formulation (array_min over transform) rather
-    than the batch explode + groupBy-min: a streaming aggregation would
-    need an output mode / watermark, while the array form is a stateless
-    per-row projection — exactly what a foreachBatch maintenance sink
-    wants. Per-document results are identical (same hash family; see
-    operators/dedup.minhash_signature)."""
-    from ..functions.text import token_shingles, tokens
-    from ..operators.dedup import minhash_signature
-
-    sh = token_shingles(tokens(F.col("text")), 3)
-    return docs.select(
-        "doc_id", *minhash_signature(sh, num_hashes=num_hashes)
-    ).filter(F.size(sh) > 0)
-
-
 def stream_signatures_to_index(
     docs_stream: DataFrame,
     root: str,
@@ -63,22 +45,31 @@ def stream_signatures_to_index(
 ) -> None:
     """Drain a documents stream into the versioned signature index:
     per micro-batch, compute signatures for the batch's documents and
-    MERGE by doc_id (first batch bootstraps the table)."""
+    MERGE by doc_id (first batch bootstraps the table).
+
+    Inside ``foreachBatch`` a micro-batch is a static frame, so the
+    signatures come from the batch builder of the persisted index
+    (``shingle_table`` → ``minhash_signatures``): the index and its
+    maintenance share one signature definition. A document with fewer
+    than three tokens has no shingle and gets no row; a batch of only
+    such documents commits nothing."""
+    from ..operators.dedup import minhash_signatures, shingle_table
     from ..versioned import list_versions, upsert_versioned, write_versioned
     from .events import await_drain
 
-    sigs = signature_rows(docs_stream, num_hashes)
-
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
+        sigs = minhash_signatures(
+            shingle_table(batch_df, 3, "doc_id"), num_hashes
+        )
+        if not sigs.take(1):
             return
         if list_versions(root):
-            upsert_versioned(batch_df.sparkSession, root, batch_df, ["doc_id"])
+            upsert_versioned(batch_df.sparkSession, root, sigs, ["doc_id"])
         else:
-            write_versioned(batch_df, root)
+            write_versioned(sigs, root)
 
     q = (
-        sigs.writeStream.foreachBatch(commit_batch)
+        docs_stream.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

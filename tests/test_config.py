@@ -34,6 +34,28 @@ class TestGateThresholdsFromYaml:
         with pytest.raises(ValueError, match="nul_rate_default"):
             quality.GateThresholds.from_yaml(str(p))
 
+    @pytest.mark.parametrize(
+        "line, key",
+        [
+            ("duplicate_rate: yes", "duplicate_rate"),
+            ("duplicate_rate: false", "duplicate_rate"),
+            ("null_rate_default:", "null_rate_default"),
+            ("reconcile_drift: high", "reconcile_drift"),
+            ("referential_integrity: [0.0]", "referential_integrity"),
+        ],
+    )
+    def test_non_number_names_the_key(self, tmp_path, line, key):
+        p = tmp_path / "cfg.yml"
+        p.write_text(f"quality_thresholds:\n  {line}\n")
+        with pytest.raises(ValueError, match=f"quality_thresholds.{key} "):
+            quality.GateThresholds.from_yaml(str(p))
+
+    def test_exponent_string_loads(self, tmp_path):
+        # PyYAML's YAML 1.1 resolver reads 1e-3 (no dot) as a string
+        p = tmp_path / "cfg.yml"
+        p.write_text("quality_thresholds:\n  reconcile_drift: 1e-3\n")
+        assert quality.GateThresholds.from_yaml(str(p)).reconcile_drift == 0.001
+
     def test_empty_file_gives_defaults(self, tmp_path):
         p = tmp_path / "cfg.yml"
         p.write_text("")
@@ -44,15 +66,15 @@ class TestFullConfig:
     def test_sections_present(self):
         cfg = quality.load_pipeline_config(CONFIG)
         assert set(cfg) >= {"quality_thresholds", "spark", "tables"}
-        assert cfg["tables"]["bronze"] == [
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-        ]
+
+    def test_table_lists_match_pipeline(self):
+        # the config's table lists and the ones the pipeline runs are
+        # one list each: compare, so they cannot drift apart
+        from instacart_medallion_lakehouse_spark import pipeline
+
+        tables = quality.load_pipeline_config(CONFIG)["tables"]
+        assert tables["bronze"] == pipeline.BRONZE_TABLES
+        assert tables["silver"] == list(pipeline._SILVER_KEYS)
 
 
 class TestEmptySection:

@@ -125,8 +125,10 @@ class TestSharedTableStore:
         monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path / "store"))
         stored = shared_minhash_bands(spark, sf_dir)
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        fresh = dedup.band_table_from_shingles(
-            dedup.shingle_table(docs, 3, "doc_id"), 16, 2
+        fresh = dedup.bands_from_signatures(
+            dedup.minhash_signatures(dedup.shingle_table(docs, 3, "doc_id"), 16),
+            16,
+            2,
         )
         assert sorted(map(tuple, stored.collect())) == sorted(
             map(tuple, fresh.collect())

@@ -480,6 +480,7 @@ class TestStreamSignatureIndex:
         values (exercises upsert, not just bootstrap)."""
         from pyspark.sql import functions as F
 
+        from instacart_medallion_lakehouse_spark.operators import dedup
         from instacart_medallion_lakehouse_spark.streaming import (
             signatures as ss,
         )
@@ -491,7 +492,9 @@ class TestStreamSignatureIndex:
         root = str(tmp_path / "sig_index")
         ckpt = str(tmp_path / "ckpt")
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        bogus = ss.signature_rows(docs).select(
+        bogus = dedup.minhash_signatures(
+            dedup.shingle_table(docs, 3, "doc_id"), 16
+        ).select(
             "doc_id", *[F.lit("zz").alias(f"sig_{i}") for i in range(16)]
         )
         write_versioned(bogus, root)
@@ -500,6 +503,97 @@ class TestStreamSignatureIndex:
         )
         final = read_versioned(spark, root)
         assert final.filter(F.col("sig_0") == "zz").count() == 0
+
+
+class TestStreamSignatureIndexInline:
+    """The signature-index sink on inline documents, so it runs without
+    the ``sf_dir`` testdata: one document of fewer than three tokens and one
+    null ``text``, which get no signature row."""
+
+    def _write_docs(self, tmp_path, texts):
+        src = tmp_path / "src"
+        src.mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(range(len(texts)), pa.int64()),
+                    "text": pa.array(texts, pa.string()),
+                }
+            ),
+            src / "documents.parquet",
+        )
+        return str(src)
+
+    def _sigs(self, df):
+        return {
+            r["doc_id"]: tuple(r[f"sig_{i}"] for i in range(16))
+            for r in df.collect()
+        }
+
+    def test_index_matches_batch_builder_and_merge_overwrites(
+        self, spark, tmp_path
+    ):
+        from instacart_medallion_lakehouse_spark.operators import dedup
+        from instacart_medallion_lakehouse_spark.streaming import (
+            signatures as ss,
+        )
+        from instacart_medallion_lakehouse_spark.versioned import (
+            list_versions,
+            read_versioned,
+            write_versioned,
+        )
+
+        src = self._write_docs(
+            tmp_path,
+            [
+                "the quick brown fox jumps over the lazy dog",
+                "the quick brown fox jumps over the lazy cat",
+                "two tokens",
+                None,
+                "completely different words appear here",
+            ],
+        )
+        docs = spark.read.parquet(f"{src}/documents.parquet")
+        want = self._sigs(
+            dedup.minhash_signatures(dedup.shingle_table(docs, 3, "doc_id"), 16)
+        )
+        assert set(want) == {0, 1, 4}
+
+        root = str(tmp_path / "sig_index")
+        ss.stream_signatures_to_index(
+            ss.read_documents_stream(spark, src), root, str(tmp_path / "ckpt")
+        )
+        assert self._sigs(read_versioned(spark, root)) == want
+
+        # a wrong index for the same doc ids: the drain takes the MERGE
+        # branch and overwrites every signature
+        seeded = str(tmp_path / "seeded_index")
+        write_versioned(
+            docs.filter(F.col("doc_id").isin(list(want))).select(
+                "doc_id", *[F.lit("zz").alias(f"sig_{i}") for i in range(16)]
+            ),
+            seeded,
+        )
+        ss.stream_signatures_to_index(
+            ss.read_documents_stream(spark, src), seeded, str(tmp_path / "ckpt2")
+        )
+        assert list_versions(seeded) == [1, 2]
+        assert self._sigs(read_versioned(spark, seeded)) == want
+
+    def test_batch_without_shingles_commits_nothing(self, spark, tmp_path):
+        from instacart_medallion_lakehouse_spark.streaming import (
+            signatures as ss,
+        )
+        from instacart_medallion_lakehouse_spark.versioned import (
+            list_versions,
+        )
+
+        src = self._write_docs(tmp_path, ["two tokens", None, "one"])
+        root = str(tmp_path / "sig_index")
+        ss.stream_signatures_to_index(
+            ss.read_documents_stream(spark, src), root, str(tmp_path / "ckpt")
+        )
+        assert list_versions(root) == []
 
 
 class TestStreamToVersionedMultiBatch:

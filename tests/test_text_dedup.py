@@ -37,12 +37,11 @@ class TestTextFunctions:
         ]
 
     def test_shingles_short_doc_empty(self, spark):
-        df = spark.createDataFrame([("a b",), ("a b c",)], "text string")
-        out = df.select(
-            T.token_shingles(T.tokens(F.col("text")), 3).alias("s")
-        ).collect()
-        assert out[0]["s"] == []
-        assert out[1]["s"] == ["a b c"]
+        df = spark.createDataFrame(
+            [(0, "a b"), (1, "a b c")], "doc_id long, text string"
+        )
+        out = [tuple(r) for r in dedup.shingle_table(df, 3, "doc_id").collect()]
+        assert out == [(1, "a b c")]
 
     def test_fingerprint_normalizes(self, spark, docs):
         fps = {
@@ -112,12 +111,11 @@ class TestNearDup:
         assert (0, 4) not in pairs
 
     def test_minhash_signature_seeds_differ(self, spark, docs):
-        # regression: seeds must produce DIFFERENT hash families (a
-        # lambda-arity bug once made all 16 signatures identical)
-        sh = docs.select(
-            T.token_shingles(T.tokens(F.col("text")), 3).alias("shingles")
-        ).filter(F.size("shingles") > 0)
-        row = sh.select(*dedup.minhash_signature(F.col("shingles"), 4)).first()
+        # seeds must produce DIFFERENT hash families (a seed bug makes
+        # all k signatures of a document identical)
+        row = dedup.minhash_signatures(
+            dedup.shingle_table(docs, 3, "doc_id"), 4
+        ).first()
         sigs = [row[f"sig_{i}"] for i in range(4)]
         assert len(set(sigs)) > 1
 
@@ -151,12 +149,7 @@ class TestNearDup:
             [(0, "alpha beta gamma delta"), (1, "delta gamma beta alpha")],
             "doc_id long, text string",
         )
-        sigs = [
-            r["s"]
-            for r in df.select(
-                dedup.simhash32(T.tokens(F.col("text"))).alias("s")
-            ).collect()
-        ]
+        sigs = {r["doc_id"]: r["simhash"] for r in dedup.simhash_table(df).collect()}
         assert sigs[0] == sigs[1]
 
 
