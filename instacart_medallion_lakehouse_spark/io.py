@@ -292,25 +292,34 @@ def write_orc(
     writer.orc(path)
 
 
+def bucketed_table(path: str) -> str:
+    """Catalog name of the bucketed table over the data dir ``path``:
+    derived from the dir alone, so every session names it alike."""
+    import hashlib
+
+    return "bucketed_" + hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:16]
+
+
 def write_bucketed(
     df: DataFrame,
-    table_name: str,
+    path: str,
     bucket_by: list[str],
     num_buckets: int,
-    sort_by: list[str] | None = None,
 ) -> None:
-    """Hash-bucketed managed table: pre-shuffles ONCE at write time so
-    every later join/aggregate on the bucket key is shuffle-free.
+    """Hash-bucketed parquet in the new dir ``path``, registered as the
+    external table ``bucketed_table(path)``: pre-shuffles ONCE at write
+    time so every later join/aggregate on the bucket key is
+    shuffle-free. Dropping the table keeps the files; a ``CREATE TABLE
+    ... CLUSTERED BY ... LOCATION`` over ``path`` reads them bucketed
+    again (``versioned._scan`` does).
 
     Two tables bucketed on the same key with the same bucket count
     sort-merge-join with NO Exchange on either side (asserted in
     tests/test_io.py) — at 100 TB this converts the nightly fact-dim
     join from a full network shuffle into a local stitch per bucket.
-    ``sort_by`` additionally orders rows within each bucket file, so
-    the merge phase skips its sort. The bucket count should be sized
-    once for the cluster (tasks-per-join ≈ num_buckets) — changing it
-    requires a rewrite, which is why this is a write-time contract,
-    not a reader hint.
+    The bucket count should be sized once for the cluster
+    (tasks-per-join ≈ num_buckets) — changing it requires a rewrite,
+    which is why this is a write-time contract, not a reader hint.
 
     The input is repartitioned onto the bucket key first (r12):
     bucketBy alone splits each WRITE TASK's rows into per-bucket
@@ -318,20 +327,21 @@ def write_bucketed(
     Repartitioning by the bucket columns into num_buckets partitions
     makes writer partition == bucket (both sides use murmur3 pmod
     num_buckets), yielding exactly one file per bucket — no small-file
-    scatter, one footer per bucket for consumers. (Spark 3+ does NOT
-    propagate bucket sort order to the plan — that's legacy-gated
-    because it is unsound for multi-file buckets — so ``sort_by`` buys
-    within-file layout/stats, not a sort-free merge.)
+    scatter, one footer per bucket for consumers. Rows are sorted on
+    the bucket keys within each file. (Spark 3+ does NOT propagate
+    bucket sort order to the plan — that's legacy-gated because it is
+    unsound for multi-file buckets — so the sort buys within-file
+    layout/stats, not a sort-free merge.)
     """
-    writer = (
+    (
         df.repartition(num_buckets, *[F.col(c) for c in bucket_by])
         .write.format("parquet")
-        .mode("overwrite")
+        .mode("errorifexists")
         .bucketBy(num_buckets, *bucket_by)
+        .sortBy(*bucket_by)
+        .option("path", os.path.abspath(path))
+        .saveAsTable(bucketed_table(path))
     )
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table_name)
 
 
 def _parquet_has_nanos_ts(path: str, col: str) -> bool:

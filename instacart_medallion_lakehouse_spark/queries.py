@@ -234,12 +234,13 @@ def oracle_sql() -> dict[str, str]:
 # always returns a DataFrame a consumer may read from several join sides
 # without deciding anything.
 #
-# - Store on and sources fingerprintable: a STORED SCAN. With
-#   ``bucket_by=None`` that is a parquet asset in the store directory;
-#   with a key list it is a hash-bucketed catalog table, so joins and
-#   aggregates on those keys skip their exchange. Stored scans are never
-#   pinned: re-reading a compact columnar asset beats writing it into
-#   executor cache first.
+# - Store on and sources fingerprintable: a STORED SCAN of a versioned
+#   table (versioned.py) in the store directory, committed once by the
+#   one versioned write. With a ``bucket_by`` key list the snapshot is
+#   hash-bucketed and read as an external catalog table, so joins and
+#   aggregates on those keys skip their exchange, in this session or a
+#   later one. Stored scans are never pinned: re-reading a compact
+#   columnar asset beats writing it into executor cache first.
 # - Otherwise (store disabled by SPARK_GRAFT_SHARED_DIR='', or sources
 #   that cannot be fingerprinted, e.g. synthetic test inputs): the fresh
 #   build, pinned and materialized with one count(), so its
@@ -264,28 +265,13 @@ def _shared_dir() -> str | None:
 
 def clear_shared_store() -> None:
     """Drop every persisted derived table (bench calls this between
-    passes so each pass pays the build exactly once — honest timing).
-    Also drops the BUCKETED catalog tables created this session (listed
-    in _BUCKETED_TABLES): the catalog outlives the store directory, and
-    a surviving band table would make pass 2's build entries skip the
-    band build — min() over passes would then hide that cost entirely."""
+    passes so each pass pays the build exactly once — honest timing)."""
     import shutil
 
     d = _shared_dir()
     if d and os.path.isdir(d):
         shutil.rmtree(d, ignore_errors=True)
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        for tbl in list(_BUCKETED_TABLES):
-            try:
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                _BUCKETED_TABLES.discard(tbl)
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
 
-
-# bucketed catalog tables shared_table created this session
-_BUCKETED_TABLES: set[str] = set()
 
 # Buckets of a bucketed store asset: the tasks per join of its
 # consumers. 8 fits the sub-100k-row band and index tables at bench
@@ -329,23 +315,19 @@ def shared_table(
     ``None``; every consumer may read the result from several join
     sides.
 
-    ``bucket_by=None`` persists ``builder()`` to scratch parquet.
-    Publication is atomic (write to a unique tmp dir, rename into
-    place), so a concurrent builder loses the race cleanly and reads
-    the winner's table.
+    A stored asset is the versioned table ``{store}/{name}-{fingerprint}``
+    (versioned.py), read with ``read_versioned``. A request that finds
+    no committed version builds it and commits version 1; a concurrent
+    builder that loses the publish race reads the winner's version.
 
-    ``bucket_by=[...]`` persists it as a HASH-BUCKETED catalog table
-    (``io.write_bucketed``, _STORE_BUCKETS buckets, sorted on the same
-    keys) served via ``spark.table``: every later self-join or
-    aggregate whose keys start with ``bucket_by`` then runs with NO
-    exchange on the stored side — the shuffle happened ONCE at write
-    time. Bucketed writes must go through ``saveAsTable``, so this asset
-    lives in the session catalog (a new session re-registers by
-    rebuilding; the files land under ``spark.sql.warehouse.dir``). The
-    fingerprint is baked into the TABLE NAME, so a stale table is never
-    served; a leftover same-name warehouse dir from a killed run is
-    deleted before the rebuild, because managed-table creation refuses
-    to reuse an existing location.
+    ``bucket_by=[...]`` commits it HASH-BUCKETED (``io.write_bucketed``,
+    _STORE_BUCKETS buckets, sorted on the same keys) and the read is an
+    external catalog table over the committed data dir: every later
+    self-join or aggregate whose keys start with ``bucket_by`` then runs
+    with NO exchange on the stored side — the shuffle happened ONCE at
+    write time. The manifest records the layout, so a session whose
+    catalog never saw the table registers it again instead of
+    rebuilding.
 
     ``token`` versions the BUILDER LOGIC in the cache key: the store
     outlives the process, so a code change to anything the builder
@@ -353,9 +335,9 @@ def shared_table(
     otherwise keep serving the stale pre-change table across sessions.
     Bump the caller's token whenever the builder's semantics change.
     """
-    import shutil
+    import contextlib
 
-    from .io import write_bucketed
+    from . import versioned
     from .pins import pin
 
     root = _shared_dir()
@@ -364,30 +346,14 @@ def shared_table(
         built = pin(builder())
         built.count()
         return built
-    if bucket_by is None:
-        path = os.path.join(root, f"{name}-{fp}")
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            tmp = f"{path}.tmp-{os.getpid()}"
-            builder().write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:  # lost the publish race — winner's table is live
-                shutil.rmtree(tmp, ignore_errors=True)
-        return spark.read.parquet(path)
-    tbl = f"{name}_{fp}"
-    if not spark.catalog.tableExists(tbl):
-        warehouse = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        )
-        shutil.rmtree(
-            os.path.join(warehouse.removeprefix("file:"), tbl),
-            ignore_errors=True,
-        )
-        write_bucketed(
-            builder(), tbl, bucket_by, _STORE_BUCKETS, sort_by=bucket_by
-        )
-    _BUCKETED_TABLES.add(tbl)
-    return spark.table(tbl)
+    path = os.path.join(root, f"{name}-{fp}")
+    if not versioned.list_versions(path):
+        layout = (bucket_by, _STORE_BUCKETS) if bucket_by else None
+        # base 0: an asset has one version, whoever builds it; the loser
+        # of a publish race reads the winner's
+        with contextlib.suppress(versioned.CommitRace):
+            versioned._stage(builder(), path, 0, bucket_by=layout).publish()
+    return versioned.read_versioned(spark, path)
 
 
 # Kept only because perfbench/instrument.py patches this name; ROADMAP

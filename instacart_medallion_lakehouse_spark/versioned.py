@@ -36,7 +36,10 @@ A commit runs in two halves: ``_stage`` is the only code that writes a
 snapshot's data, returning a ``Staged`` version, and ``Staged.publish``
 the only code that publishes one; a caller may check the staged data
 between the two (``stage_versioned``). ``_manifest`` /
-``_read_manifest`` are the only code that reads a manifest.
+``_read_manifest`` are the only code that reads a manifest. A snapshot's
+layout is recorded in its manifest: ``partition_by`` (Hive directories)
+or ``bucket_by`` (hash buckets, read back as an external catalog table
+that any session re-registers from the manifest).
 
 Scale notes: the protocol is pure metadata — one small JSON per commit,
 no data-file rewrite beyond the snapshot itself, identical on an object
@@ -54,6 +57,8 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import io
 
 _VERSIONS = "_versions"
 _DATA = "_data"
@@ -203,6 +208,7 @@ def _stage(
     schema: dict | None = None,
     append_to: list[str] | None = None,
     changes: DataFrame | None = None,
+    bucket_by: tuple[list[str], int] | None = None,
 ) -> Staged:
     """The one data write: write ``df`` as a fresh data dir (and a
     MERGE's ``changes`` as its change dir) and stage it as version
@@ -214,7 +220,9 @@ def _stage(
     there, else at the publish, leaving its dirs as invisible orphans.
     ``append_to`` (an append's prior dirs) makes the manifest reference
     those dirs plus the new one; ``schema`` (JSON) is recorded instead
-    of ``df``'s when an append pins the table's schema.
+    of ``df``'s when an append pins the table's schema. ``bucket_by``
+    ``(keys, n)`` writes the data dir as ``n`` hash buckets on ``keys``
+    (``io.write_bucketed``) instead of ``partition_by`` directories.
     """
     version = base + 1
     # a commit that has already lost the race skips its data write; the
@@ -223,10 +231,13 @@ def _stage(
         raise _race_error(root, version)
     os.makedirs(_version_dir(root), exist_ok=True)
     data = _new_data_dir(root, version)
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data)
+    if bucket_by:
+        io.write_bucketed(df, data, *bucket_by)
+    else:
+        writer = df.write.mode("errorifexists")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(data)
     rel = os.path.relpath(data, root)
     manifest = {
         "version": version,
@@ -235,6 +246,7 @@ def _stage(
         # recorded so maintenance jobs (compaction, upsert) preserve the
         # disk layout instead of silently flattening it on rewrite
         "partition_by": list(partition_by) if partition_by else [],
+        "bucket_by": bucket_by,
     }
     if changes is not None:
         # change data rides the SAME crash protocol: written before the
@@ -300,8 +312,12 @@ def _publish_manifest(root: str, version: int, manifest: dict) -> None:
         os.unlink(tmp)
 
 
-def _race_error(root: str, version: int) -> RuntimeError:
-    return RuntimeError(
+class CommitRace(RuntimeError):
+    """Another writer published the version this commit targeted."""
+
+
+def _race_error(root: str, version: int) -> CommitRace:
+    return CommitRace(
         f"concurrent commit lost the race for version {version} of {root}"
     )
 
@@ -414,15 +430,27 @@ def read_versioned(
 
 def _scan(spark: SparkSession, root: str, manifest: dict) -> DataFrame:
     """The snapshot ``manifest`` names, with the schema it records."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(manifest["schema"]) if "schema" in manifest else None
+    if manifest.get("bucket_by"):
+        # read through an external table over the one data dir, so joins
+        # and aggregates on the keys keep the buckets; IF NOT EXISTS makes
+        # a session that never wrote the snapshot register it here
+        keys, n = manifest["bucket_by"]
+        path = os.path.abspath(os.path.join(root, manifest["data"]))
+        table, cols = io.bucketed_table(path), ", ".join(f"`{k}`" for k in keys)
+        spark.sql(f"CREATE TABLE IF NOT EXISTS {table} ({schema.toDDL()}) USING "
+                  f"parquet CLUSTERED BY ({cols}) SORTED BY ({cols}) INTO {n} "
+                  f"BUCKETS LOCATION '{path}'")
+        return spark.table(table)
     reader = spark.read
-    if "schema" in manifest:
+    if schema is not None:
         # pin the committed schema: a partitioned snapshot's partition
         # columns otherwise come back via Hive-style directory-name
         # inference, which can drift the type (e.g. a '01' string
         # partition value reads back as int) between write and read
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+        reader = reader.schema(schema)
     paths = [os.path.join(root, rel) for rel in _manifest_dirs(manifest)]
     if len(paths) > 1 and manifest.get("partition_by"):
         # Hive partition discovery refuses a multi-path scan whose roots
@@ -440,7 +468,8 @@ def vacuum(
     root: str, keep_last: int = 1, orphan_retention_sec: float = 3600.0
 ) -> list[int]:
     """Drop all but the newest ``keep_last`` snapshots (data + manifest)
-    plus STALE orphaned data dirs. Returns removed versions.
+    plus STALE orphaned data dirs and temp manifests. Returns removed
+    versions.
 
     Mirrors Delta's VACUUM contract: time travel only reaches retained
     versions afterwards, and — like Delta's retention window — an
@@ -452,8 +481,11 @@ def vacuum(
     longest plausible snapshot write. Committed snapshots are removed
     by the path their MANIFEST records (never a reconstructed name);
     stale orphans are reclaimed as a side effect and are not part of
-    the returned version list.
+    the returned version list. A temp manifest outlives its publish only
+    when the writer died before unlinking it; the same window spares an
+    in-flight one.
     """
+    import glob
     import shutil
 
     committed = list_versions(root)
@@ -472,13 +504,13 @@ def vacuum(
                 shutil.rmtree(data, ignore_errors=True)
             removed.append(v)
     now = time.time()
-    for path in _orphan_data_dirs(root):
+    temps = glob.glob(os.path.join(glob.escape(_version_dir(root)), "v*.json.tmp.*"))
+    for path in _orphan_data_dirs(root) + temps:
         try:
-            age = now - os.path.getmtime(path)
-        except OSError:
+            if now - os.path.getmtime(path) >= orphan_retention_sec:
+                (shutil.rmtree if os.path.isdir(path) else os.unlink)(path)
+        except OSError:  # removed meanwhile, or left for the next vacuum
             continue
-        if age >= orphan_retention_sec:
-            shutil.rmtree(path, ignore_errors=True)
     return removed
 
 
@@ -529,7 +561,8 @@ def compact_versioned(
     # it, compacting a disk-partitioned snapshot would silently drop the
     # layout and every post-compaction 'latest' read loses pruning.
     return _stage(
-        df.coalesce(n_files), root, base, manifest.get("partition_by")
+        df.coalesce(n_files), root, base, manifest.get("partition_by"),
+        bucket_by=manifest.get("bucket_by"),
     ).publish()
 
 
@@ -617,7 +650,8 @@ def upsert_versioned(
         )
     # preserve the read snapshot's recorded disk layout across the merge
     return _stage(
-        merged, root, base, manifest.get("partition_by"), changes=changes
+        merged, root, base, manifest.get("partition_by"), changes=changes,
+        bucket_by=manifest.get("bucket_by"),
     ).publish()
 
 

@@ -20,7 +20,7 @@ def spark(tmp_path_factory):
     # process: a run could then pass against assets an earlier checkout
     # built. Give each test session its own store (tests that set
     # SPARK_GRAFT_SHARED_DIR themselves still override it), and drop
-    # its assets and bucketed catalog tables before the session stops.
+    # its assets when the session ends.
     from instacart_medallion_lakehouse_spark import queries
 
     if "SPARK_GRAFT_SHARED_DIR" not in os.environ:
@@ -32,6 +32,16 @@ def spark(tmp_path_factory):
     yield s
     queries.clear_shared_store()
     s.stop()
+
+
+@pytest.fixture
+def src_dir(tmp_path) -> str:
+    """A source dir whose ``documents.parquet`` the derived-table store
+    can fingerprint, for store tests whose builders read no sources."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "documents.parquet").write_bytes(b"fingerprint me")
+    return str(src)
 
 
 @pytest.fixture(scope="session")

@@ -84,21 +84,22 @@ class TestOrc:
 
 
 class TestBucketedJoin:
-    def test_cobucketed_join_has_no_shuffle(self, spark, sf_dir):
+    def test_cobucketed_join_has_no_shuffle(self, spark, sf_dir, tmp_path):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
             "l_orderkey", "l_quantity"
         )
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_totalprice"
         )
-        io.write_bucketed(li, "b_lineitem", ["l_orderkey"], 4, sort_by=["l_orderkey"])
-        io.write_bucketed(orders, "b_orders", ["o_orderkey"], 4, sort_by=["o_orderkey"])
+        li_dir, orders_dir = str(tmp_path / "li"), str(tmp_path / "orders")
+        io.write_bucketed(li, li_dir, ["l_orderkey"], 4)
+        io.write_bucketed(orders, orders_dir, ["o_orderkey"], 4)
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             # force a sort-merge join so shuffle elimination is observable
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = spark.table("b_lineitem").join(
-                spark.table("b_orders"),
+            joined = spark.table(io.bucketed_table(li_dir)).join(
+                spark.table(io.bucketed_table(orders_dir)),
                 F.col("l_orderkey") == F.col("o_orderkey"),
             )
             plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -108,15 +109,12 @@ class TestBucketedJoin:
             # each bucket is exactly ONE file (no P x buckets small-file
             # scatter). NB Spark 3+ still re-sorts the merge inputs —
             # bucket sort propagation is legacy-gated (unsound for
-            # multi-file buckets), so sortBy only helps the files'
+            # multi-file buckets), so the sort only helps the files'
             # internal layout, not the plan.
             import glob as _glob
             import os as _os
 
-            wh = spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            ).removeprefix("file:")
-            files = _glob.glob(_os.path.join(wh, "b_lineitem", "part-*"))
+            files = _glob.glob(_os.path.join(li_dir, "part-*"))
             assert len(files) == 4, files  # one file per bucket
             # and the result is still correct
             expect = li.join(
@@ -125,8 +123,8 @@ class TestBucketedJoin:
             assert joined.count() == expect
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.sql("DROP TABLE IF EXISTS b_lineitem")
-            spark.sql("DROP TABLE IF EXISTS b_orders")
+            for d in (li_dir, orders_dir):
+                spark.sql(f"DROP TABLE IF EXISTS {io.bucketed_table(d)}")
 
 
 class TestEvents:
@@ -441,22 +439,25 @@ class TestSharedBucketedTable:
         )
 
     def test_build_once_and_self_join_has_no_exchange(
-        self, spark, sf_dir, tmp_path, monkeypatch
+        self, spark, src_dir, tmp_path, monkeypatch
     ):
-        monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path))
+        from instacart_medallion_lakehouse_spark import versioned
+
+        store = tmp_path / "store"
+        monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(store))
 
         def builder():
-            return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-                F.col("doc_id").alias("_id"),
-                (F.col("doc_id") % 4).alias("idx"),
-                (F.col("doc_id") % 7).alias("val"),
+            return spark.range(300).select(
+                F.col("id").alias("_id"),
+                (F.col("id") % 4).alias("idx"),
+                (F.col("id") % 7).alias("val"),
             )
 
         calls: list[int] = []
         try:
-            bands = self._get(spark, sf_dir, builder, calls)
+            bands = self._get(spark, src_dir, builder, calls)
             assert bands is not None and calls == [1]
-            again = self._get(spark, sf_dir, builder, calls)
+            again = self._get(spark, src_dir, builder, calls)
             assert calls == [1]  # second request served from the catalog
             prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
             try:
@@ -479,9 +480,10 @@ class TestSharedBucketedTable:
             finally:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         finally:
-            for t in spark.catalog.listTables():
-                if t.name.startswith("t_bands_"):
-                    spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+            for root in store.glob("t_bands-*"):
+                data = versioned._manifest(str(root))[1]["data"]
+                table = io.bucketed_table(str(root / data))
+                spark.sql(f"DROP TABLE IF EXISTS {table}")
 
     def test_fallback_returns_pinned_build(self, spark, tmp_path, monkeypatch):
         """A request the store cannot key (store disabled by '', or
@@ -500,6 +502,7 @@ class TestSharedBucketedTable:
             ("", str(src)),  # store disabled ('' disables; unset = default)
             (str(tmp_path / "store"), str(tmp_path / "nope")),  # no sources
         ]
+        tables = {t.name for t in spark.catalog.listTables()}
         try:
             for store, sources_dir in cases:
                 monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", store)
@@ -522,7 +525,7 @@ class TestSharedBucketedTable:
                         assert sorted(r.id for r in got.collect()) == list(
                             range(5)
                         )
-            assert not any(t.startswith("t_x_") for t in q._BUCKETED_TABLES)
+            assert {t.name for t in spark.catalog.listTables()} == tables
             assert not (tmp_path / "store").exists()
         finally:
             release_pins()

@@ -63,7 +63,9 @@ class TestGlobalRowNumber:
 
 
 class TestSharedTableStore:
-    def test_builds_once_then_reads_parquet(self, spark, sf_dir, tmp_path, monkeypatch):
+    def test_builds_once_then_reads_parquet(
+        self, spark, src_dir, tmp_path, monkeypatch
+    ):
         monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path / "store"))
         calls = []
 
@@ -71,24 +73,24 @@ class TestSharedTableStore:
             calls.append(1)
             return spark.range(5).withColumn("v", F.col("id") * 10)
 
-        a = q.shared_table(spark, sf_dir, "t_demo", builder, ("documents.parquet",))
-        b = q.shared_table(spark, sf_dir, "t_demo", builder, ("documents.parquet",))
+        a = q.shared_table(spark, src_dir, "t_demo", builder, ("documents.parquet",))
+        b = q.shared_table(spark, src_dir, "t_demo", builder, ("documents.parquet",))
         assert len(calls) == 1  # second call served from the store
         assert sorted(r.v for r in a.collect()) == sorted(
             r.v for r in b.collect()
         ) == [0, 10, 20, 30, 40]
 
-    def test_distinct_names_do_not_collide(self, spark, sf_dir, tmp_path, monkeypatch):
+    def test_distinct_names_do_not_collide(self, spark, src_dir, tmp_path, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path / "store"))
         a = q.shared_table(
-            spark, sf_dir, "t_a", lambda: spark.range(3), ("documents.parquet",)
+            spark, src_dir, "t_a", lambda: spark.range(3), ("documents.parquet",)
         )
         b = q.shared_table(
-            spark, sf_dir, "t_b", lambda: spark.range(7), ("documents.parquet",)
+            spark, src_dir, "t_b", lambda: spark.range(7), ("documents.parquet",)
         )
         assert a.count() == 3 and b.count() == 7
 
-    def test_disabled_via_empty_env(self, spark, sf_dir, monkeypatch):
+    def test_disabled_via_empty_env(self, spark, src_dir, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", "")
         calls = []
 
@@ -96,11 +98,11 @@ class TestSharedTableStore:
             calls.append(1)
             return spark.range(2)
 
-        q.shared_table(spark, sf_dir, "t_off", builder, ("documents.parquet",))
-        q.shared_table(spark, sf_dir, "t_off", builder, ("documents.parquet",))
+        q.shared_table(spark, src_dir, "t_off", builder, ("documents.parquet",))
+        q.shared_table(spark, src_dir, "t_off", builder, ("documents.parquet",))
         assert len(calls) == 2  # store off → always builds fresh
 
-    def test_clear_shared_store(self, spark, sf_dir, tmp_path, monkeypatch):
+    def test_clear_shared_store(self, spark, src_dir, tmp_path, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path / "store"))
         calls = []
 
@@ -108,9 +110,9 @@ class TestSharedTableStore:
             calls.append(1)
             return spark.range(2)
 
-        q.shared_table(spark, sf_dir, "t_clear", builder, ("documents.parquet",))
+        q.shared_table(spark, src_dir, "t_clear", builder, ("documents.parquet",))
         q.clear_shared_store()
-        q.shared_table(spark, sf_dir, "t_clear", builder, ("documents.parquet",))
+        q.shared_table(spark, src_dir, "t_clear", builder, ("documents.parquet",))
         assert len(calls) == 2
 
     def test_shared_bands_match_fresh_build(self, spark, sf_dir, tmp_path, monkeypatch):

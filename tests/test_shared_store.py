@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import threading
 
 import numpy as np
 import pytest
@@ -62,3 +63,90 @@ def test_store_off_matches_store_on(spark, corpus, store, monkeypatch, name):
     fresh = rows()
     assert stored, f"{name}: empty on the generated corpus"
     assert fresh == stored
+
+
+def _catalog(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if not t.isTemporary}
+
+
+def test_bucketed_asset_survives_catalog_loss(spark, corpus, tmp_path, monkeypatch):
+    """A bucketed asset's catalog table is session state, its committed
+    data is not: with the table dropped, as in a new session, a request
+    reads the committed asset, still bucketed, instead of rebuilding."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path))
+    calls: list[int] = []
+
+    def request():
+        def builder():
+            calls.append(1)
+            docs = spark.read.parquet(os.path.join(corpus, "documents.parquet"))
+            return docs.select("doc_id", (F.col("doc_id") % 5).alias("k"))
+
+        return q.shared_table(
+            spark, corpus, "t_lost", builder, token="t1", bucket_by=["k"]
+        )
+
+    before = _catalog(spark)
+    request()
+    created = _catalog(spark) - before
+    assert calls == [1] and created
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for t in created:
+            spark.sql(f"DROP TABLE {t}")
+        got = request()
+        assert calls == [1]  # no rebuild
+        # force a sort-merge join so shuffle elimination is observable
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        joined = got.alias("a").join(got.alias("b"), "k")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        assert "Exchange" not in plan
+        sizes = [r["count"] for r in got.groupBy("k").count().collect()]
+        assert sum(sizes) == 200
+        assert joined.count() == sum(n * n for n in sizes)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        for t in _catalog(spark) - before:
+            spark.sql(f"DROP TABLE {t}")
+
+
+@pytest.mark.parametrize("bucket_by", [None, ["k"]])
+def test_concurrent_requests_commit_one_version(
+    spark, corpus, tmp_path, monkeypatch, bucket_by
+):
+    """Two requests for an unbuilt asset both build it; one commits, the
+    other loses the publish race and reads the winner's version."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
+
+    from instacart_medallion_lakehouse_spark import versioned
+
+    monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path))
+    both_building = threading.Barrier(2)
+    before = _catalog(spark)
+
+    def builder():
+        both_building.wait(timeout=120)
+        docs = spark.read.parquet(os.path.join(corpus, "documents.parquet"))
+        return docs.select("doc_id", (F.col("doc_id") % 5).alias("k"))
+
+    def request(_):
+        got = q.shared_table(
+            spark, corpus, "t_race", builder, token="t1", bucket_by=bucket_by
+        )
+        return sorted(map(tuple, got.collect()))
+
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            a, b = pool.map(request, range(2))
+        roots = list(tmp_path.glob("t_race-*"))
+        assert len(roots) == 1
+        assert versioned.list_versions(str(roots[0])) == [1]
+        assert len(a) == 200 and a == b
+    finally:
+        for t in _catalog(spark) - before:
+            spark.sql(f"DROP TABLE {t}")

@@ -54,8 +54,7 @@ def main() -> None:
             f.write(plan)
         q.release_pins()
         print(f"wrote {path} ({len(plan)} chars)")
-    # before stop(): the bucketed-table drops need the live session
-    q.clear_shared_store()
+    q.clear_shared_store()  # drop the run-private store directory
     spark.stop()
 
 
