@@ -34,6 +34,42 @@ from pyspark.sql import functions as F
 from ..pins import pin, unpin
 
 
+def _self_looped(
+    edges: DataFrame, src_col: str, dst_col: str, edges_unique: bool
+) -> tuple[DataFrame, DataFrame]:
+    """``(sym, labels)``: the symmetrized edge list with self-loops
+    (``src``, ``dst``), pinned and materialized, and round 1's labels
+    (``node``, ``label``) over it, lazy. ``edges_unique``: see
+    ``label_propagation``."""
+    # Symmetrize + self-loops with ONE pass over the (possibly
+    # expensive) edge plan: a union of per-orientation selects would
+    # evaluate the edge join once per branch before the cache
+    # materializes, doubling the heaviest step. explode emits all four
+    # orientations from a single scan.
+    both = F.explode(
+        F.array(
+            F.struct(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+            F.struct(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")),
+            F.struct(F.col(src_col).alias("src"), F.col(src_col).alias("dst")),
+            F.struct(F.col(dst_col).alias("src"), F.col(dst_col).alias("dst")),
+        )
+    )
+    sym = edges.select(both.alias("_e")).select("_e.src", "_e.dst")
+    if not edges_unique:
+        sym = sym.distinct()
+    sym = pin(sym)
+    sym.count()  # pinned: reused every round
+
+    # Round 1 folded into initialization: on identity labels the update
+    # is min(dst) over N(v) ∪ {v} — one aggregate, no join.
+    labels = (
+        sym.groupBy("src")
+        .agg(F.min("dst").alias("label"))
+        .select(F.col("src").alias("node"), "label")
+    )
+    return sym, labels
+
+
 def label_propagation(
     edges: DataFrame,
     iterations: int = 6,
@@ -74,32 +110,7 @@ def label_propagation(
     block): at full scale the label table is one row per vertex and
     must shuffle co-partitioned instead.
     """
-    # Symmetrize + self-loops with ONE pass over the (possibly
-    # expensive) edge plan: a union of per-orientation selects would
-    # evaluate the edge join once per branch before the cache
-    # materializes, doubling the heaviest step. explode emits all four
-    # orientations from a single scan.
-    both = F.explode(
-        F.array(
-            F.struct(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-            F.struct(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")),
-            F.struct(F.col(src_col).alias("src"), F.col(src_col).alias("dst")),
-            F.struct(F.col(dst_col).alias("src"), F.col(dst_col).alias("dst")),
-        )
-    )
-    sym = edges.select(both.alias("_e")).select("_e.src", "_e.dst")
-    if not edges_unique:
-        sym = sym.distinct()
-    sym = pin(sym)
-    sym.count()  # pinned: reused every round
-
-    # Round 1 folded into initialization: on identity labels the update
-    # is min(dst) over N(v) ∪ {v} — one aggregate, no join.
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("label"))
-        .select(F.col("src").alias("node"), "label")
-    )
+    sym, labels = _self_looped(edges, src_col, dst_col, edges_unique)
     checkpoint = None
     for i in range(1, iterations):
         rhs = F.broadcast(labels) if broadcast_labels else labels
@@ -131,7 +142,6 @@ def connected_components(
     max_rounds: int = 16,
     edges_unique: bool = False,
     broadcast_labels: bool = False,
-    pointer_jumps: int = 1,
 ) -> DataFrame:
     """EXACT connected components, run to convergence — the scalable
     form the fixed-k ``label_propagation`` approximates (and the
@@ -162,29 +172,8 @@ def connected_components(
     edge-join's shuffle and the pointer-jump's sort-merge self-join;
     at full scale leave it False so the label table shuffles
     co-partitioned instead."""
-    if pointer_jumps < 1:
-        raise ValueError(f"pointer_jumps must be >= 1, got {pointer_jumps}")
-    both = F.explode(
-        F.array(
-            F.struct(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-            F.struct(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")),
-            F.struct(F.col(src_col).alias("src"), F.col(src_col).alias("dst")),
-            F.struct(F.col(dst_col).alias("src"), F.col(dst_col).alias("dst")),
-        )
-    )
-    sym = edges.select(both.alias("_e")).select("_e.src", "_e.dst")
-    if not edges_unique:
-        sym = sym.distinct()
-    sym = pin(sym)
-    sym.count()
-
-    # round 1 folded into initialization (identity labels): min(dst)
-    # over the self-looped neighborhood is one aggregate, no join
-    labels = pin(
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("label"))
-        .select(F.col("src").alias("node"), "label")
-    )
+    sym, labels = _self_looped(edges, src_col, dst_col, edges_unique)
+    labels = pin(labels)
     labels.count()
     try:
         for _ in range(max_rounds):
@@ -206,42 +195,29 @@ def connected_components(
                 )
                 .select(F.col("src").alias("node"), "_l", "_old")
             )
-            # ``pointer_jumps`` successive jumps per round (r12, VERDICT
-            # r11 #6 — path doubling): each jump is one more self-join
-            # of the LABEL table (|V|-sized — broadcast here, and far
-            # smaller than the |E| neighborhood join either way), and
-            # k jumps give l <- l(l(...l(v))) 2^k-fold path compression
-            # per |E|-join round — worth it for LONG-DIAMETER graphs,
-            # where it halves the round count (and with it the per-
-            # round count() actions and |E| joins). Default 1: measured
-            # on the only registry caller (name_components_converged,
-            # sf0.1 fuzzy-name blocks), convergence takes 2 rounds at
-            # EVERY jumps setting — one working round plus the
-            # mandatory no-change confirmation round, the floor no
-            # jump scheme can beat — so extra jumps there are pure
-            # added joins (r12 instrumented A/B; the floor is
-            # irreducible locally). least() keeps every hop monotone —
-            # a label only ever decreases toward the component min, so
-            # extra jumps can never overshoot; the fixed point is
-            # jumps-invariant (tests/test_graph_cc.py).
+            # ONE pointer jump per round: one self-join of the LABEL
+            # table (|V|-sized — broadcast here, and far smaller than
+            # the |E| neighborhood join either way). On the only
+            # registry caller (name_components_converged, sf0.1
+            # fuzzy-name blocks) convergence takes 2 rounds at 1, 2 and
+            # 3 jumps alike — one working round plus the mandatory
+            # no-change confirmation round — so more jumps there are
+            # pure added joins (OPTIMIZATION_r12.md §8). least() keeps
+            # the hop monotone: a label only ever decreases toward the
+            # component min, so it can never overshoot.
             cur = stepped.withColumnRenamed("_l", "label")
-            for _ in range(pointer_jumps):
-                inner = cur.select(
-                    F.col("node").alias("_pn"), F.col("label").alias("_pl")
-                )
-                if broadcast_labels:
-                    inner = F.broadcast(inner)
-                cur = cur.join(
-                    inner, cur["label"] == inner["_pn"], "left"
-                ).select(
+            inner = cur.select(F.col("node").alias("_pn"), F.col("label").alias("_pl"))
+            if broadcast_labels:
+                inner = F.broadcast(inner)
+            jumped = pin(
+                cur.join(inner, cur["label"] == inner["_pn"], "left").select(
                     "node",
                     F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("_pl"), F.col("label")),
+                        F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))
                     ).alias("label"),
                     "_old",
                 )
-            jumped = pin(cur)
+            )
             changed = jumped.filter(F.col("label") != F.col("_old")).count()
             unpin(labels)
             labels = jumped

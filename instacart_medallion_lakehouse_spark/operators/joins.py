@@ -5,7 +5,7 @@ Reference parity (SURVEY.md §2.3):
 - J3 left outer           — 03_gold_metrics.py:124,198,205
 - J4 left anti (orphans)  — utils/quality.py:111-115; counted in
   ``quality.orphan_counts`` as a left join to the parent's distinct keys
-- J6 broadcast for small dims — configs/pipeline_config.yml:28-29
+- J6 broadcast for small dims — the reference's configs/pipeline_config.yml:28-29
 
 Scale posture: the fact table is joined LAST against pre-projected,
 explicitly broadcast dimensions. At 100 TB the fact side never shuffles

@@ -16,6 +16,12 @@ Layer contract (reference parity, SURVEY.md §1.1/§3):
   disk-partitioned for downstream partition pruning
   (03_gold_metrics.py:96).
 
+The seven star tables are declared once, in ``STAR_TABLES``: each
+entry carries the table's key, its null-gated columns and its FK edges,
+and its position is the table's place in every layer's table order.
+Bronze and silver iterate it; gold's five marts are declared in
+``run_gold``.
+
 Every table commits as the next version of a versioned table
 (versioned.py manifest protocol), and every layer commits in one shape,
 ``_commit_layer``: STAGE, CHECK, PUBLISH. Each table is staged on its
@@ -34,8 +40,10 @@ ROADMAP item 2.)
 The error raised is the first in this order: a staging error, in table
 order; then, table by table, silver's duplicate gate and the table's
 observed gates, in that order; then silver's referential-integrity
-edges. Silver's seven duplicate-rate and four RI gates read the staged
-tables and run as ONE Spark action (``quality.run_gates``).
+edges in declaration order: nation → region, customer → nation,
+orders → customer, lineitem → orders. Silver's seven duplicate-rate
+and four RI gates read the staged tables and run as ONE Spark action
+(``quality.run_gates``).
 Re-runs give identical results and append history, reachable by time
 travel; ``versioned.vacuum`` reclaims it.
 
@@ -68,63 +76,59 @@ from .operators.cleanse import dedup_keep_first
 from .plans import marts
 from .versioned import Staged
 
-BRONZE_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-]
 
-# (table → primary key columns). lineitem is None: the synthetic data has
-# NO unique natural key there (even (l_orderkey, l_partkey, l_linenumber)
-# repeats), mirroring the reference's line-item table where multiple rows
-# per key are normal — it gets the inverted lenient duplicate gate
-# (reference 02_silver_transform.py:121 uses threshold=0.99) instead of
-# dedup.
-_SILVER_KEYS: dict[str, list[str] | None] = {
-    "region": ["r_regionkey"],
-    "nation": ["n_nationkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "orders": ["o_orderkey"],
-    "lineitem": None,
-}
+class Lenient(tuple):
+    """The key of a table with NO unique natural key: never deduped,
+    gated by the inverted ``duplicate_rate_lenient`` gate instead."""
 
-# Keyless tables still get the lenient inverted duplicate gate on their
-# densest natural key: duplication is expected, but a near-totally
-# duplicated table (rate > duplicate_rate_lenient) means an upstream
-# fan-out bug, not normal line-item multiplicity.
-_LENIENT_DUP_KEYS: dict[str, list[str]] = {
-    "lineitem": ["l_orderkey", "l_partkey", "l_linenumber"],
-}
 
-# Null-rate gates enforced at silver, observed on the write pass itself
-# (zero extra scans). PK/FK columns must never be null in healthy data;
-# threshold is GateThresholds.null_rate_default. (The reference's
-# days_since_prior-style lenient threshold applies to genuinely-nullable
-# business columns — the star schema has none, so only the default-rate
-# gate is wired here; from_yaml still validates both keys.)
-_NULL_GATE_COLS: dict[str, list[str]] = {
-    "region": ["r_regionkey"],
-    "nation": ["n_nationkey", "n_regionkey"],
-    "customer": ["c_custkey", "c_nationkey"],
-    "supplier": ["s_suppkey", "s_nationkey"],
-    "part": ["p_partkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_partkey"],
-}
+@dataclass(frozen=True)
+class StarTable:
+    """One star table's silver contract (reference
+    02_silver_transform.py:59-68,121).
 
-# FK → parent PK edges gated at silver (reference 02_silver_transform.py:59-68)
-_RI_EDGES = [
-    ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-    ("orders", "o_custkey", "customer", "c_custkey"),
-    ("customer", "c_nationkey", "nation", "n_nationkey"),
-    ("nation", "n_regionkey", "region", "r_regionkey"),
-]
+    ``key``: the primary key silver dedups on and gates at
+    ``duplicate_rate``, or a ``Lenient`` key. ``null_gated``: columns
+    gated at ``null_rate_default`` on the write pass itself (zero extra
+    scans). ``fks``: ``(fk, parent, pk)`` edges gated at
+    ``referential_integrity``.
+    """
+
+    name: str
+    key: tuple[str, ...]
+    null_gated: tuple[str, ...]
+    fks: tuple[tuple[str, str, str], ...] = ()
+
+
+# The star refresh's one declaration; its order is the table order of
+# every layer. PK/FK columns must never be null in healthy data (the
+# reference's lenient days_since_prior-style null threshold is for
+# genuinely nullable business columns, which the star schema lacks).
+# lineitem has NO unique natural key (even (l_orderkey, l_partkey,
+# l_linenumber) repeats), like the reference's line-item table: rows
+# sharing a key are normal, but a near-totally duplicated table means an
+# upstream fan-out bug (reference threshold=0.99).
+STAR_TABLES = (
+    StarTable("region", ("r_regionkey",), ("r_regionkey",)),
+    StarTable(
+        "nation", ("n_nationkey",), ("n_nationkey", "n_regionkey"),
+        (("n_regionkey", "region", "r_regionkey"),),
+    ),
+    StarTable(
+        "customer", ("c_custkey",), ("c_custkey", "c_nationkey"),
+        (("c_nationkey", "nation", "n_nationkey"),),
+    ),
+    StarTable("supplier", ("s_suppkey",), ("s_suppkey", "s_nationkey")),
+    StarTable("part", ("p_partkey",), ("p_partkey",)),
+    StarTable(
+        "orders", ("o_orderkey",), ("o_orderkey", "o_custkey"),
+        (("o_custkey", "customer", "c_custkey"),),
+    ),
+    StarTable(
+        "lineitem", Lenient(("l_orderkey", "l_partkey", "l_linenumber")),
+        ("l_orderkey", "l_partkey"), (("l_orderkey", "orders", "o_orderkey"),),
+    ),
+)
 
 BRONZE_VERSION = "bronze_v1"
 
@@ -225,7 +229,8 @@ def run_bronze(
             df, f"{out_dir}/bronze/{name}", layer=f"bronze.{name}"
         )
 
-    return _commit_layer(spark, "bronze", BRONZE_TABLES, stage, result.bronze_counts)
+    names = [t.name for t in STAR_TABLES]
+    return _commit_layer(spark, "bronze", names, stage, result.bronze_counts)
 
 
 def run_silver(
@@ -236,10 +241,11 @@ def run_silver(
     thresholds: quality.GateThresholds = quality.DEFAULT_THRESHOLDS,
 ) -> dict[str, DataFrame]:
     """Bronze → silver: deterministic dedup, drop lineage cols, gate, write."""
+    tables = {t.name: t for t in STAR_TABLES}
     cleaned: dict[str, DataFrame] = {}
-    for name, keys in _SILVER_KEYS.items():
+    for name, t in tables.items():
         df = bronze[name]
-        if keys is not None:
+        if not isinstance(t.key, Lenient):
             # Tie-break duplicate PK groups by a content hash of the
             # payload columns: _ingested_at is current_timestamp() (one
             # value per run) and the keys are constant within the window
@@ -252,7 +258,7 @@ def run_silver(
             payload = [
                 c
                 for c in df.columns
-                if c not in keys
+                if c not in t.key
                 and c not in ("_ingested_at", "_source_file", "_bronze_version")
             ]
             content_hash = F.md5(
@@ -265,7 +271,7 @@ def run_silver(
                 )
             )
             df = dedup_keep_first(
-                df, keys=keys, order_by=[F.col("_ingested_at"), content_hash]
+                df, keys=list(t.key), order_by=[F.col("_ingested_at"), content_hash]
             )
         cleaned[name] = df.drop("_ingested_at", "_source_file", "_bronze_version")
 
@@ -276,7 +282,7 @@ def run_silver(
             cleaned[name],
             f"{out_dir}/silver/{name}",
             null_rate_columns={
-                c: thresholds.null_rate_default for c in _NULL_GATE_COLS.get(name, [])
+                c: thresholds.null_rate_default for c in tables[name].null_gated
             },
             require_nonzero=False,
             layer=f"silver.{name}",
@@ -289,24 +295,26 @@ def run_silver(
         # each table's duplicate gate, then its observed gates; then the
         # RI edges — every duplicate and RI gate in one Spark action
         checks = []
-        for name, df in frames.items():
-            keys, threshold = _SILVER_KEYS[name], thresholds.duplicate_rate
-            if keys is None:  # keyless: the lenient inverted gate
-                keys = _LENIENT_DUP_KEYS[name]
-                threshold = thresholds.duplicate_rate_lenient
-            dup = quality.duplicate_rate_gate(df, keys, threshold, f"silver.{name}")
-            checks.append(dup.then(partial(enforce, name)))
+        for t in tables.values():
+            threshold = (
+                thresholds.duplicate_rate_lenient
+                if isinstance(t.key, Lenient)
+                else thresholds.duplicate_rate
+            )
+            dup = quality.duplicate_rate_gate(
+                frames[t.name], list(t.key), threshold, f"silver.{t.name}"
+            )
+            checks.append(dup.then(partial(enforce, t.name)))
         return checks + [
             quality.referential_integrity_gate(
-                frames[child], fk, frames[parent], pk, f"silver.{child}",
+                frames[t.name], fk, frames[parent], pk, f"silver.{t.name}",
                 thresholds.referential_integrity,
             )
-            for child, fk, parent, pk in _RI_EDGES
+            for t in tables.values()
+            for fk, parent, pk in t.fks
         ]
 
-    return _commit_layer(
-        spark, "silver", list(cleaned), stage, result.silver_counts, gates
-    )
+    return _commit_layer(spark, "silver", list(tables), stage, result.silver_counts, gates)
 
 
 def run_gold(

@@ -124,14 +124,6 @@ def _threshold(path: str, key: str, value: object) -> float:
 DEFAULT_THRESHOLDS = GateThresholds()
 
 
-def load_pipeline_config(path: str) -> dict:
-    """Full parsed pipeline_config.yml (paths/spark/tables sections)."""
-    import yaml
-
-    with open(path) as f:
-        return yaml.safe_load(f) or {}
-
-
 @dataclass(frozen=True)
 class Gate:
     """One gate for ``run_gates``: ``counts`` is a one-row frame of

@@ -265,12 +265,22 @@ def _shared_dir() -> str | None:
 
 def clear_shared_store() -> None:
     """Drop every persisted derived table (bench calls this between
-    passes so each pass pays the build exactly once — honest timing)."""
+    passes so each pass pays the build exactly once — honest timing),
+    and, through the active session if there is one, the catalog table
+    over each bucketed data dir it deletes."""
+    import glob
     import shutil
 
+    from . import io
+
     d = _shared_dir()
-    if d and os.path.isdir(d):
-        shutil.rmtree(d, ignore_errors=True)
+    if not (d and os.path.isdir(d)):
+        return
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        for data in glob.glob(os.path.join(glob.escape(d), "*", "_data", "v*")):
+            spark.sql(f"DROP TABLE IF EXISTS {io.bucketed_table(data)}")
+    shutil.rmtree(d, ignore_errors=True)
 
 
 # Buckets of a bucketed store asset: the tasks per join of its
@@ -335,9 +345,7 @@ def shared_table(
     otherwise keep serving the stale pre-change table across sessions.
     Bump the caller's token whenever the builder's semantics change.
     """
-    import contextlib
-
-    from . import versioned
+    from . import io, versioned
     from .pins import pin
 
     root = _shared_dir()
@@ -350,9 +358,16 @@ def shared_table(
     if not versioned.list_versions(path):
         layout = (bucket_by, _STORE_BUCKETS) if bucket_by else None
         # base 0: an asset has one version, whoever builds it; the loser
-        # of a publish race reads the winner's
-        with contextlib.suppress(versioned.CommitRace):
-            versioned._stage(builder(), path, 0, bucket_by=layout).publish()
+        # of a publish race reads the winner's, and drops the catalog
+        # table over its own staged dir
+        staged = None
+        try:
+            staged = versioned._stage(builder(), path, 0, bucket_by=layout)
+            staged.publish()
+        except versioned.CommitRace:
+            if staged is not None and layout:
+                data = os.path.join(path, staged.manifest["data"])
+                spark.sql(f"DROP TABLE IF EXISTS {io.bucketed_table(data)}")
     return versioned.read_versioned(spark, path)
 
 

@@ -5,7 +5,7 @@ same builder config applies unchanged (AQE, skew-join handling, UTC
 session timezone, Arrow transfer for the few pandas-interop points).
 
 Reference parity: the reference configures 200 shuffle partitions and a
-10 MB auto-broadcast threshold (configs/pipeline_config.yml:28-29). We
+10 MB auto-broadcast threshold (its configs/pipeline_config.yml:28-29). We
 keep the broadcast threshold and let AQE coalesce shuffle partitions
 instead of hard-coding 200 — at 100 TB a fixed 200 is wrong in both
 directions, while AQE right-sizes per stage from map output statistics.

@@ -54,6 +54,13 @@ class TestConnectedComponents:
             20: 20, 21: 20, 22: 20,
             30: 30, 31: 30,
         }
+        # a 30-edge chain beside a short path, with and without the
+        # broadcast label table
+        edges = [(i, i + 1) for i in range(30)] + [(50, 51), (51, 52)]
+        expected = {i: 0 for i in range(31)}
+        expected.update({50: 50, 51: 50, 52: 50})
+        assert _cc(spark, edges, edges_unique=True) == expected
+        assert _cc(spark, edges, edges_unique=True, broadcast_labels=True) == expected
 
     def test_duplicate_edges_without_unique_claim(self, spark):
         edges = [(1, 2), (2, 1), (1, 2), (2, 3)]
@@ -64,30 +71,6 @@ class TestConnectedComponents:
         edges = [(0, i) for i in range(1, 12)]
         out = _cc(spark, edges, edges_unique=True)
         assert set(out.values()) == {0}
-
-    def test_pointer_jumps_invariant(self, spark):
-        # r12: pointer_jumps only changes ROUND STRUCTURE (2^k-fold
-        # path compression per round), never the fixed point — every
-        # jump is monotone (least() toward the component min). Same
-        # components at 1, 2 and 3 jumps, with and without broadcast.
-        edges = [(i, i + 1) for i in range(30)] + [(50, 51), (51, 52)]
-        expected = {i: 0 for i in range(31)}
-        expected.update({50: 50, 51: 50, 52: 50})
-        for jumps in (1, 2, 3):
-            out = _cc(
-                spark, edges, edges_unique=True, pointer_jumps=jumps
-            )
-            assert out == expected, f"pointer_jumps={jumps}"
-        out = _cc(
-            spark, edges, edges_unique=True, pointer_jumps=2,
-            broadcast_labels=True,
-        )
-        assert out == expected
-        # fewer than one jump is a caller error, not a silent clamp
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        for jumps in (0, -1):
-            with pytest.raises(ValueError, match="pointer_jumps"):
-                connected_components(df, pointer_jumps=jumps)
 
     def test_cap_raises_loudly(self, spark):
         # max_rounds=0 can never converge-check a chain: loud error,

@@ -31,7 +31,7 @@ def result(spark, sf_dir, tmp_path_factory):
 class TestMedallion:
     def test_layer_counts_reconcile(self, spark, sf_dir, result):
         _, res = result
-        for name in pipeline.BRONZE_TABLES:
+        for name in (t.name for t in pipeline.STAR_TABLES):
             src = spark.read.parquet(f"{sf_dir}/{name}.parquet").count()
             assert res.bronze_counts[name] == src
             # testdata has no PK dups, so silver == bronze

@@ -19,12 +19,14 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pytest
+from pyspark.sql import functions as F
 
 from instacart_medallion_lakehouse_spark import pipeline
 from instacart_medallion_lakehouse_spark.quality import DataQualityError
 from instacart_medallion_lakehouse_spark.versioned import list_versions, read_versioned
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STAR_NAMES = [t.name for t in pipeline.STAR_TABLES]
 
 
 def _rows(df) -> list[tuple]:
@@ -42,6 +44,7 @@ def star(spark, tmp_path_factory):
     datagen = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(datagen)
     tables = datagen.star_tables(0.001, np.random.default_rng(0))
+    assert sorted(tables) == sorted(STAR_NAMES)  # every input table declared
     names = ("good", "empty", "empty_lineitem", "empty_orders_lineitem", "nulls")
     dirs = {n: str(tmp_path_factory.mktemp(n)) for n in names}
     datagen.write_tables(dirs["good"], tables)
@@ -85,21 +88,86 @@ def _silver_reconcile(spark, dirs, out):
 def _gold(spark, dirs, out):
     silver = {
         name: read_versioned(spark, f"{out}/silver/{name}")
-        for name in pipeline.BRONZE_TABLES
+        for name in STAR_NAMES
     }
     silver["lineitem"] = silver["lineitem"].limit(0)
     pipeline.run_gold(spark, silver, out, pipeline.PipelineResult())
 
 
+def _silver_from_bronze(change):
+    """Bronze from the good inputs, ``change`` applied to its frames,
+    then silver over them."""
+
+    def trip(spark, dirs, out):
+        res = pipeline.PipelineResult()
+        bronze = pipeline.run_bronze(spark, dirs["good"], out, res)
+        change(bronze)
+        pipeline.run_silver(spark, bronze, out, res)
+
+    return trip
+
+
+def _nulled(name, column):
+    """Every fifth value of ``column`` in ``name`` nulled. On a key
+    column, silver's dedup then keeps one null-key row, so the table's
+    reconcile gate and its children's RI gates trip too: its null-rate
+    gate ranks first."""
+
+    def change(bronze):
+        c = F.col(column)
+        bronze[name] = bronze[name].withColumn(
+            column, F.when(c % 5 == 0, F.lit(None)).otherwise(c)
+        )
+
+    return change
+
+
+def _orphaned(name, fk):
+    """Every ``fk`` of ``name`` moved past every parent key: only that
+    edge's RI gate can trip."""
+
+    def change(bronze):
+        bronze[name] = bronze[name].withColumn(fk, F.col(fk) + 10**12)
+
+    return change
+
+
+# generated from the declaration: each table's first null-gated column
+# (orders' o_custkey is the "silver_null_rate" case) and each FK edge
+# (lineitem's is in test_tripped_gate_publishes_no_table_of_its_layer)
+SILVER_GATE_CASES = [
+    pytest.param(
+        _silver_from_bronze(_nulled(t.name, t.null_gated[0])),
+        f"silver/{t.name}",
+        rf"^\[silver\.{t.name}\] null rate .* on '{t.null_gated[0]}'",
+        id=f"silver_null_{t.name}",
+    )
+    for t in pipeline.STAR_TABLES
+    if t.name != "orders"
+] + [
+    pytest.param(
+        _silver_from_bronze(_orphaned(t.name, fk)),
+        f"silver/{t.name}",
+        rf"^\[silver\.{t.name}\] orphan rate .* on '{fk}'",
+        id=f"silver_ri_{t.name}",
+    )
+    for t in pipeline.STAR_TABLES
+    for fk, _, _ in t.fks
+    if t.name != "lineitem"
+]
+
+
 @pytest.mark.parametrize(
     "trip, table, message",
     [
-        (_bronze, "bronze/region", "0 rows"),
-        (_silver, "silver/orders", "null rate"),
-        (_silver_reconcile, "silver/region", "row-count drift"),
-        (_gold, "gold/fct_lineitem", "0 rows"),
+        pytest.param(_bronze, "bronze/region", "0 rows", id="bronze_nonempty"),
+        pytest.param(_silver, "silver/orders", "null rate", id="silver_null_rate"),
+        pytest.param(
+            _silver_reconcile, "silver/region", "row-count drift", id="silver_reconcile"
+        ),
+        pytest.param(_gold, "gold/fct_lineitem", "0 rows", id="gold_nonempty"),
+        *SILVER_GATE_CASES,
     ],
-    ids=["bronze_nonempty", "silver_null_rate", "silver_reconcile", "gold_nonempty"],
 )
 def test_tripped_gate_keeps_previous_version(
     spark, star, tmp_path, trip, table, message
@@ -111,11 +179,13 @@ def test_tripped_gate_keeps_previous_version(
     versions = list_versions(path)
     first = _rows(read_versioned(spark, path))
     assert versions and first
+    silver = _layer_versions(out, "silver")
 
     with pytest.raises(DataQualityError, match=message):
         trip(spark, dirs, out)
     assert list_versions(path) == versions
     assert _rows(read_versioned(spark, path)) == first
+    assert _layer_versions(out, "silver") == silver  # no silver table published
 
 
 def _layer_state(spark, out, layer):
@@ -138,22 +208,7 @@ def _bronze_last_table(spark, dirs, out):
     pipeline.run_medallion(spark, dirs["empty_lineitem"], out)
 
 
-def _silver_from_bronze(change):
-    """Bronze from the good inputs, ``change`` applied to its frames,
-    then silver over them."""
-
-    def trip(spark, dirs, out):
-        res = pipeline.PipelineResult()
-        bronze = pipeline.run_bronze(spark, dirs["good"], out, res)
-        change(bronze)
-        pipeline.run_silver(spark, bronze, out, res)
-
-    return trip
-
-
 def _orphan_order_keys(bronze):
-    from pyspark.sql import functions as F
-
     key = F.col("l_orderkey")
     # a shift far past every order key keeps (l_orderkey, l_linenumber)
     # unique and the row count unchanged: only the RI gate can trip
@@ -171,7 +226,7 @@ def _doubled_lineitem(bronze):
 def _gold_later_mart(spark, dirs, out):
     silver = {
         name: read_versioned(spark, f"{out}/silver/{name}")
-        for name in pipeline.BRONZE_TABLES
+        for name in STAR_NAMES
     }
     silver["region"] = silver["region"].limit(0)
     pipeline.run_gold(spark, silver, out, pipeline.PipelineResult())
@@ -248,7 +303,7 @@ def test_layer_threads_run_their_jobs_in_the_callers_job_group(
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
-    assert len(tracker.getJobIdsForGroup("bronze_refresh")) >= len(pipeline.BRONZE_TABLES)
+    assert len(tracker.getJobIdsForGroup("bronze_refresh")) >= len(STAR_NAMES)
 
 
 class _FakeStaged:
@@ -324,3 +379,27 @@ def test_commit_layer_is_all_or_nothing_and_raises_in_table_order(spark):
     assert str(failed["error"]) == "t03"
     assert isinstance(breached["error"], DataQualityError)
     assert published == []
+
+
+def test_refresh_reaches_each_layer_through_its_module_function(
+    spark, star, tmp_path, monkeypatch
+):
+    """The benchmark times each layer by patching ``pipeline.run_bronze``,
+    ``run_silver`` and ``run_gold``: a refresh must reach each layer
+    through that module attribute, exactly once."""
+    dirs, _ = star
+    calls: list[str] = []
+
+    def counted(layer):
+        run = getattr(pipeline, f"run_{layer}")
+
+        def wrapper(*args, **kwargs):
+            calls.append(layer)
+            return run(*args, **kwargs)
+
+        return wrapper
+
+    for layer in LAYERS:
+        monkeypatch.setattr(pipeline, f"run_{layer}", counted(layer))
+    pipeline.run_medallion(spark, dirs["good"], str(tmp_path / "out"))
+    assert calls == list(LAYERS)

@@ -64,7 +64,7 @@ class TestGateConditionalCommit:
         res = pipeline.PipelineResult()
         silver = {
             name: spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            for name in pipeline.BRONZE_TABLES
+            for name in (t.name for t in pipeline.STAR_TABLES)
         }
         silver["lineitem"] = silver["lineitem"].limit(0)
         with pytest.raises(DataQualityError):
@@ -114,7 +114,7 @@ class TestSilverGates:
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         rate = check_duplicate_rate(
             li,
-            pipeline._LENIENT_DUP_KEYS["lineitem"],
+            next(list(t.key) for t in pipeline.STAR_TABLES if t.name == "lineitem"),
             DEFAULT_THRESHOLDS.duplicate_rate_lenient,
             "test",
         )
@@ -392,11 +392,11 @@ class TestRound7ReviewFixes:
 
         from instacart_medallion_lakehouse_spark import quality
 
-        monkeypatch.setattr(pipeline, "_SILVER_KEYS", {"region": ["r_regionkey"]})
         monkeypatch.setattr(
-            pipeline, "_NULL_GATE_COLS", {"region": ["r_regionkey"]}
+            pipeline,
+            "STAR_TABLES",
+            (pipeline.StarTable("region", ("r_regionkey",), ("r_regionkey",)),),
         )
-        monkeypatch.setattr(pipeline, "_RI_EDGES", [])
         bronze = {
             "region": spark.createDataFrame(
                 [(1, "A"), (2, "B"), (None, "C")],

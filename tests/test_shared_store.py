@@ -113,6 +113,35 @@ def test_bucketed_asset_survives_catalog_loss(spark, corpus, tmp_path, monkeypat
             spark.sql(f"DROP TABLE {t}")
 
 
+def test_clearing_the_store_drops_its_bucketed_tables(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """Each clear drops the catalog table over every bucketed data dir
+    it deletes: after three cycles of clear + request, one table is
+    left, the live one."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setenv("SPARK_GRAFT_SHARED_DIR", str(tmp_path / "store"))
+    before = _catalog(spark)
+
+    def builder():
+        docs = spark.read.parquet(os.path.join(corpus, "documents.parquet"))
+        return docs.select("doc_id", (F.col("doc_id") % 5).alias("k"))
+
+    try:
+        for _ in range(3):
+            q.clear_shared_store()
+            got = q.shared_table(
+                spark, corpus, "t_clear", builder, token="t1", bucket_by=["k"]
+            )
+        created = _catalog(spark) - before
+        assert len(created) == 1 and created.pop().startswith("bucketed_")
+        assert got.count() == 200
+    finally:
+        q.clear_shared_store()
+        assert _catalog(spark) == before
+
+
 @pytest.mark.parametrize("bucket_by", [None, ["k"]])
 def test_concurrent_requests_commit_one_version(
     spark, corpus, tmp_path, monkeypatch, bucket_by
@@ -147,6 +176,8 @@ def test_concurrent_requests_commit_one_version(
         assert len(roots) == 1
         assert versioned.list_versions(str(roots[0])) == [1]
         assert len(a) == 200 and a == b
+        # the loser dropped the table over its own staged dir
+        assert len(_catalog(spark) - before) == (1 if bucket_by else 0)
     finally:
         for t in _catalog(spark) - before:
             spark.sql(f"DROP TABLE {t}")
